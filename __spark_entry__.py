@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 Each entry in ``queries()`` exercises one operator from SURVEY.md §2 (or a
-training-data-pipeline operator) over KGX-shaped fixtures derived
+web-page KG-construction stage) over KGX-shaped fixtures derived
 deterministically from the driver's parquet tables (kgx_spark/fixtures.py
 documents the shared derivation contract); ``oracle_sql()`` reproduces the
 expected result in closed form (or replicates the same algorithm) in DuckDB
@@ -15,8 +15,6 @@ import os
 import tempfile
 from collections.abc import Callable
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,13 +23,6 @@ from kgx_spark.functions.curie import contract, expand
 from kgx_spark.functions.infores import infores_curie
 from kgx_spark.functions.keys import deterministic_edge_id, edge_key
 from kgx_spark.operators.clique import clique_merge
-from kgx_spark.operators.dedup import (
-    exact_duplicates,
-    jaccard_pairs,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    simhash,
-)
 from kgx_spark.operators.filters import apply_edge_filters, apply_node_filters
 from kgx_spark.operators.graph_ops import (
     fold_predicate,
@@ -43,19 +34,11 @@ from kgx_spark.operators.graph_ops import (
 from kgx_spark.operators.merge import merge_edges, merge_nodes
 from kgx_spark.operators.meta_kg import meta_edge_stats, meta_node_stats
 from kgx_spark.operators.sanitize import split_list_column
-from kgx_spark.operators.similarity import quantized_topk
 from kgx_spark.operators.summary import (
     count_by_category,
     count_by_id_prefix,
     count_by_predicate,
     count_by_spo_category,
-)
-from kgx_spark.operators.textstats import (
-    detect_language,
-    fingerprint,
-    quality_features,
-    regex_token_count,
-    token_count,
 )
 from kgx_spark.operators.validate import validate_nodes
 from kgx_spark.operators.validator import error_report, validate_node_records
@@ -412,84 +395,6 @@ def q_meta_edge_source_counts(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """The SCALE ANN path, hash-verified: hyperplane-LSH candidates (exact
-    integer sign bits) + bucket-size cap + quantized exact cosine ranking.
-    Deterministic end to end, so the DuckDB oracle replays buckets, the cap,
-    AND scores bit-for-bit."""
-    from kgx_spark.operators.similarity import lsh_topk
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") % 50 == 0)
-    return lsh_topk(
-        queries_df, emb, dim=64, k=5, planes=8, tables=8,
-        quantize_scores=True, max_bucket_size=200,
-    )
-
-
-def _lsh_oracle_sql(
-    planes: int = 8, tables: int = 8, dim: int = 64, k: int = 5, max_bucket_size: int = 200
-) -> str:
-    """Replays lsh_buckets_all + the corpus-side bucket cap + quantized
-    cosine ranking in SQL: the hyperplane snapshot is re-materialized as a
-    VALUES table from the SAME deterministic md5-parity generator the Spark
-    side uses."""
-    from kgx_spark.operators.similarity import _hyperplane
-
-    rows = []
-    for t in range(tables):
-        for p in range(planes):
-            hp = _hyperplane(t * planes + p, dim)
-            rows.extend(f"({t},{p},{d + 1},{int(v)})" for d, v in enumerate(hp))
-    values = ",".join(rows)
-    return f"""
-        WITH h(tbl, plane, d, hv) AS (VALUES {values}),
-        qz AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS v
-            FROM embeddings
-        ),
-        comps AS (
-            SELECT vec_id, i AS d, v[i] AS c
-            FROM qz, LATERAL unnest(generate_series(1, len(v))) AS t(i)
-        ),
-        signs AS (
-            SELECT c.vec_id, h.tbl, h.plane,
-                   CASE WHEN sum(c.c * h.hv) >= 0 THEN 1 ELSE 0 END AS bit
-            FROM comps c JOIN h ON h.d = c.d
-            GROUP BY 1, 2, 3
-        ),
-        buckets AS (
-            SELECT vec_id, tbl, sum(bit * (1::BIGINT << plane))::BIGINT AS bucket
-            FROM signs GROUP BY 1, 2
-        ),
-        kept AS (
-            SELECT * FROM buckets
-            QUALIFY count(*) OVER (PARTITION BY tbl, bucket) <= {max_bucket_size}
-        ),
-        cand AS (
-            SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-            FROM buckets q JOIN kept c ON q.tbl = c.tbl AND q.bucket = c.bucket
-            WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id
-        ),
-        scored AS (
-            SELECT cand.query_id, cand.neighbor_id,
-                   CAST(round(list_dot_product(a.v, b.v)
-                        / sqrt(CAST(list_dot_product(a.v, a.v) AS DOUBLE)
-                               * CAST(list_dot_product(b.v, b.v) AS DOUBLE)) * 1000000) AS BIGINT) AS cos_1e6
-            FROM cand
-            JOIN qz a ON a.vec_id = cand.query_id
-            JOIN qz b ON b.vec_id = cand.neighbor_id
-        )
-        SELECT query_id, neighbor_id, cos_1e6, rank FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cos_1e6 DESC, neighbor_id ASC
-            )::INT AS rank
-            FROM scored
-        ) WHERE rank <= {k}
-    """
-
-
 def q_graph_ancestors(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-hop ancestor closure (graph_utils.py:57-126 BFS) over a
     deterministic binary-tree hierarchy: P:k subclass_of P:(k div 2)."""
@@ -504,143 +409,6 @@ def q_graph_ancestors(spark: SparkSession, sf: str) -> DataFrame:
     )
     node_ids = part.select(F.concat(F.lit("P:"), k).alias("id"))
     return get_ancestors(edges, node_ids, max_hops=25)
-
-
-# ----- training-data / document operators -----
-
-
-def _docs(spark: SparkSession, sf: str) -> DataFrame:
-    return spark.read.parquet(f"{sf}/documents.parquet")
-
-
-def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
-    return exact_duplicates(_docs(spark, sf))
-
-
-def q_minhash(spark: SparkSession, sf: str) -> DataFrame:
-    return minhash_signatures(_docs(spark, sf), num_hashes=4)
-
-
-def q_lsh_candidates(spark: SparkSession, sf: str) -> DataFrame:
-    # max_bucket_size=100 BINDS on this corpus (template-heavy buckets of
-    # ~400 docs at sf0.01) — the oracle replays the cap via QUALIFY, so the
-    # at-scale default behavior (degenerate-bucket drop) is itself
-    # correctness-gated, not just the exact banding.
-    return lsh_candidate_pairs(
-        _docs(spark, sf), num_hashes=4, bands=2, max_bucket_size=100
-    )
-
-
-def q_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    return jaccard_pairs(_docs(spark, sf), threshold=0.8)
-
-
-def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    return simhash(_docs(spark, sf), bits=16)
-
-
-def q_curate_corpus(spark: SparkSession, sf: str) -> DataFrame:
-    """The full training-data curation composition: quality gate → exact
-    dedup → LSH near-dup candidates → Jaccard verify → CC clustering → one
-    representative per cluster."""
-    from kgx_spark.operators.curate import curate_corpus
-
-    return curate_corpus(
-        _docs(spark, sf), min_tokens=5, jaccard_threshold=0.9, num_hashes=8, bands=4
-    )
-
-
-def q_simhash_near_dups(spark: SparkSession, sf: str) -> DataFrame:
-    from kgx_spark.operators.dedup import simhash_near_dups
-
-    return simhash_near_dups(_docs(spark, sf), bits=16, bands=4, max_hamming=1)
-
-
-def q_topk_cosine(spark: SparkSession, sf: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-    return quantized_topk(queries, emb, k=5)
-
-
-def q_embedding_near_dup(spark: SparkSession, sf: str) -> DataFrame:
-    from kgx_spark.operators.similarity import embedding_near_dups
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
-    planted = emb.where(F.col("vec_id") % 25 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding")
-    )
-    return embedding_near_dups(emb.unionByName(planted), threshold_1e6=990_000, exact=True)
-
-
-def q_events_window(spark: SparkSession, sf: str) -> DataFrame:
-    from kgx_spark.operators.events import windowed_counts
-
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    out = windowed_counts(ev, "1 hour")
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type", "n_events", "sum_value_1e2",
-    )
-
-
-def q_events_sliding(spark: SparkSession, sf: str) -> DataFrame:
-    from kgx_spark.operators.events import windowed_counts
-
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    out = windowed_counts(ev, "1 hour", slide_duration="15 minutes")
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type", "n_events", "sum_value_1e2",
-    )
-
-
-def q_sessionize(spark: SparkSession, sf: str) -> DataFrame:
-    from kgx_spark.operators.events import sessionize
-
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    out = sessionize(ev, gap_minutes=30)
-    return out.select(
-        "user_id", "session_seq",
-        F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-        "n_events",
-    )
-
-
-def q_asof_join(spark: SparkSession, sf: str) -> DataFrame:
-    from kgx_spark.operators.asof import asof_join
-
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    purchases = ev.where(F.col("event_type") == "purchase").select("user_id", "ts", "event_id")
-    clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts", "event_id")
-    out = asof_join(purchases, clicks, key="user_id", ts="ts", value_cols=["event_id"])
-    return out.select(
-        "event_id", "user_id",
-        F.date_format(F.col("ts").cast("timestamp"), "yyyy-MM-dd HH:mm:ss").alias("ts"),
-        F.col("event_id_right").alias("last_click_event_id"),
-    )
-
-
-def q_langid(spark: SparkSession, sf: str) -> DataFrame:
-    return _docs(spark, sf).select("doc_id", detect_language(F.col("text")).alias("lang_pred"))
-
-
-def q_quality(spark: SparkSession, sf: str) -> DataFrame:
-    return quality_features(_docs(spark, sf)).select(
-        "doc_id", "n_tokens", "n_chars_computed", "n_punct",
-        "stopword_ratio_1000", "mean_word_len_1000",
-    )
-
-
-def q_token_counts(spark: SparkSession, sf: str) -> DataFrame:
-    return _docs(spark, sf).select(
-        "doc_id",
-        token_count(F.col("text")).cast("bigint").alias("n_ws_tokens"),
-        regex_token_count(F.col("text")).cast("bigint").alias("n_regex_tokens"),
-    )
-
-
-def q_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
-    return _docs(spark, sf).select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
 # ----- web-text pipeline stages -----
@@ -692,8 +460,7 @@ def q_entity_link(spark: SparkSession, sf: str) -> DataFrame:
     return linked.select("url", "mention", "curie").distinct()
 
 
-# ----- round-3: oracle-gating the remaining pytest-only operators + the
-# ----- bucketed/IVF similarity scale paths + ingest sniffing + TRAPI -----
+# ----- remaining pytest-only operators, ingest sniffing, TRAPI -----
 
 
 def q_remap_node_property(spark: SparkSession, sf: str) -> DataFrame:
@@ -822,143 +589,6 @@ def q_get_parents(spark: SparkSession, sf: str) -> DataFrame:
     return get_parents(edges, node_ids)
 
 
-def q_embedding_near_dup_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """The SCALE near-dup path (bucketed, capped — round-2 judge #1):
-    single-table hyperplane LSH candidates with a bucket-size cap, verified
-    with the quantized exact cosine. Fully integer-deterministic, so the
-    oracle replays buckets, cap, and scores."""
-    from kgx_spark.operators.similarity import embedding_near_dups
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
-    planted = emb.where(F.col("vec_id") % 25 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), F.col("embedding")
-    )
-    return embedding_near_dups(
-        emb.unionByName(planted), threshold_1e6=990_000,
-        dim=64, planes=5, max_bucket_size=60, exact=False,
-    )
-
-
-def _near_dup_lsh_oracle_sql(
-    planes: int = 5, dim: int = 64, max_bucket_size: int = 60, threshold: int = 990_000
-) -> str:
-    """Replays the single-table bucketed near-dup path: same md5-parity
-    hyperplanes, same half-away-from-zero ×1000 quantization, same cap."""
-    from kgx_spark.operators.similarity import _hyperplane
-
-    rows = []
-    for p in range(planes):
-        hp = _hyperplane(p, dim)
-        rows.extend(f"({p},{d + 1},{int(v)})" for d, v in enumerate(hp))
-    values = ",".join(rows)
-    return f"""
-        WITH h(plane, d, hv) AS (VALUES {values}),
-        corpus AS (
-            SELECT vec_id, embedding FROM embeddings
-            UNION ALL
-            SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id % 25 = 0
-        ),
-        qz AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS v
-            FROM corpus
-        ),
-        comps AS (
-            SELECT vec_id, i AS d, v[i] AS c
-            FROM qz, LATERAL unnest(generate_series(1, len(v))) AS t(i)
-        ),
-        signs AS (
-            SELECT c.vec_id, h.plane,
-                   CASE WHEN sum(c.c * h.hv) >= 0 THEN 1 ELSE 0 END AS bit
-            FROM comps c JOIN h ON h.d = c.d GROUP BY 1, 2
-        ),
-        buckets AS (
-            SELECT vec_id, sum(bit * (1::BIGINT << plane))::BIGINT AS bucket
-            FROM signs GROUP BY 1
-        ),
-        kept AS (
-            SELECT * FROM buckets
-            QUALIFY count(*) OVER (PARTITION BY bucket) <= {max_bucket_size}
-        ),
-        pairs AS (
-            SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-            FROM kept a JOIN kept b USING (bucket)
-            WHERE a.vec_id < b.vec_id
-        ),
-        scored AS (
-            SELECT id_a, id_b,
-                   CAST(round(list_dot_product(x.v, y.v)
-                        / sqrt(CAST(list_dot_product(x.v, x.v) AS DOUBLE)
-                               * CAST(list_dot_product(y.v, y.v) AS DOUBLE)) * 1000000) AS BIGINT) AS cos_1e6
-            FROM pairs
-            JOIN qz x ON x.vec_id = id_a
-            JOIN qz y ON y.vec_id = id_b
-        )
-        SELECT DISTINCT id_a, id_b, cos_1e6 FROM scored WHERE cos_1e6 >= {threshold}
-    """
-
-
-def q_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF ANN, now oracle-gated (round-2 VERDICT said float argmax wasn't
-    bit-portable — cell assignment is integer-quantized with half-away
-    rounding and positional tie-break, so it is now)."""
-    from kgx_spark.operators.similarity import ivf_topk
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    queries_df = emb.where(F.col("vec_id") % 50 == 0)
-    return ivf_topk(queries_df, emb, k=5, n_cells=8)
-
-
-def _ivf_oracle_sql(n_cells: int = 8, k: int = 5) -> str:
-    """Replays deterministic IVF: anchors = n_cells lowest-id vectors; cell
-    assignment by quantized cosine argmax (ties → lowest anchor position);
-    within-cell quantized exact cosine top-k."""
-    return f"""
-        WITH qz AS (
-            SELECT vec_id,
-                   list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)*1000) AS BIGINT)) AS v
-            FROM embeddings
-        ),
-        anchors AS (
-            SELECT v, row_number() OVER (ORDER BY vec_id) - 1 AS pos
-            FROM qz QUALIFY row_number() OVER (ORDER BY vec_id) <= {n_cells}
-        ),
-        assign AS (
-            SELECT vec_id, pos AS cell FROM (
-                SELECT q.vec_id, a.pos,
-                       row_number() OVER (
-                           PARTITION BY q.vec_id
-                           ORDER BY CAST(round(list_dot_product(q.v, a.v)
-                               / (GREATEST(sqrt(CAST(list_dot_product(q.v, q.v) AS DOUBLE)), 1.0)
-                                  * GREATEST(sqrt(CAST(list_dot_product(a.v, a.v) AS DOUBLE)), 1.0))
-                               * 1000000) AS BIGINT) DESC, a.pos ASC
-                       ) AS rn
-                FROM qz q CROSS JOIN anchors a
-            ) WHERE rn = 1
-        ),
-        cand AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id
-            FROM assign q JOIN assign c ON q.cell = c.cell
-            WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id
-        ),
-        scored AS (
-            SELECT query_id, neighbor_id,
-                   CAST(round(list_dot_product(a.v, b.v)
-                        / sqrt(CAST(list_dot_product(a.v, a.v) AS DOUBLE)
-                               * CAST(list_dot_product(b.v, b.v) AS DOUBLE)) * 1000000) AS BIGINT) AS cos_1e6
-            FROM cand
-            JOIN qz a ON a.vec_id = cand.query_id
-            JOIN qz b ON b.vec_id = cand.neighbor_id
-        )
-        SELECT query_id, neighbor_id, cos_1e6, rank FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id ORDER BY cos_1e6 DESC, neighbor_id ASC
-            )::INT AS rank
-            FROM scored
-        ) WHERE rank <= {k}
-    """
-
-
 def q_delimiter_sniff(spark: SparkSession, sf: str) -> DataFrame:
     """Dynamic delimiter sniffing round-trip (kgx_utils.py:884-899 — round-2
     judge missing #1): a TSV with an undeclared pipe-bearing column (taxon),
@@ -1028,111 +658,6 @@ def q_trapi_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _multiline_docs(spark: SparkSession, sf: str) -> DataFrame:
-    """The documents fixture has no newlines, so line-level operators build
-    a deterministic multi-line corpus from it: NAV header + the doc's
-    tokens grouped 8-per-line + the FIRST content line repeated (planted
-    intra-doc duplicate) + FOOTER. Replayed verbatim in the oracles."""
-    docs = _docs(spark, sf)
-    toks = F.filter(F.split(F.trim("text"), r"\s+"), lambda t: t != "")
-    n = F.size(toks)
-    lines_arr = F.when(
-        n > 0,
-        F.transform(
-            F.sequence(F.lit(0), F.floor((n - 1) / 8).cast("int")),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * 8 + 1, 8)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    text2 = F.array_join(
-        F.concat(
-            F.array(F.lit("NAV home about contact")),
-            lines_arr,
-            F.slice(lines_arr, 1, 1),
-            F.array(F.lit("FOOTER copyright 2024")),
-        ),
-        "\n",
-    )
-    return docs.select("doc_id", text2.alias("text"))
-
-
-def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic greedy-by-offset sequence packing per language stratum
-    (operators/sampling.assign_pack_ids): reproducible pack assignment at
-    any parallelism — the window cumsum is replayed exactly in SQL."""
-    from kgx_spark.operators.sampling import assign_pack_ids
-
-    docs = _docs(spark, sf).select("doc_id", "lang", "text")
-    return assign_pack_ids(
-        docs, budget_tokens=500, stratum_col="lang"
-    ).select("doc_id", "lang", "n_tokens", "pack_id", "offset_tokens")
-
-
-def q_pack_sequences_tokenized(spark: SparkSession, sf: str) -> DataFrame:
-    """Sequence packing with a PLUGGED-IN token counter: budgets follow the
-    precomputed BPE-ish regex token count (textstats.regex_token_count)
-    instead of the default whitespace count — the oracle replays the same
-    regex so the per-pack offsets must agree token-for-token."""
-    from kgx_spark.operators.sampling import assign_pack_ids
-    from kgx_spark.operators.textstats import regex_token_count
-
-    docs = _docs(spark, sf).select("doc_id", "lang", "text")
-    docs = docs.withColumn("bpe_tokens", regex_token_count(F.col("text")).cast("bigint"))
-    return assign_pack_ids(
-        docs, budget_tokens=700, stratum_col="lang", token_count_col="bpe_tokens"
-    ).select("doc_id", "lang", "n_tokens", "pack_id", "offset_tokens")
-
-
-def q_materialize_packs(spark: SparkSession, sf: str) -> DataFrame:
-    """Pack materialization: one training-sequence row per (lang, pack) —
-    documents concatenated in pack order, doc/token counts carried."""
-    from kgx_spark.operators.sampling import assign_pack_ids, materialize_packs
-
-    docs = _docs(spark, sf).select("doc_id", "lang", "text")
-    packed = assign_pack_ids(docs, budget_tokens=500, stratum_col="lang")
-    return materialize_packs(packed, stratum_col="lang")
-
-
-def q_ngram_overlap(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-document n-gram overlap (exact-substring dedup family): the
-    fixture corpus plants byte-identical duplicate docs, which must show
-    shared_frac_1000 = 1000; organically-distinct docs score low."""
-    from kgx_spark.operators.dedup import cross_doc_ngram_overlap
-
-    return cross_doc_ngram_overlap(_docs(spark, sf), ngram=4, min_docs=2)
-
-
-def q_remove_shared_spans(spark: SparkSession, sf: str) -> DataFrame:
-    """Span-level exact-substring REMOVAL (Lee et al. pipeline,
-    operators/dedup.remove_shared_spans): documents past the overlap gate
-    lose their verbatim cross-document spans (runs of ≥2 consecutive
-    shared shingle starts) and keep the unique remainder — the fixture's
-    byte-identical duplicates clean to empty text, organic docs pass
-    through untouched. The oracle replays the full shingle-run
-    reconstruction (positional grams → run grouping → coverage anti-join
-    → ordered reassembly) in SQL."""
-    from kgx_spark.operators.dedup import remove_shared_spans
-
-    docs = _docs(spark, sf).select("doc_id", "text")
-    return remove_shared_spans(
-        docs, ngram=4, min_docs=2, min_frac=0.5, min_run_grams=2
-    )
-
-
-def q_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic per-stratum hash sampling (operators/sampling.py) — the
-    data-mixing primitive: language-dependent keep rates, decided by an
-    engine-portable md5 bucket of doc_id, so the SAME documents are kept at
-    any partitioning/cluster size (df.sample() is not reproducible across
-    layouts; this is)."""
-    from kgx_spark.operators.sampling import stratified_hash_sample
-
-    docs = _docs(spark, sf).select("doc_id", "lang")
-    return stratified_hash_sample(
-        docs, "doc_id", "lang",
-        {"en": 800, "de": 250, "fr": 500}, default_permille=100, salt="mix1",
-    )
-
-
 def q_url_normalize(spark: SparkSession, sf: str) -> DataFrame:
     """URL canonicalization (functions/urls.py): messy crawl URLs built
     from part rows — uppercase scheme/host, default ports, tracking params,
@@ -1159,25 +684,6 @@ def q_url_normalize(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("url"),
     )
     return raw.select("p_partkey", "url", normalize_url(F.col("url")).alias("canonical"))
-
-
-def q_repetition_signals(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher-style repetition quality gates (duplicate-line fraction,
-    duplicate-line char fraction, top-2-gram char fraction) over the
-    constructed multi-line corpus — every doc carries one planted
-    duplicate line."""
-    from kgx_spark.operators.textstats import repetition_signals
-
-    return repetition_signals(_multiline_docs(spark, sf))
-
-
-def q_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
-    """CCNet/RefinedWeb-style cross-corpus boilerplate-line removal: the
-    NAV/FOOTER lines occur in every document (≥300 distinct docs) and must
-    vanish from all of them; content lines stay in original order."""
-    from kgx_spark.operators.textstats import remove_boilerplate_lines
-
-    return remove_boilerplate_lines(_multiline_docs(spark, sf), min_docs=300)
 
 
 def q_trapi_jsonl_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -1265,78 +771,6 @@ def q_trapi_jsonl_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         F.array_join("aggregator_knowledge_source", "|").alias("aggregators"),
         F.col("qualifiers").getItem("object_direction_qualifier").alias("direction_qualifier"),
     )
-
-
-def q_media_features(spark: SparkSession, sf: str) -> DataFrame:
-    """REAL multimodal decode, oracle-gated: solid-color PNGs are built
-    deterministically from part rows (functions/codecs.encode_png), decoded
-    by the real PNG decoder inside decode_features (mapInPandas), and the
-    pixel-derived features have closed forms a SQL oracle can compute
-    (solid color v ⇒ luminance mean = v/255, std = 0, one hot histogram
-    bin). Colors are multiples of 51 so v/255 lands far from every 1e-6
-    rounding boundary regardless of float32 accumulation error."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from kgx_spark.operators.multimodal import decode_features
-
-    @pandas_udf("binary")
-    def _mk_png(v: pd.Series, w: pd.Series, h: pd.Series) -> pd.Series:
-        from kgx_spark.functions.codecs import encode_png
-
-        return pd.Series(
-            [
-                encode_png(np.full((int(hh), int(ww), 3), int(vv), dtype=np.uint8))
-                for vv, ww, hh in zip(v, w, h)
-            ]
-        )
-
-    part = spark.read.parquet(f"{sf}/part.parquet")
-    k = F.col("p_partkey")
-    media = part.select(
-        F.concat(F.lit("P:"), k).alias("media_id"),
-        F.lit("image").alias("kind"),
-        _mk_png((k % 6 * 51).cast("int"), (k % 5 + 4).cast("int"), (k % 7 + 4).cast("int")).alias("content"),
-    )
-    out = decode_features(media)
-    return out.select(
-        "media_id",
-        F.array_join(
-            F.transform("feature", lambda x: F.round(x.cast("double") * 1e6, 0).cast("bigint")),
-            "|",
-        ).alias("feat_1e6"),
-    )
-
-
-_MEDIA_FEATURES_SQL = """
-    WITH t AS (
-        SELECT p_partkey AS k, (p_partkey % 6) * 51 AS v,
-               p_partkey % 5 + 4 AS w, p_partkey % 7 + 4 AS h
-        FROM part
-    ),
-    c AS (
-        SELECT 'P:' || k AS media_id,
-               CAST(round(v / 255.0 * 1000000) AS BIGINT) AS m,
-               CAST(round(LEAST(1.0, w / (h * 4.0)) * 1000000) AS BIGINT) AS a,
-               CASE v WHEN 0 THEN 0 WHEN 51 THEN 1 WHEN 102 THEN 3
-                      WHEN 153 THEN 4 WHEN 204 THEN 6 ELSE 7 END AS b
-        FROM t
-    )
-    SELECT media_id,
-           array_to_string([
-               m, 0, a, m, m, m,
-               CASE WHEN b = 0 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 1 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 2 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 3 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 4 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 5 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 6 THEN 1000000 ELSE 0 END,
-               CASE WHEN b = 7 THEN 1000000 ELSE 0 END,
-               0, 0
-           ], '|') AS feat_1e6
-    FROM c
-"""
 
 
 def q_sssom_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -1696,47 +1130,6 @@ def _election_oracle_sql() -> str:
     """
 
 
-def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
-    """Benchmark decontamination (operators/dedup.eval_ngram_hits): per-doc
-    count of word 3-grams colliding with a deterministic 'benchmark set'
-    (every 97th doc — stands in for a held-out eval suite). The eval-gram
-    set is broadcast; corpus shingles are probed map-side (GPT-3-style
-    13-gram collision test, shrunk to 3-grams for the word-salad fixture).
-    """
-    from kgx_spark.operators.dedup import eval_ngram_hits
-
-    docs = _docs(spark, sf)
-    eval_df = docs.where(F.col("doc_id") % 97 == 0).select("text")
-    out = eval_ngram_hits(docs, eval_df, ngram=3)
-    return out.select(
-        "doc_id", "n_grams", "n_hit_grams",
-        F.col("contaminated").cast("int").alias("contaminated"),
-    )
-
-
-def q_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
-    """PII redaction (operators/redact.pii_scrub): email/SSN/IPv4/phone
-    patterns counted + replaced with typed tokens, sequentially (each
-    pattern sees the previous patterns' redactions). The fixture corpus
-    carries no PII, so deterministic PII-bearing suffixes are synthesized
-    from doc_id — identically in Spark and the oracle — making every
-    pattern fire on every row."""
-    from kgx_spark.operators.redact import pii_scrub
-
-    docs = _docs(spark, sf).select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"), F.col("doc_id").cast("string"),
-            F.lit("@example.com or +1 (415) 555-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            F.lit(" host 10.0."), (F.col("doc_id") % 256).cast("string"), F.lit(".7"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit(" ssn 219-09-9999")).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return pii_scrub(docs)
-
-
 # ---------------------------------------------------------------- contract
 
 
@@ -1749,40 +1142,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness gate records (at most) the
-    # FIRST 50 entries; the registry holds 85, all oracle-gated via
-    # tools/oracle_check.py regardless of position. The dict is built from
-    # ONE definition map plus an ordered window list (round-6 VERDICT #2:
-    # the old literal carried duplicate keys for window placement, which
-    # Python resolves by silent shadowing — a rotation edit diverging the
-    # two bindings would never be caught). Uniqueness and coverage are
-    # asserted below.
-    #
-    # WINDOW-ROTATION POLICY (adopted round 6, per round-5 VERDICT #3):
-    #   1. The two north-rule flagships (pipeline_triples, entity_link) are
-    #      PINNED in-window every round.
-    #   2. Any query whose query/oracle semantics changed this round must be
-    #      in-window (fresh driver row for the changed surface).
-    #   3. Each round, 5-9 in-window rows with >=2 consecutive driver-green
-    #      rounds rotate below the cut, replaced by (a) entries that have
-    #      NEVER had a driver row, then (b) the stalest below-cut entries
-    #      (oldest last-green round). Rotated-out §2 rows keep an in-window
-    #      family neighbor where possible.
-    #   Net effect: every query re-acquires a driver-green row every ~4
-    #   rounds; no surface's hard-signal history goes stale indefinitely.
-    #
-    # Round-7 rotation (7 swaps): IN — the last 7 never-driver-rowed
-    # entries (ngram_overlap, line_dedup, repetition_signals,
-    # stratified_sample, decontaminate, pii_scrub, provenance_coercion; all
-    # local-oracle green, r6 judge's full 85/85 run). OUT — 7 rows green in
-    # BOTH r05 and r06 with in-window family neighbors: json_roundtrip +
-    # sssom_roundtrip + jelly_roundtrip (tsv/obograph/rdf_nt/trapi×2/duckdb
-    # stay), meta_kg_edge_source_counts + validator_type_battery +
-    # duplicate_nodes (meta_kg_nodes/edges, validator_report/edge_report,
-    # dangling_edges stay), provenance_default (provenance_coercion —
-    # rotating IN — is its family neighbor). The round-6 rotation cohort
-    # (remove_shared_spans … embedding_near_dup_lsh) stays in-window: one
-    # green round is below the 2-round rotation bar.
+    # The driver's correctness gate records only the first 50 entries;
+    # ``window`` names them, the rest follow in definition order.
     defs: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         # §2.6 merge + §2.3 validate/filter
         "merge_nodes": q_merge_nodes,
@@ -1842,40 +1203,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "transform_ops": q_transform_ops,
         "pipeline_triples": q_pipeline_triples,
         "entity_link": q_entity_link,
-        # LLM-data-pipeline operators
+        # web-page pipeline stages
         "extract_text": q_extract_text,
-        "dedup_exact": q_dedup_exact,
-        "minhash_signatures": q_minhash,
-        "lsh_candidates": q_lsh_candidates,
-        "ngram_jaccard": q_jaccard_pairs,
-        "ngram_overlap": q_ngram_overlap,
-        "remove_shared_spans": q_remove_shared_spans,
-        "simhash": q_simhash,
-        "simhash_near_dup": q_simhash_near_dups,
-        "curate_corpus": q_curate_corpus,
-        "line_dedup": q_line_dedup,
-        "repetition_signals": q_repetition_signals,
         "url_normalize": q_url_normalize,
-        "ann_topk_cosine": q_topk_cosine,
-        "ann_topk_lsh": q_ann_lsh,
-        "ann_topk_ivf": q_ann_ivf,
-        "embedding_near_dup": q_embedding_near_dup,
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "events_window_agg": q_events_window,
-        "events_sliding_window": q_events_sliding,
-        "sessionize": q_sessionize,
-        "asof_join": q_asof_join,
-        "language_id": q_langid,
-        "quality_score": q_quality,
-        "token_count": q_token_counts,
-        "doc_fingerprint": q_fingerprint,
-        "stratified_sample": q_stratified_sample,
-        "pack_sequences": q_pack_sequences,
-        "pack_sequences_tokenized": q_pack_sequences_tokenized,
-        "materialize_packs": q_materialize_packs,
-        "media_features": q_media_features,
-        "decontaminate": q_decontaminate,
-        "pii_scrub": q_pii_scrub,
     }
     window = [
         # §2.6 merge + §2.3 validate/filter
@@ -1888,8 +1218,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spo_category_counts",
         "meta_kg_nodes",
         "meta_kg_edges",
+        "meta_kg_source_counts",
+        "meta_kg_edge_source_counts",
         "validator_report",
+        "validator_type_battery",
         "validator_edge_report",
+        "duplicate_nodes",
         "dangling_edges",
         # §2.7 whole-graph ops + traversal
         "node_degree",
@@ -1899,9 +1233,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "clique_canonicalize",
         "biolink_category_election",
         "graph_ancestors",
+        "fold_predicate",
+        "unfold_node_property",
+        "remove_singletons",
+        "get_parents",
         # §2.4 scalar functions
         "infores_rewrite",
         "infores_catalog",
+        "provenance_default",
         "provenance_coercion",
         "curie_roundtrip",
         "case_format_functions",
@@ -1911,32 +1250,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # §2.1/§2.2 source/sink round-trips
         "delimiter_sniff",
         "tsv_tar_roundtrip",
+        "json_roundtrip",
+        "sssom_roundtrip",
         "obograph_roundtrip",
         "rdf_nt_roundtrip",
+        "jelly_roundtrip",
         "trapi_roundtrip",
         "trapi_jsonl_roundtrip",
         "duckdb_pushdown",
         # §2.8 orchestration
         "transform_ops",
-        # north-rule flagships (KG construction over web pages) — PINNED
+        # KG construction over web pages
         "pipeline_triples",
         "entity_link",
-        # round-6 rotation cohort (one green round — stays for a second)
-        "remove_shared_spans",
-        "pack_sequences",
-        "pack_sequences_tokenized",
-        "materialize_packs",
-        "media_features",
+        "extract_text",
         "url_normalize",
-        "ann_topk_ivf",
-        "embedding_near_dup_lsh",
-        # round-7 rotation: first-ever driver rows for these
-        "ngram_overlap",
-        "line_dedup",
-        "repetition_signals",
-        "stratified_sample",
-        "decontaminate",
-        "pii_scrub",
     ]
     assert len(window) == 50, f"window must hold exactly 50 entries, got {len(window)}"
     assert len(set(window)) == len(window), "duplicate name in the driver window"
@@ -1951,10 +1279,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    words_cte = (
-        "WITH words AS (SELECT doc_id, unnest(list_distinct("
-        "string_split_regex(lower(text), '\\s+'))) AS word FROM documents)"
-    )
     return {
         "merge_nodes": f"""
             SELECT 'P:' || p_partkey AS id,
@@ -2156,119 +1480,6 @@ def oracle_sql() -> dict[str, str]:
                 JOIN supplier ON l_suppkey = s_suppkey
             ) GROUP BY 1, 2, 3, 4
         """,
-        "ann_topk_lsh": _lsh_oracle_sql(),
-        "curate_corpus": """
-            WITH RECURSIVE passing AS (
-                SELECT doc_id, text,
-                       len(list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> ''))::BIGINT AS n_tokens
-                FROM documents
-                WHERE len(list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '')) >= 5
-            ),
-            uniq AS (
-                SELECT p.* FROM passing p
-                JOIN (SELECT md5(text) AS h, min(doc_id) AS rep FROM passing GROUP BY 1) r
-                  ON p.doc_id = r.rep
-            ),
-            words AS (
-                SELECT doc_id, unnest(list_distinct(
-                    string_split_regex(lower(text), '\\s+'))) AS word FROM uniq
-            ),
-            w AS (SELECT doc_id, word FROM words WHERE word <> ''),
-            sigs AS (
-                SELECT doc_id,
-                       min(md5('0_' || word)) AS h0, min(md5('1_' || word)) AS h1,
-                       min(md5('2_' || word)) AS h2, min(md5('3_' || word)) AS h3,
-                       min(md5('4_' || word)) AS h4, min(md5('5_' || word)) AS h5,
-                       min(md5('6_' || word)) AS h6, min(md5('7_' || word)) AS h7
-                FROM w GROUP BY doc_id
-            ),
-            banded AS (
-                SELECT doc_id, 0 AS band, h0 || '_' || h1 AS key FROM sigs
-                UNION ALL SELECT doc_id, 1, h2 || '_' || h3 FROM sigs
-                UNION ALL SELECT doc_id, 2, h4 || '_' || h5 FROM sigs
-                UNION ALL SELECT doc_id, 3, h6 || '_' || h7 FROM sigs
-            ),
-            capped AS (
-                -- replays curate_corpus's max_bucket_size=10000 default
-                -- (non-binding at this scale, faithfully replayed anyway)
-                SELECT doc_id, band, key FROM banded
-                QUALIFY count(*) OVER (PARTITION BY band, key) <= 10000
-            ),
-            cand AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-                WHERE a.doc_id < b.doc_id
-            ),
-            sizes AS (SELECT doc_id, count(*)::BIGINT AS sz FROM w GROUP BY doc_id),
-            inter AS (
-                SELECT c.doc_a, c.doc_b, count(*)::BIGINT AS i
-                FROM cand c
-                JOIN w wa ON wa.doc_id = c.doc_a
-                JOIN w wb ON wb.doc_id = c.doc_b AND wb.word = wa.word
-                GROUP BY 1, 2
-            ),
-            near AS (
-                SELECT doc_a, doc_b FROM inter
-                JOIN sizes sa ON sa.doc_id = doc_a
-                JOIN sizes sb ON sb.doc_id = doc_b
-                WHERE floor(i * 1000.0 / (sa.sz + sb.sz - i)) >= 900
-            ),
-            sym AS (
-                SELECT doc_a AS a, doc_b AS b FROM near
-                UNION SELECT doc_b, doc_a FROM near
-            ),
-            reach AS (
-                SELECT a, b FROM sym
-                UNION
-                SELECT r.a, s.b FROM reach r JOIN sym s ON s.a = r.b
-            ),
-            comp AS (
-                SELECT u.doc_id,
-                       coalesce(least(u.doc_id, (SELECT min(b) FROM reach WHERE a = u.doc_id)),
-                                u.doc_id) AS cluster
-                FROM uniq u
-            ),
-            kept AS (
-                SELECT cluster, min(doc_id) AS doc_id, count(*)::BIGINT AS cluster_size
-                FROM comp GROUP BY cluster
-            )
-            SELECT k.doc_id, p.n_tokens, CAST(k.cluster AS VARCHAR) AS cluster, k.cluster_size
-            FROM kept k JOIN passing p ON p.doc_id = k.doc_id
-        """,
-        "simhash_near_dup": f"""
-            {words_cte},
-            sigs AS (
-                SELECT doc_id, {" || ".join(
-                    f"(CASE WHEN sum((ascii(substr(md5(word), {i + 1}, 1)) % 2) * 2 - 1) > 0 "
-                    f"THEN '1' ELSE '0' END)" for i in range(16)
-                )} AS simhash
-                FROM words WHERE word <> '' GROUP BY doc_id
-            ),
-            banded AS (
-                SELECT doc_id, simhash, b AS band, substr(simhash, b * 4 + 1, 4) AS key
-                FROM sigs, LATERAL unnest(generate_series(0, 3)) AS t(b)
-            ),
-            capped AS (
-                -- replays simhash_near_dups's max_bucket_size=10000 default
-                -- (non-binding at this scale, faithfully replayed anyway)
-                SELECT doc_id, simhash, band, key FROM banded
-                QUALIFY count(*) OVER (PARTITION BY band, key) <= 10000
-            ),
-            pairs AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       a.simhash AS sa, b.simhash AS sb
-                FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-                WHERE a.doc_id < b.doc_id
-            )
-            SELECT doc_a, doc_b, hamming FROM (
-                SELECT doc_a, doc_b,
-                       ({" + ".join(
-                           f"(CASE WHEN substr(sa, {i}, 1) <> substr(sb, {i}, 1) THEN 1 ELSE 0 END)"
-                           for i in range(1, 17)
-                       )})::INT AS hamming
-                FROM pairs
-            ) WHERE hamming <= 1
-        """,
         "graph_ancestors": """
             WITH RECURSIVE tree AS (
                 SELECT p_partkey AS ck, p_partkey // 2 AS pk
@@ -2324,168 +1535,6 @@ def oracle_sql() -> dict[str, str]:
                    subject || '-' || predicate || '-' || object AS key,
                    sha256(subject || '-' || predicate || '-' || object) AS id
             FROM (SELECT DISTINCT subject, predicate, object FROM ({_EDGES_SQL}))
-        """,
-        "dedup_exact": """
-            SELECT md5(text) AS content_hash, min(doc_id)::BIGINT AS representative,
-                   count(*)::BIGINT AS n_docs
-            FROM documents GROUP BY 1
-        """,
-        "minhash_signatures": f"""
-            {words_cte}
-            SELECT doc_id,
-                   min(md5('0_' || word)) AS h0, min(md5('1_' || word)) AS h1,
-                   min(md5('2_' || word)) AS h2, min(md5('3_' || word)) AS h3
-            FROM words WHERE word <> '' GROUP BY doc_id
-        """,
-        "lsh_candidates": f"""
-            {words_cte},
-            sigs AS (
-                SELECT doc_id,
-                       min(md5('0_' || word)) AS h0, min(md5('1_' || word)) AS h1,
-                       min(md5('2_' || word)) AS h2, min(md5('3_' || word)) AS h3
-                FROM words WHERE word <> '' GROUP BY doc_id
-            ),
-            banded AS (
-                SELECT doc_id, 0 AS band, h0 || '_' || h1 AS key FROM sigs
-                UNION ALL
-                SELECT doc_id, 1 AS band, h2 || '_' || h3 AS key FROM sigs
-            ),
-            capped AS (
-                SELECT doc_id, band, key FROM banded
-                QUALIFY count(*) OVER (PARTITION BY band, key) <= 100
-            )
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM capped a JOIN capped b ON a.band = b.band AND a.key = b.key
-            WHERE a.doc_id < b.doc_id
-        """,
-        "ngram_jaccard": f"""
-            {words_cte},
-            w AS (SELECT doc_id, word FROM words WHERE word <> ''),
-            sizes AS (SELECT doc_id, count(*)::BIGINT AS sz FROM w GROUP BY doc_id),
-            inter AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*)::BIGINT AS i
-                FROM w a JOIN w b ON a.word = b.word AND a.doc_id < b.doc_id
-                GROUP BY 1, 2
-            )
-            SELECT doc_a, doc_b,
-                   floor(i * 1000.0 / (sa.sz + sb.sz - i))::BIGINT AS jaccard_1000
-            FROM inter
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE floor(i * 1000.0 / (sa.sz + sb.sz - i)) >= 800
-        """,
-        "simhash": f"""
-            {words_cte}
-            SELECT doc_id, {" || ".join(
-                f"(CASE WHEN sum((ascii(substr(md5(word), {i + 1}, 1)) % 2) * 2 - 1) > 0 "
-                f"THEN '1' ELSE '0' END)" for i in range(16)
-            )} AS simhash
-            FROM words WHERE word <> '' GROUP BY doc_id
-        """,
-        "ann_topk_cosine": """
-            WITH qz AS (
-                SELECT vec_id, list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-                FROM embeddings
-            ),
-            scored AS (
-                SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                       CAST(round(
-                           list_dot_product(q.v, c.v)
-                           / sqrt(CAST(list_dot_product(q.v, q.v) AS DOUBLE)
-                                  * CAST(list_dot_product(c.v, c.v) AS DOUBLE))
-                           * 1000000) AS BIGINT) AS cos_1e6
-                FROM qz q, qz c
-                WHERE q.vec_id % 50 = 0 AND q.vec_id <> c.vec_id
-            )
-            SELECT query_id, neighbor_id, cos_1e6, rank FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY query_id ORDER BY cos_1e6 DESC, neighbor_id ASC
-                )::INT AS rank
-                FROM scored
-            ) WHERE rank <= 5
-        """,
-        "embedding_near_dup": """
-            WITH base AS (
-                SELECT vec_id, embedding FROM embeddings
-                UNION ALL
-                SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id % 25 = 0
-            ),
-            qz AS (
-                SELECT vec_id,
-                       list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS v
-                FROM base
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   CAST(round(list_dot_product(a.v, b.v)
-                        / sqrt(CAST(list_dot_product(a.v, a.v) AS DOUBLE)
-                               * CAST(list_dot_product(b.v, b.v) AS DOUBLE)) * 1000000) AS BIGINT) AS cos_1e6
-            FROM qz a, qz b
-            WHERE a.vec_id < b.vec_id
-              AND round(list_dot_product(a.v, b.v)
-                  / sqrt(CAST(list_dot_product(a.v, a.v) AS DOUBLE)
-                         * CAST(list_dot_product(b.v, b.v) AS DOUBLE)) * 1000000) >= 990000
-        """,
-        "events_window_agg": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-                   event_type,
-                   count(*)::BIGINT AS n_events,
-                   sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS sum_value_1e2
-            FROM events GROUP BY 1, 2
-        """,
-        "events_sliding_window": """
-            SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start,
-                   event_type,
-                   count(*)::BIGINT AS n_events,
-                   sum(CAST(round(value * 100) AS BIGINT))::BIGINT AS sum_value_1e2
-            FROM (
-                SELECT event_type, value,
-                       TIMESTAMP '1970-01-01'
-                         + ((floor(epoch(ts))::BIGINT // 900) * 900 - k * 900) * INTERVAL '1 second' AS ws
-                FROM events, LATERAL unnest(generate_series(0, 3)) AS t(k)
-            )
-            GROUP BY 1, 2
-        """,
-        "sessionize": """
-            WITH ordered AS (
-                SELECT user_id, ts, event_id,
-                       CASE WHEN lag(ts) OVER w IS NULL
-                                 OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-                            THEN 1 ELSE 0 END AS new_session
-                FROM events
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ),
-            sid AS (
-                SELECT user_id, ts,
-                       sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                              ROWS UNBOUNDED PRECEDING) AS session_seq
-                FROM ordered
-            )
-            SELECT user_id, session_seq::BIGINT AS session_seq,
-                   strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-                   count(*)::BIGINT AS n_events
-            FROM sid GROUP BY user_id, session_seq
-        """,
-        "asof_join": """
-            SELECT l.event_id AS event_id, l.user_id AS user_id,
-                   strftime(l.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-                   r.event_id AS last_click_event_id
-            FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-            ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-              ON l.user_id = r.user_id AND l.ts >= r.ts
-        """,
-        "language_id": _LANGID_SQL,
-        "quality_score": _QUALITY_SQL,
-        "token_count": f"""
-            SELECT doc_id,
-                   len(list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> ''))::BIGINT AS n_ws_tokens,
-                   len(regexp_extract_all(text, '{_TOKEN_RX_SQL}'))::BIGINT AS n_regex_tokens
-            FROM documents
-        """,
-        "doc_fingerprint": """
-            SELECT doc_id,
-                   md5(array_to_string(list_sort(list_distinct(
-                       list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> w <> ''))), ' ')) AS fp
-            FROM documents
         """,
         "extract_text": _EXTRACT_SQL,
         "entity_link": _ENTITY_LINK_SQL,
@@ -2588,8 +1637,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT DISTINCT 'P:' || (p_partkey // 2) AS id
             FROM part WHERE p_partkey % 10 = 0 AND p_partkey >= 2
         """,
-        "embedding_near_dup_lsh": _near_dup_lsh_oracle_sql(),
-        "ann_topk_ivf": _ivf_oracle_sql(),
         "delimiter_sniff": """
             SELECT 'P:' || p_partkey AS id,
                    array_to_string(list_sort(list_distinct(
@@ -2610,161 +1657,6 @@ def oracle_sql() -> dict[str, str]:
                    'infores:agg1|infores:agg' || (p_partkey % 5) AS provided_by_attr,
                    CASE WHEN p_partkey % 4 = 0 THEN 'increased' END AS direction_qualifier
             FROM part
-        """,
-        "materialize_packs": """
-            WITH base AS (
-                SELECT doc_id, lang, text,
-                       len(list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> ''))::BIGINT AS n_tokens
-                FROM documents
-            ),
-            cum AS (
-                SELECT doc_id, lang, text, n_tokens,
-                       (sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        - n_tokens)::BIGINT AS off
-                FROM base
-            )
-            SELECT lang, floor(off / 500.0)::BIGINT AS pack_id,
-                   string_agg(text, chr(10) || chr(10) ORDER BY doc_id) AS text,
-                   count(*)::BIGINT AS n_docs,
-                   sum(n_tokens)::BIGINT AS n_tokens
-            FROM cum GROUP BY 1, 2
-        """,
-        "pack_sequences": """
-            WITH base AS (
-                SELECT doc_id, lang,
-                       len(list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> ''))::BIGINT AS n_tokens
-                FROM documents
-            ),
-            cum AS (
-                SELECT doc_id, lang, n_tokens,
-                       (sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        - n_tokens)::BIGINT AS off
-                FROM base
-            )
-            SELECT doc_id, lang, n_tokens,
-                   floor(off / 500.0)::BIGINT AS pack_id,
-                   (off % 500)::BIGINT AS offset_tokens
-            FROM cum
-        """,
-        "pack_sequences_tokenized": """
-            WITH base AS (
-                SELECT doc_id, lang,
-                       len(regexp_extract_all(text, '{tok_rx}'))::BIGINT AS n_tokens
-                FROM documents
-            ),
-            cum AS (
-                SELECT doc_id, lang, n_tokens,
-                       (sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        - n_tokens)::BIGINT AS off
-                FROM base
-            )
-            SELECT doc_id, lang, n_tokens,
-                   floor(off / 700.0)::BIGINT AS pack_id,
-                   (off % 700)::BIGINT AS offset_tokens
-            FROM cum
-        """.replace("{tok_rx}", _TOKEN_RX_SQL),
-        "ngram_overlap": """
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> '') AS t
-                FROM documents
-            ),
-            grams AS (
-                SELECT doc_id, unnest(list_distinct(
-                    CASE WHEN len(t) >= 4 THEN list_transform(
-                        generate_series(1, len(t) - 3),
-                        i -> array_to_string(list_slice(t, i, i + 3), ' '))
-                    ELSE CAST([] AS VARCHAR[]) END)) AS gram
-                FROM toks
-            ),
-            shared AS (
-                SELECT gram FROM grams GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-            ),
-            totals AS (SELECT doc_id, count(*)::BIGINT AS n_grams FROM grams GROUP BY 1),
-            ns AS (
-                SELECT g.doc_id, count(*)::BIGINT AS n_shared
-                FROM grams g JOIN shared s ON g.gram = s.gram GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(t.n_grams, 0)::BIGINT AS n_grams,
-                   coalesce(ns.n_shared, 0)::BIGINT AS n_shared,
-                   CASE WHEN coalesce(t.n_grams, 0) > 0
-                        THEN floor(coalesce(ns.n_shared, 0) * 1000.0 / t.n_grams)::BIGINT
-                        ELSE 0 END AS shared_frac_1000
-            FROM documents d
-            LEFT JOIN totals t USING (doc_id)
-            LEFT JOIN ns USING (doc_id)
-        """,
-        "remove_shared_spans": """
-            WITH toks AS (
-                SELECT doc_id, text,
-                       list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS t
-                FROM documents
-            ),
-            grams AS (
-                SELECT doc_id, i AS start,
-                       lower(array_to_string(list_slice(t, i, i + 3), ' ')) AS gram
-                FROM toks, UNNEST(generate_series(1, len(t) - 3)) AS s(i)
-            ),
-            shared AS (
-                SELECT gram FROM grams GROUP BY gram HAVING count(DISTINCT doc_id) >= 2
-            ),
-            stats AS (
-                SELECT g.doc_id, count(DISTINCT g.gram) AS n_grams,
-                       count(DISTINCT CASE WHEN sh.gram IS NOT NULL THEN g.gram END) AS n_shared
-                FROM grams g LEFT JOIN shared sh USING (gram)
-                GROUP BY g.doc_id
-            ),
-            gated AS (
-                SELECT doc_id FROM stats
-                WHERE n_grams > 0 AND floor(n_shared * 1000.0 / n_grams) >= 500
-            ),
-            starts AS (
-                SELECT DISTINCT g.doc_id, g.start
-                FROM grams g JOIN shared USING (gram) JOIN gated USING (doc_id)
-            ),
-            runs AS (
-                SELECT doc_id, min(start) AS s0, max(start) AS s1
-                FROM (SELECT doc_id, start,
-                             start - row_number() OVER (PARTITION BY doc_id ORDER BY start) AS grp
-                      FROM starts)
-                GROUP BY doc_id, grp
-                HAVING count(*) >= 2
-            ),
-            covered AS (
-                SELECT DISTINCT doc_id, p
-                FROM runs, UNNEST(generate_series(s0, s1 + 3)) AS u(p)
-            ),
-            tok_pos AS (
-                SELECT q.doc_id, i AS pos, q.t[i] AS word
-                FROM (SELECT tk.doc_id, tk.t FROM toks tk JOIN gated USING (doc_id)) q,
-                     UNNEST(generate_series(1, len(q.t))) AS s(i)
-            ),
-            survive AS (
-                SELECT tp.doc_id,
-                       string_agg(tp.word, ' ' ORDER BY tp.pos) AS clean,
-                       count(*) AS kept
-                FROM tok_pos tp
-                ANTI JOIN covered c ON tp.doc_id = c.doc_id AND tp.pos = c.p
-                GROUP BY tp.doc_id
-            )
-            SELECT tk.doc_id,
-                   CASE WHEN g.doc_id IS NOT NULL THEN coalesce(s.clean, '')
-                        ELSE tk.text END AS text_clean,
-                   (CASE WHEN g.doc_id IS NOT NULL THEN len(tk.t) - coalesce(s.kept, 0)
-                         ELSE 0 END)::BIGINT AS n_tokens_removed
-            FROM toks tk
-            LEFT JOIN gated g USING (doc_id)
-            LEFT JOIN survive s USING (doc_id)
-        """,
-        "stratified_sample": """
-            SELECT doc_id, lang FROM documents
-            WHERE CAST(('0x' || substr(md5('mix1' || CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 1000
-                  < CASE lang WHEN 'en' THEN 800 WHEN 'de' THEN 250
-                              WHEN 'fr' THEN 500 ELSE 100 END
         """,
         "url_normalize": """
             WITH raw AS (
@@ -2808,106 +1700,6 @@ def oracle_sql() -> dict[str, str]:
                            ELSE '' END AS canonical
             FROM comp
         """,
-        "repetition_signals": """
-            WITH toksrc AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS t
-                FROM documents
-            ),
-            ml AS (
-                SELECT doc_id,
-                       array_to_string(list_concat(list_concat(list_concat(
-                           ['NAV home about contact'],
-                           CASE WHEN len(t) > 0 THEN list_transform(
-                               generate_series(0, (len(t) - 1) // 8),
-                               i -> array_to_string(list_slice(t, i * 8 + 1, i * 8 + 8), ' '))
-                           ELSE CAST([] AS VARCHAR[]) END),
-                           CASE WHEN len(t) > 0 THEN [array_to_string(list_slice(t, 1, 8), ' ')]
-                           ELSE CAST([] AS VARCHAR[]) END),
-                           ['FOOTER copyright 2024']), chr(10)) AS text
-                FROM toksrc
-            ),
-            lines AS (
-                SELECT doc_id, l AS line
-                FROM ml, LATERAL unnest(string_split(text, chr(10))) AS u(l)
-                WHERE trim(l) <> ''
-            ),
-            per_line AS (
-                SELECT doc_id, line, count(*)::BIGINT AS cnt FROM lines GROUP BY 1, 2
-            ),
-            la AS (
-                SELECT doc_id, sum(cnt)::BIGINT AS n_lines,
-                       floor(sum(cnt - 1) * 1000.0 / sum(cnt))::BIGINT AS dup_line_frac_1000,
-                       floor(sum((cnt - 1) * len(line)) * 1000.0 / sum(cnt * len(line)))::BIGINT
-                           AS dup_line_char_frac_1000
-                FROM per_line GROUP BY 1
-            ),
-            mt AS (
-                SELECT doc_id, len(text) AS chars,
-                       list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> '') AS t
-                FROM ml
-            ),
-            grams AS (
-                SELECT doc_id, unnest(list_transform(
-                    generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i + 1])) AS gram
-                FROM mt WHERE len(t) >= 2
-            ),
-            gcnt AS (SELECT doc_id, gram, count(*)::BIGINT AS cnt FROM grams GROUP BY 1, 2),
-            top AS (
-                SELECT doc_id, gram, cnt FROM gcnt
-                QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, gram ASC) = 1
-            )
-            SELECT m.doc_id,
-                   coalesce(la.n_lines, 0)::BIGINT AS n_lines,
-                   coalesce(la.dup_line_frac_1000, 0)::BIGINT AS dup_line_frac_1000,
-                   coalesce(la.dup_line_char_frac_1000, 0)::BIGINT AS dup_line_char_frac_1000,
-                   top.gram AS top_2gram,
-                   floor(top.cnt * len(top.gram) * 1000.0 / m.chars)::BIGINT AS top_2gram_frac_1000
-            FROM mt m
-            LEFT JOIN la USING (doc_id)
-            LEFT JOIN top USING (doc_id)
-        """,
-        "line_dedup": """
-            WITH toksrc AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS t
-                FROM documents
-            ),
-            ml AS (
-                SELECT doc_id,
-                       array_to_string(list_concat(list_concat(list_concat(
-                           ['NAV home about contact'],
-                           CASE WHEN len(t) > 0 THEN list_transform(
-                               generate_series(0, (len(t) - 1) // 8),
-                               i -> array_to_string(list_slice(t, i * 8 + 1, i * 8 + 8), ' '))
-                           ELSE CAST([] AS VARCHAR[]) END),
-                           CASE WHEN len(t) > 0 THEN [array_to_string(list_slice(t, 1, 8), ' ')]
-                           ELSE CAST([] AS VARCHAR[]) END),
-                           ['FOOTER copyright 2024']), chr(10)) AS text
-                FROM toksrc
-            ),
-            lines AS (
-                SELECT doc_id, i AS pos, string_split(text, chr(10))[i] AS line
-                FROM ml, LATERAL unnest(generate_series(1, len(string_split(text, chr(10))))) AS u(i)
-            ),
-            freq AS (
-                SELECT line FROM lines WHERE trim(line) <> ''
-                GROUP BY line HAVING count(DISTINCT doc_id) >= 300
-            ),
-            kept AS (
-                SELECT l.doc_id, l.pos, l.line FROM lines l
-                WHERE NOT EXISTS (SELECT 1 FROM freq f WHERE f.line = l.line)
-            ),
-            rebuilt AS (
-                SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text,
-                       count(*)::BIGINT AS kept
-                FROM kept GROUP BY doc_id
-            ),
-            orig AS (SELECT doc_id, len(string_split(text, chr(10)))::BIGINT AS n FROM ml)
-            SELECT o.doc_id, coalesce(r.text, '') AS text,
-                   (o.n - coalesce(r.kept, 0))::BIGINT AS n_removed
-            FROM orig o LEFT JOIN rebuilt r USING (doc_id)
-        """,
         "trapi_jsonl_roundtrip": """
             SELECT 'P:' || p_partkey AS subject,
                    p_name AS subject_name,
@@ -2921,7 +1713,6 @@ def oracle_sql() -> dict[str, str]:
                    CASE WHEN p_partkey % 4 = 0 THEN 'increased' END AS direction_qualifier
             FROM part
         """,
-        "media_features": _MEDIA_FEATURES_SQL,
         "sssom_roundtrip": """
             SELECT 'HGNC:' || p_partkey AS subject, 'biolink:exact_match' AS predicate,
                    'MONDO:' || (p_partkey % 50) AS object,
@@ -3005,129 +1796,8 @@ def oracle_sql() -> dict[str, str]:
             FROM part
         """,
         "transform_ops": _TRANSFORM_OPS_SQL,
-        "decontaminate": """
-            WITH toks AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(lower(text)), '\\s+'), w -> w <> '') AS t
-                FROM documents
-            ),
-            grams AS (
-                SELECT doc_id, unnest(list_distinct(
-                    CASE WHEN len(t) >= 3 THEN list_transform(
-                        generate_series(1, len(t) - 2),
-                        i -> array_to_string(list_slice(t, i, i + 2), ' '))
-                    ELSE CAST([] AS VARCHAR[]) END)) AS gram
-                FROM toks
-            ),
-            eval_grams AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0),
-            totals AS (SELECT doc_id, count(*)::BIGINT AS n_grams FROM grams GROUP BY 1),
-            hits AS (
-                SELECT g.doc_id, count(*)::BIGINT AS n_hit_grams
-                FROM grams g JOIN eval_grams e USING (gram) GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   coalesce(t.n_grams, 0)::BIGINT AS n_grams,
-                   coalesce(h.n_hit_grams, 0)::BIGINT AS n_hit_grams,
-                   (CASE WHEN coalesce(h.n_hit_grams, 0) > 0 THEN 1 ELSE 0 END)::INT AS contaminated
-            FROM documents d
-            LEFT JOIN totals t USING (doc_id)
-            LEFT JOIN hits h USING (doc_id)
-        """,
-        # Same PII patterns as operators/redact.PII_PATTERNS (Java∩RE2 subset),
-        # same sequential count-then-redact order: email, ssn, ipv4, phone.
-        "pii_scrub": r"""
-            WITH base AS (
-                SELECT doc_id,
-                       text || ' contact user' || doc_id || '@example.com or +1 (415) 555-'
-                            || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-                            || ' host 10.0.' || (doc_id % 256)::VARCHAR || '.7'
-                            || CASE WHEN doc_id % 5 = 0 THEN ' ssn 219-09-9999' ELSE '' END AS text
-                FROM documents
-            ),
-            s1 AS (
-                SELECT doc_id,
-                       len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))::BIGINT AS n_email,
-                       regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g') AS text
-                FROM base
-            ),
-            s2 AS (
-                SELECT doc_id, n_email,
-                       len(regexp_extract_all(text, '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b'))::BIGINT AS n_ssn,
-                       regexp_replace(text, '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '[SSN]', 'g') AS text
-                FROM s1
-            ),
-            s3 AS (
-                SELECT doc_id, n_email, n_ssn,
-                       len(regexp_extract_all(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))::BIGINT AS n_ipv4,
-                       regexp_replace(text, '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '[IPV4]', 'g') AS text
-                FROM s2
-            ),
-            s4 AS (
-                SELECT doc_id, n_email, n_ssn, n_ipv4,
-                       len(regexp_extract_all(text, '\+?[0-9][0-9()\-\s.]{6,}[0-9]'))::BIGINT AS n_phone,
-                       regexp_replace(text, '\+?[0-9][0-9()\-\s.]{6,}[0-9]', '[PHONE]', 'g') AS text
-                FROM s3
-            )
-            SELECT doc_id, text AS text_redacted, n_email, n_ssn, n_ipv4, n_phone,
-                   (n_email + n_ssn + n_ipv4 + n_phone)::BIGINT AS n_pii
-            FROM s4
-        """,
     }
 
-
-# BPE-ish token regex, single-quoted for SQL (kgx_spark/operators/textstats.py)
-_TOKEN_RX_SQL = r"[A-Za-z0-9]+(?:''[a-z]+)?|[^\sA-Za-z0-9]"
-
-_MARKERS_SQL = {
-    "en": "['the','of','and','a','to','in','is']",
-    "de": "['der','die','das','und','nicht','ist','ein']",
-    "fr": "['le','la','les','et','des','est','une']",
-    "es": "['el','los','las','y','que','es','una']",
-}
-
-_LANGID_SQL = f"""
-    WITH toks AS (
-        SELECT doc_id, text,
-               list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> w <> '') AS ws
-        FROM documents
-    ),
-    scores AS (
-        SELECT doc_id, text,
-               len(list_filter(ws, w -> list_contains({_MARKERS_SQL['de']}, w))) AS s_de,
-               len(list_filter(ws, w -> list_contains({_MARKERS_SQL['en']}, w))) AS s_en,
-               len(list_filter(ws, w -> list_contains({_MARKERS_SQL['es']}, w))) AS s_es,
-               len(list_filter(ws, w -> list_contains({_MARKERS_SQL['fr']}, w))) AS s_fr
-        FROM toks
-    )
-    SELECT doc_id,
-           CASE WHEN length(regexp_replace(text, '[^\\x{{4e00}}-\\x{{9fff}}]', '', 'g')) > 0 THEN 'zh'
-                WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'und'
-                WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                ELSE 'fr' END AS lang_pred
-    FROM scores
-"""
-
-_QUALITY_SQL = f"""
-    WITH toks AS (
-        SELECT doc_id, text,
-               list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS ws
-        FROM documents
-    )
-    SELECT doc_id,
-           len(ws)::BIGINT AS n_tokens,
-           length(text)::BIGINT AS n_chars_computed,
-           length(regexp_replace(text, '[^!-/:-@\\[-`{{-~]', '', 'g'))::BIGINT AS n_punct,
-           CASE WHEN len(ws) > 0 THEN floor(
-               len(list_filter(list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> w <> ''),
-                               w -> list_contains({_MARKERS_SQL['en']}, w))) * 1000.0 / len(ws))::BIGINT
-                ELSE 0 END AS stopword_ratio_1000,
-           CASE WHEN len(ws) > 0 THEN floor(
-               (length(text) - len(ws) + 1) * 1000.0 / len(ws))::BIGINT
-                ELSE 0 END AS mean_word_len_1000
-    FROM toks
-"""
 
 _ENTITY_LINK_SQL = """
     WITH n AS (SELECT count(*) AS n_docs FROM documents),

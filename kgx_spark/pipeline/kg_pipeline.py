@@ -6,7 +6,7 @@ KGX-shaped nodes/edges into salted, skew-aware partitions.
 
 Each stage is a Stage (stages.py) so a killed run resumes from the last
 committed snapshot; `run_kg_pipeline` is the one-call entry used by
-__spark_entry__.entry, bench.py, and spark-submit (see scripts/run_pipeline.py).
+__spark_entry__.entry, kgbench, and spark-submit (see scripts/run_pipeline.py).
 """
 
 from __future__ import annotations

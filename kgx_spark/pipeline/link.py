@@ -15,10 +15,13 @@ The idf table is one small groupBy over mentions, also broadcast back.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kgx_spark.operators.textstats import tokens
+
+def tokens(col: Column) -> Column:
+    """Whitespace tokenization → array<string> (empty tokens dropped)."""
+    return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
 
 
 # Above this many distinct first tokens, an InSet literal stops being a

@@ -13,6 +13,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Local mode runs every task inside the driver heap; past this size a bigger
+# heap buys nothing for the engine's local jobs.
+MAX_DRIVER_MEM_MB = 16 * 1024
+
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_mem() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of the host's MemAvailable,
+    capped at 16g — a fixed 16g heap asks for more than a small host has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    avail_mb = int(line.split()[1]) // 1024
+                    return f"{min(MAX_DRIVER_MEM_MB, avail_mb // 2)}m"
+    except OSError:
+        pass
+    return f"{MAX_DRIVER_MEM_MB}m"
+
 
 def get_spark(
     app_name: str = "kgx_spark",
@@ -22,9 +53,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[default_cpus()]``.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local mode: ~1 shuffle partition per core; a real cluster would
@@ -56,7 +87,7 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_mem())
         # only consulted by multi-JVM masters (local-cluster / standalone);
         # plain local mode runs tasks inside the driver heap above
         .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "8g"))
@@ -73,8 +104,7 @@ def get_spark(
     # every whole-stage-codegen query compiles fresh classes, and a
     # long-lived executor serving many queries can exhaust the 240 MB JVM
     # default, silently flipping hot loops to interpreted execution). Our
-    # local probes peak at ~38 MB per short job (scripts/
-    # probe_triples_stage.py reports per-heap peaks), so this is headroom
+    # local probes peak at ~38 MB per short job, so this is headroom
     # for production-length sessions, NOT a measured local win — the
     # "stage slow after a prior stage in the same JVM" anomaly investigated
     # in round 6 turned out to track hypervisor steal, not cache pressure

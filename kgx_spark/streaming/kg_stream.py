@@ -113,6 +113,20 @@ def _swap_snapshot(df: DataFrame, live_dir: str) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
+def _recover_snapshot(live_dir: str) -> None:
+    """Finish a snapshot swap that a crash cut short. A kill between the
+    two renames leaves the graph only in ``.old``: move it back. A kill
+    after them leaves a stale ``.old`` that the next swap's rename would
+    fail on: remove it."""
+    old = live_dir + ".old"
+    if not os.path.isdir(old):
+        return
+    if os.path.isdir(live_dir):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, live_dir)
+
+
 def stream_kg_update(
     spark: SparkSession,
     landing_dir: str,
@@ -126,6 +140,7 @@ def stream_kg_update(
     micro-batch: a batchId at or below the recorded high-water mark is a
     no-op, so foreachBatch replays after a crash cannot double-merge."""
     hwm_path = os.path.join(checkpoint_dir, "_merged_batch.json")
+    _recover_snapshot(edges_dir)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         if os.path.exists(hwm_path):

@@ -27,14 +27,14 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kgx_spark.pipeline.kg_pipeline import run_kg_pipeline  # noqa: E402
-from kgx_spark.session import get_spark  # noqa: E402
+from kgx_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--sf-dir", required=True, help="input table directory (parquet)")
     ap.add_argument("--workdir", required=True, help="stage snapshot + metrics directory")
-    ap.add_argument("--master", default=None, help="spark master (default local[$SPARK_GRAFT_CPUS])")
+    ap.add_argument("--master", default=None, help="spark master (default local[<usable cores>])")
     ap.add_argument("--no-link", action="store_true", help="skip the entity-linking stage")
     ap.add_argument("--force", action="store_true", help="recompute even committed stages")
     ap.add_argument("--repeat-input", type=int, default=1,
@@ -48,7 +48,7 @@ def main() -> None:
     args = ap.parse_args()
 
     # shuffle files on tmpfs by default: one quota-throttled virtio disk here
-    # vs per-executor local SSDs on a real cluster — see bench.py + BASELINE.md
+    # vs per-executor local SSDs on a real cluster — see BASELINE.md
     # round-3 "shuffle-dir" diagnosis; SPARK_GRAFT_LOCAL_DIR=/tmp overrides
     if os.path.isdir("/dev/shm"):
         os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm")
@@ -68,7 +68,7 @@ def main() -> None:
         except ValueError:
             cores = None
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cpus()
     # smaller scan splits for the stage-snapshot re-reads: a merged KG edge
     # table is array-heavy and compresses hard, so 128 MB parquet splits
     # decompress into multi-GB partitions AND cap the scan at a handful of
@@ -99,9 +99,9 @@ def main() -> None:
             # work, not pipeline work. Under this flag the synthetic pages
             # are written out before the timer starts, so wall/t_s measure
             # the pipeline from the same starting point production has.
-            # probe_extract_stage.py measured the synthesis term at a flat
-            # ~7 s regardless of parallelism — untimed here, it stops
-            # masking the stages that do scale.
+            # The synthesis term measured a flat ~7 s regardless of
+            # parallelism — untimed here, it stops masking the stages that
+            # do scale.
             inp = os.path.join(args.workdir, "pages_input")
             pages_df.write.mode("overwrite").parquet(inp)
             pages_df = spark.read.parquet(inp)

@@ -6,13 +6,15 @@ Checked against the BATCH operators on the same pages (the reference
 semantics): the streamed triple log matches batch distinct (s,p,o), a
 re-dropped page adds nothing, and the incrementally-merged edges snapshot
 matches the batch merge over the full corpus — including replay
-idempotence through the recorded batchId high-water mark."""
+idempotence through the recorded batchId high-water mark and recovery from
+a snapshot swap cut short by a crash."""
 
 import glob
 import os
 import shutil
 
 import pyspark.sql.functions as F
+import pytest
 
 from kgx_spark.operators.merge import merge_edges
 from kgx_spark.operators.validate import validate_edges
@@ -112,3 +114,32 @@ def test_stream_kg_update_matches_batch_merge(spark, tmp_path):
     stream_kg_update(spark, landing, edges, ckpt)
     after = sorted(map(tuple, spark.read.parquet(edges).collect()))
     assert after == before
+
+
+@pytest.mark.parametrize("crash_state", ["live_renamed_away", "stale_old_left_behind"])
+def test_stream_kg_update_recovers_interrupted_swap(spark, tmp_path, crash_state):
+    """A kill inside the snapshot swap must not lose the graph: between the
+    two renames only ``edges.old`` holds it; after them a stale
+    ``edges.old`` sits beside the live snapshot. The next update must merge
+    into the full graph either way."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+    spo_a = _read_spo(spark, edges)
+    assert spo_a
+
+    if crash_state == "live_renamed_away":
+        os.rename(edges, edges + ".old")
+    else:
+        shutil.copytree(edges, edges + ".old")
+
+    _copy_drop(b_dir, landing, "dropB")
+    stream_kg_update(spark, landing, edges, ckpt)
+    got = _read_spo(spark, edges)
+    assert spo_a <= got
+    assert got == _batch_spo(pages)
+    assert not os.path.exists(edges + ".old")
+

@@ -87,74 +87,3 @@ def test_stream_kgx_jsonl(spark, tmp_path):
     assert got.count() == 2
     assert set(got.columns) >= {"subject", "predicate", "object"}
 
-
-def test_stateful_sessionize_cross_batch(spark, tmp_path):
-    """applyInPandasWithState: session state survives micro-batch boundaries —
-    a gap spanning two batches closes the first session."""
-    import json
-
-    from kgx_spark.streaming.stateful import stateful_sessionize
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    # batch 1: two events 60s apart; batch 2: one event 10000s later (> gap)
-    (landing / "b1.json").write_text(
-        json.dumps({"user_id": 1, "ts": "2026-01-01T00:00:00"}) + "\n"
-        + json.dumps({"user_id": 1, "ts": "2026-01-01T00:01:00"}) + "\n"
-    )
-    (landing / "b2.json").write_text(
-        json.dumps({"user_id": 1, "ts": "2026-01-01T03:00:00"}) + "\n"
-    )
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    out = stateful_sessionize(stream, gap_minutes=30)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from sessions_out").collect()
-    # exactly the FIRST session is closed (by the batch-2 event); the second
-    # stays open in state
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["user_id"] == 1 and r["n_events"] == 2
-    assert r["session_end"].minute == 1
-
-
-def test_stateful_user_counts_running_total(spark, tmp_path):
-    import json
-
-    from kgx_spark.streaming.stateful import stateful_user_counts
-
-    landing = tmp_path / "landing2"
-    landing.mkdir()
-    (landing / "b1.json").write_text(
-        "\n".join(json.dumps({"user_id": 7, "ts": "2026-01-01T00:00:00"}) for _ in range(2))
-    )
-    (landing / "b2.json").write_text(
-        "\n".join(json.dumps({"user_id": 7, "ts": "2026-01-02T00:00:00"}) for _ in range(3))
-    )
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    q = (
-        stateful_user_counts(stream)
-        .writeStream.format("memory")
-        .queryName("counts_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {(r["batch_events"], r["total_events"]) for r in spark.sql("select * from counts_out").collect()}
-    # two micro-batches (maxFilesPerTrigger=1): running total accumulates
-    assert rows == {(2, 2), (3, 5)}

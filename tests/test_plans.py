@@ -4,7 +4,6 @@ parquet filter pushdown + column pruning. A regression here silently turns
 a 100 TB job from hours into days, so it's tested like correctness."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from kgx_spark import fixtures as FX
 from kgx_spark.operators.filters import apply_edge_filters
@@ -129,38 +128,6 @@ def test_whole_stage_codegen_covers_hot_path(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p  # no Python in this path
 
 
-def test_scale_dedup_paths_have_no_cartesian(spark):
-    """simhash_near_dups / lsh_topk / candidate-jaccard must join on bucket
-    keys — a CartesianProduct in any of these plans means the scale path
-    silently degraded to all-pairs."""
-    from kgx_spark.operators.dedup import jaccard_pairs, lsh_candidate_pairs, simhash_near_dups
-    from kgx_spark.operators.similarity import lsh_topk
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plans = [
-        plan_of(simhash_near_dups(docs, max_hamming=1)),
-        plan_of(lsh_topk(emb.limit(50), emb, dim=64, k=3, planes=4, tables=2)),
-        plan_of(jaccard_pairs(docs, threshold=0.8,
-                              candidates=lsh_candidate_pairs(docs, num_hashes=4, bands=2))),
-    ]
-    for p in plans:
-        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
-def test_line_ops_no_cartesian_no_python(spark):
-    """repetition_signals / remove_boilerplate_lines are pure content-key
-    explode+groupBy plans: no cartesian, no Python eval — the frequent-line
-    anti-join must be a hash join on the line key."""
-    from kgx_spark.operators.textstats import remove_boilerplate_lines, repetition_signals
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for p in (plan_of(repetition_signals(docs)),
-              plan_of(remove_boilerplate_lines(docs, min_docs=3))):
-        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
 def test_multimodal_decode_has_no_shuffle(spark):
     """Binary media columns must never shuffle: the decode/feature plan is a
     single narrow mapInPandas stage over the scan."""
@@ -172,56 +139,6 @@ def test_multimodal_decode_has_no_shuffle(spark):
     )
     p = plan_of(decode_features(df))
     assert "Exchange" not in p
-
-
-def test_embedding_lsh_paths_capped_and_no_cartesian(spark):
-    """Round-2 judge #1: the embedding near-dup/top-k scale paths must join
-    on bucket keys AND cap bucket sizes, so a degenerate corpus (many
-    identical vectors → one bucket) stays bounded instead of going
-    quadratic."""
-    from pyspark.sql import functions as F
-
-    from kgx_spark.operators.similarity import embedding_near_dups, lsh_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    nd = embedding_near_dups(
-        emb, dim=64, planes=4, exact=False, max_bucket_size=100, n_rows=500
-    )
-    tk = lsh_topk(emb.limit(20), emb, dim=64, k=3, planes=4, tables=2, max_bucket_size=100)
-    for p in (plan_of(nd), plan_of(tk)):
-        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-        assert "LeftSemi" in p  # the bucket-size cap semi-join is in the plan
-
-    # degenerate corpus: 1000 IDENTICAL vectors — every one lands in the same
-    # bucket in every table; the cap must kill that bucket, leaving zero
-    # candidate pairs rather than ~10^6
-    one = [0.1] * 64
-    degen = spark.createDataFrame(
-        [(i, one) for i in range(1000)], "vec_id bigint, embedding array<double>"
-    )
-    assert embedding_near_dups(
-        degen, dim=64, planes=4, exact=False, max_bucket_size=50, n_rows=1000
-    ).count() == 0
-    assert lsh_topk(
-        degen.limit(5), degen, dim=64, k=3, planes=4, tables=2, max_bucket_size=50
-    ).count() == 0
-    # and with the cap above the corpus size the pairs come back
-    assert embedding_near_dups(
-        degen.limit(20), dim=64, planes=4, exact=False, max_bucket_size=1000, n_rows=20
-    ).count() == 20 * 19 / 2
-
-
-def test_derive_planes_scales_with_corpus():
-    """planes ≈ log2(N / target_bucket): constant expected bucket occupancy
-    as the corpus grows (round-2 judge #1: a fixed plane count is 2^planes
-    buckets TOTAL — quadratic blowup at scale)."""
-    from kgx_spark.operators.similarity import derive_planes
-
-    assert derive_planes(0) == 4
-    assert derive_planes(1_000, target_bucket_size=128) == 4   # floor
-    assert derive_planes(128 * 1024, target_bucket_size=128) == 10
-    assert derive_planes(10_000_000_000, target_bucket_size=128) == 24  # cap
-    assert derive_planes(2_000_000, target_bucket_size=128) == 14
 
 
 def test_mention_detection_has_no_shuffle(spark):
@@ -273,28 +190,3 @@ def test_first_token_prune_guard_plan_form(spark):
     # the guarded path still prunes correctly
     got = {r["mention"] for r in mentions.where(F.col("ngram_len") == 1).collect()}
     assert got == {"tok00001", "tok00500"}
-
-
-def test_remove_shared_spans_scale_shape(spark):
-    """Span removal must stay on shingle/position keys: no cartesian, no
-    Python eval, no single-partition exchange (the run-grouping window is
-    per-document)."""
-    from kgx_spark.operators.dedup import remove_shared_spans
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(remove_shared_spans(docs))
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    assert "SinglePartition" not in p
-
-
-def test_pack_assignment_never_single_partition(spark):
-    """assign_pack_ids with the DEFAULT stratum must window per id-hash
-    bucket: an Exchange SinglePartition here would funnel the whole corpus
-    through ONE task's sort at scale."""
-    from kgx_spark.operators.sampling import assign_pack_ids
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    p = plan_of(assign_pack_ids(docs))
-    assert "SinglePartition" not in p
-    assert "_pack_stratum" in p  # the hash-bucket stratum is the window key

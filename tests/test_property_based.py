@@ -2,7 +2,6 @@
 (SURVEY.md §5 notes the reference has none)."""
 
 import hypothesis.strategies as st
-import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 
 from kgx_spark.operators.clique import _driver_union_find

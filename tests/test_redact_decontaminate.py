@@ -1,15 +1,12 @@
-"""PII redaction + benchmark decontamination.
+"""PII redaction.
 
 pii_scrub: sequential count-then-redact semantics (each pattern sees the
 previous patterns' output), counts auditable from the redacted text, zero
-shuffle. eval_ngram_hits/decontaminate: eval-gram collisions flag docs,
-the eval-gram set broadcasts, the corpus-gram stream never shuffles on the
-gram key.
+shuffle.
 """
 
 from pyspark.sql import functions as F
 
-from kgx_spark.operators.dedup import decontaminate, eval_ngram_hits
 from kgx_spark.operators.redact import PII_PATTERNS, pii_scrub
 
 
@@ -68,48 +65,6 @@ def test_pii_scrub_no_shuffle(spark):
     df = spark.createDataFrame([(1, "x@y.zz")], ["doc_id", "text"])
     p = plan_of(pii_scrub(df))
     assert "Exchange" not in p and "Join" not in p
-
-
-def _corpus(spark):
-    return spark.createDataFrame(
-        [
-            (0, "the quick brown fox jumps over the lazy dog"),
-            (1, "a quick brown fox appears in this training document"),
-            (2, "completely unrelated words about spark shuffles and joins"),
-            (3, "too short"),
-        ],
-        ["doc_id", "text"],
-    )
-
-
-def _eval_set(spark):
-    return spark.createDataFrame(
-        [("the quick brown fox benchmark question",)], ["text"]
-    )
-
-
-def test_eval_ngram_hits(spark):
-    out = {r.doc_id: r for r in eval_ngram_hits(
-        _corpus(spark), _eval_set(spark), ngram=3).collect()}
-    # doc 0 shares 'the quick brown' + 'quick brown fox'; doc 1 shares
-    # 'quick brown fox'; doc 2 shares nothing; doc 3 is below ngram length.
-    assert out[0].n_hit_grams == 2 and out[0].contaminated
-    assert out[1].n_hit_grams == 1 and out[1].contaminated
-    assert out[2].n_hit_grams == 0 and not out[2].contaminated
-    assert out[3].n_grams == 0 and not out[3].contaminated
-    assert out[0].n_grams == 7  # 9 words -> 7 trigrams, all distinct
-
-
-def test_decontaminate_removes_hits(spark):
-    kept = decontaminate(_corpus(spark), _eval_set(spark), ngram=3)
-    assert sorted(r.doc_id for r in kept.collect()) == [2, 3]
-    assert kept.columns == _corpus(spark).columns
-
-
-def test_eval_grams_broadcast(spark):
-    p = plan_of(eval_ngram_hits(_corpus(spark), _eval_set(spark), ngram=3))
-    assert "BroadcastHashJoin" in p and "LeftSemi" in p
-    assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p
 
 
 def test_patterns_are_re2_safe():

@@ -1,11 +1,12 @@
-"""Capture .explain("formatted") for the headline bench queries.
+"""Capture .explain("formatted") for the KGX merge, clique, summary and
+entity-link plans and for each pipeline stage.
 
 Usage: python tools/capture_plans.py <outdir> [suffix] [--only name,name]
 
-Writes <outdir>/<query>_<suffix>.txt for each headline query (the bench.py
-set). pipeline_e2e is multi-stage (each stage snapshot-commits), so its plan
-is captured per stage: pipeline_<stage>_<suffix>.txt, built in fused mode
-(no snapshots) so the full lineage of each stage is visible.
+Writes <outdir>/<query>_<suffix>.txt for each query. The pipeline is
+multi-stage (each stage snapshot-commits), so its plan is captured per
+stage: pipeline_<stage>_<suffix>.txt, built in fused mode (no snapshots) so
+the full lineage of each stage is visible.
 """
 
 from __future__ import annotations
@@ -21,9 +22,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from kgx_spark import fixtures as FX  # noqa: E402
 from kgx_spark.operators.clique import clique_merge  # noqa: E402
-from kgx_spark.operators.dedup import jaccard_pairs, lsh_candidate_pairs  # noqa: E402
 from kgx_spark.operators.merge import merge_edges  # noqa: E402
-from kgx_spark.operators.similarity import lsh_topk, quantized_topk  # noqa: E402
 from kgx_spark.operators.summary import count_by_spo_category  # noqa: E402
 from kgx_spark.session import get_spark  # noqa: E402
 
@@ -44,10 +43,9 @@ def main() -> None:
             only = set(a.split("=", 1)[1].split(","))
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if os.path.isdir("/dev/shm"):
         os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm")
-    spark = get_spark("kgx_plans", master=f"local[{cpus}]")
+    spark = get_spark("kgx_plans")
 
     plans: dict[str, object] = {}
 
@@ -72,14 +70,6 @@ def main() -> None:
         )
         return count_by_spo_category(FX.edges(spark, sf_dir), nodes)
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.where(F.col("vec_id") % 50 == 0)
-
-    def _jacc():
-        cands = lsh_candidate_pairs(docs, num_hashes=8, bands=4, max_bucket_size=100)
-        return jaccard_pairs(docs, threshold=0.8, candidates=cands)
-
     def _link():
         from kgx_spark.pipeline.extract import extract_text
         from kgx_spark.pipeline.link import (
@@ -101,12 +91,6 @@ def main() -> None:
     plans["merge_edges"] = lambda: merge_edges([FX.edges(spark, sf_dir)])
     plans["clique_canonicalize"] = _clique
     plans["spo_category_counts"] = _spo
-    plans["minhash_lsh"] = lambda: lsh_candidate_pairs(
-        docs, num_hashes=8, bands=4, max_bucket_size=100
-    )
-    plans["jaccard_lsh_verified"] = _jacc
-    plans["ann_topk"] = lambda: quantized_topk(queries, emb, k=5)
-    plans["ann_topk_lsh"] = lambda: lsh_topk(queries, emb, dim=64, k=5, planes=8, tables=8)
     plans["entity_link"] = _link
 
     for name, fn in plans.items():

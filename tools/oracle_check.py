@@ -18,7 +18,7 @@ import duckdb
 
 sys.path.insert(0, ".")
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "region nation customer supplier part orders lineitem documents".split()
 
 
 def norm_value(v) -> str:

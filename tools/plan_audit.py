@@ -63,9 +63,11 @@ def main() -> None:
                 "BatchEvalPython": tree.count("BatchEvalPython"),
                 "ArrowEvalPython": tree.count("ArrowEvalPython") + tree.count("MapInPandas") + tree.count("MapInArrow"),
                 "Cartesian": tree.count("CartesianProduct") + tree.count("BroadcastNestedLoopJoin"),
-                "Exchange": len(re.findall(r"\bExchange\b", tree)) - tree.count("BroadcastExchange"),
+                # word boundaries already exclude BroadcastExchange and
+                # SortAggregate/SortMergeJoin: no subtraction
+                "Exchange": len(re.findall(r"\bExchange\b", tree)),
                 "BroadcastExchange": tree.count("BroadcastExchange"),
-                "Sort": len(re.findall(r"\bSort\b", tree)) - tree.count("SortAggregate") - tree.count("SortMergeJoin"),
+                "Sort": len(re.findall(r"\bSort\b", tree)),
                 "SortAggregate": tree.count("SortAggregate"),
                 "SortMergeJoin": tree.count("SortMergeJoin"),
                 "Window": tree.count("Window"),
