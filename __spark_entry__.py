@@ -207,8 +207,8 @@ def q_clique_canonicalize(spark: SparkSession, sf: str) -> DataFrame:
         edges.select(F.col("subject").alias("id"))
         .unionByName(edges.select(F.col("object").alias("id")))
         .distinct()
-        .withColumn("category", F.array(F.lit("biolink:NamedThing")))
     )
+    # no category column: every node is a NamedThing, so the audit is skipped
     _, canon, _ = clique_merge(node_ids, edges, prefix_priority=["P", "Q", "R", "S"])
     return (
         canon.where(F.col("predicate") != "biolink:same_as")
@@ -444,13 +444,8 @@ def q_entity_link(spark: SparkSession, sf: str) -> DataFrame:
     # pages whose grams were all pruned).
     n_pages = raw_pages.count()
     pages = extract_text(raw_pages)
-    # default (checkpoint-hits) path even though the synthetic dictionary is
-    # dense: measured A/B at sf0.1 (19.0s vs 25.5s warm) shows the n-gram
-    # explode dominates here, so recomputing it (dense_dictionary=True)
-    # costs more than materializing hits. The dense mode is the
-    # bounded-MEMORY guard for corpora where mention-scale materialization
-    # would not fit, not a latency win (docs/SCALE.md). First-token prune:
-    # result-identical (measured 27.2→15.2 s min at sf0.1, same rows).
+    # First-token prune: result-identical (measured 27.2→15.2 s min at
+    # sf0.1, same rows).
     alias_dict = synth_alias_dict(spark, sf)
     linked = link_mentions(
         detect_mentions(pages, **first_token_prune(alias_dict)),

@@ -30,6 +30,12 @@ from pyspark.sql import Window
 from kgx_spark.functions.keys import deterministic_edge_id
 
 SAME_AS = "biolink:same_as"
+# label-propagation round cap: the loop stops at its fixpoint, and pointer
+# doubling keeps the rounds near log2(component diameter); the cap only
+# bounds a pathological input (and warns)
+CC_MAX_ROUNDS = 50
+# past this plan-estimated size, collecting the pairs to the driver is the risk
+DRIVER_PATH_MAX_BYTES = 512 * 1024 * 1024
 
 
 def _driver_union_find(rows: list[tuple[str, str]]) -> list[tuple[str, str]]:
@@ -83,25 +89,34 @@ def _order_preserving_ids(verts: DataFrame) -> DataFrame:
     )
 
 
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate for ``df`` (plan stats, no job), or
+    None when the stats are unavailable (connect mode etc.)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 def connected_components(
     pairs: DataFrame,
-    max_iterations: int = 50,
     driver_threshold: int = 2_000_000,
-    encode_ids: bool = True,
 ) -> tuple[DataFrame, int]:
     """pairs(src, dst) → (id, component) where component = min id (lexicographic).
 
     Two physical strategies, one semantics:
 
-    - **small pair sets** (≤ driver_threshold, i.e. broadcast-scale — typical
-      for equivalence dictionaries even on huge corpora, since same_as
-      evidence ≪ triples): collect + union-find on the driver, one job total.
-      The distributed loop pays ~4 scheduled jobs per iteration; below this
-      threshold that latency dominates the actual work by orders of magnitude.
-    - **large pair sets**: hash-min label propagation (SURVEY.md §4
-      'Connected components'): every vertex starts labeled with itself; each
-      round takes the min label over itself + neighbors; fixpoint when no
-      label changes.
+    - **small pair sets** (≤ driver_threshold rows and a known plan size
+      ≤ DRIVER_PATH_MAX_BYTES, i.e. broadcast-scale — typical for
+      equivalence dictionaries even on huge corpora, since same_as evidence
+      ≪ triples): collect + union-find on the driver, one job total. The
+      distributed loop pays ~4 scheduled jobs per iteration; below this
+      threshold that latency dominates the actual work by orders of
+      magnitude. ``driver_threshold=0`` forces the distributed path.
+    - **large or unknown-size pair sets**: hash-min label propagation
+      (SURVEY.md §4 'Connected components'): every vertex starts labeled
+      with itself; each round takes the min label over itself + neighbors;
+      fixpoint when no label changes.
 
     Scale notes for the distributed path:
     - edges are symmetrized once and checkpointed; each round shuffles
@@ -118,24 +133,16 @@ def connected_components(
     distinct_pairs = (
         pairs.select("src", "dst").where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
     )
-    if driver_threshold:
-        # byte-based guard FIRST (free — plan stats, no job): 2M pairs of
-        # short CURIEs ≈ 100 MB on the driver, but hub identifiers can be
-        # long, and past ~512 MB the collect itself is the risk.
-        small = True
-        try:
-            size_bytes = distinct_pairs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            small = int(size_bytes) <= 512 * 1024 * 1024
-        except Exception:  # stats unavailable (connect mode etc.) — row guard only
-            pass
-        pdf = None
-        if small:
-            # ONE probe job: the limited collect IS the pair set when it
-            # fits under the row threshold (the previous count-then-toPandas
-            # pair scanned the checkpoint twice per clique_merge call).
-            pdf = distinct_pairs.limit(driver_threshold + 1).toPandas()
-            small = len(pdf) <= driver_threshold
-        if small:
+    # byte-based guard FIRST (free — plan stats, no job): 2M pairs of short
+    # CURIEs ≈ 100 MB on the driver, but hub identifiers can be long. An
+    # unknown size fails closed to the distributed path.
+    size_bytes = _plan_size_bytes(distinct_pairs) if driver_threshold else None
+    if size_bytes is not None and size_bytes <= DRIVER_PATH_MAX_BYTES:
+        # ONE probe job: the limited collect IS the pair set when it fits
+        # under the row threshold (the previous count-then-toPandas pair
+        # scanned the checkpoint twice per clique_merge call).
+        pdf = distinct_pairs.limit(driver_threshold + 1).toPandas()
+        if len(pdf) <= driver_threshold:
             import pandas as pd
 
             rows = list(zip(pdf["src"], pdf["dst"]))
@@ -151,23 +158,21 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    id_dict = None
-    if encode_ids:
-        # dictionary-encode CURIE strings to dense bigints BEFORE the loop:
-        # every LP round shuffles (vertex, label) — at ~8+8 bytes per row vs
-        # 2 × 20-60-byte strings that is a 3-5× cut on the loop's shuffle
-        # volume, amortized over all rounds (round-1 judge next-step #4). The
-        # encode itself costs one ranged sort + two joins, once.
-        id_dict = _order_preserving_ids(
-            sym.select(F.col("src").alias("id")).distinct()
-        ).localCheckpoint()
-        sym = (
-            sym.join(id_dict.withColumnRenamed("id", "src"), on="src")
-            .select(F.col("vid").alias("_s"), "dst")
-            .join(id_dict.withColumnRenamed("id", "dst"), on="dst")
-            .select(F.col("_s").alias("src"), F.col("vid").alias("dst"))
-            .localCheckpoint()
-        )
+    # dictionary-encode CURIE strings to dense bigints BEFORE the loop: every
+    # LP round shuffles (vertex, label) — at ~8+8 bytes per row vs 2 ×
+    # 20-60-byte strings that is a 3-5× cut on the loop's shuffle volume,
+    # amortized over all rounds (round-1 judge next-step #4). The encode
+    # itself costs one ranged sort + two joins, once.
+    id_dict = _order_preserving_ids(
+        sym.select(F.col("src").alias("id")).distinct()
+    ).localCheckpoint()
+    sym = (
+        sym.join(id_dict.withColumnRenamed("id", "src"), on="src")
+        .select(F.col("vid").alias("_s"), "dst")
+        .join(id_dict.withColumnRenamed("id", "dst"), on="dst")
+        .select(F.col("_s").alias("src"), F.col("vid").alias("dst"))
+        .localCheckpoint()
+    )
     labels = (
         sym.select(F.col("src").alias("id"))
         .distinct()
@@ -176,7 +181,7 @@ def connected_components(
     )
     iterations = 0
     changed = 1
-    for i in range(max_iterations):
+    for i in range(CC_MAX_ROUNDS):
         iterations = i + 1
         neighbor_min = (
             sym.join(labels.withColumnRenamed("id", "src"), on="src")
@@ -225,20 +230,19 @@ def connected_components(
         import warnings
 
         warnings.warn(
-            f"connected_components did not converge in {max_iterations} rounds; "
-            "components may be split — raise max_iterations",
+            f"connected_components did not converge in CC_MAX_ROUNDS={CC_MAX_ROUNDS} "
+            "rounds; components may be split",
             RuntimeWarning,
             stacklevel=2,
         )
-    if id_dict is not None:
-        # decode: vid → original CURIE for both the vertex and its component
-        # label (order-preserving ids ⇒ min-vid component == min-id component)
-        labels = (
-            labels.join(id_dict.withColumnRenamed("id", "_id_str"), labels["id"] == id_dict["vid"])
-            .select(F.col("_id_str").alias("id"), "component")
-            .join(id_dict.withColumnRenamed("id", "_comp_str"), F.col("component") == id_dict["vid"])
-            .select("id", F.col("_comp_str").alias("component"))
-        )
+    # decode: vid → original CURIE for both the vertex and its component
+    # label (order-preserving ids ⇒ min-vid component == min-id component)
+    labels = (
+        labels.join(id_dict.withColumnRenamed("id", "_id_str"), labels["id"] == id_dict["vid"])
+        .select(F.col("_id_str").alias("id"), "component")
+        .join(id_dict.withColumnRenamed("id", "_comp_str"), F.col("component") == id_dict["vid"])
+        .select("id", F.col("_comp_str").alias("component"))
+    )
     return labels, iterations
 
 
@@ -361,94 +365,6 @@ def category_anchors(nodes: DataFrame, pairs: DataFrame | None = None) -> DataFr
     return out
 
 
-# vocabulary → pairwise-comparability verdict, memoized: the closure-set
-# rebuild + O(k²) probe is pure function of the (tiny) vocabulary, and
-# clique_merge may run many times per session over the same model snapshot
-# (round-6 VERDICT next-round #5).
-_COMPARABLE_MEMO: dict[frozenset, bool] = {}
-
-
-def _vocabulary_comparable(vocab) -> bool:
-    """Every KNOWN pair of the category vocabulary is ancestor-comparable —
-    the pure kernel of the conflict pre-screen (no Spark jobs)."""
-    from kgx_spark.functions.biolink import CATEGORY_ANCESTORS
-
-    key = frozenset(v for v in vocab if v)
-    hit = _COMPARABLE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    known = [c for c in key if c in CATEGORY_ANCESTORS]
-    closures = {c: {c, *CATEGORY_ANCESTORS[c]} for c in known}
-    out = all(
-        a in closures[b] or b in closures[a]
-        for i, a in enumerate(known)
-        for b in known[i + 1 :]
-    )
-    _COMPARABLE_MEMO[key] = out
-    return out
-
-
-def _literal_category_values(nodes: DataFrame, col: str = "category") -> list[str] | None:
-    """The category vocabulary WITHOUT running a job, when it is statically
-    knowable: walk the analyzed plan's top-level Projects for an Alias
-    defining ``col`` from a FOLDABLE expression (the synthesized-category
-    case — ``withColumn("category", F.array(F.lit(...)))`` — which is
-    exactly how the KG pipeline and the bench construct their node frames).
-    Returns the constant's elements, or None when the column is data-driven
-    (caller falls back to the scan-based audit). Plan introspection is
-    best-effort: any surprise returns None, never raises.
-    """
-    try:
-        plan = nodes._jdf.queryExecution().analyzed()
-        for _ in range(16):
-            cls = plan.getClass().getSimpleName()
-            if cls == "Project":
-                target = None
-                for i in range(plan.projectList().size()):
-                    ne = plan.projectList().apply(i)
-                    if ne.name() == col:
-                        target = ne
-                        break
-                if target is None:
-                    return None
-                if target.getClass().getSimpleName() == "Alias":
-                    child = target.child()
-                    if not child.foldable():
-                        return None
-                    val = child.eval(None)
-                    if val is None:
-                        return []
-                    return [str(val.get(j, None)) for j in range(val.numElements())]
-                # bare AttributeReference: defined further down — keep walking
-            elif cls not in (
-                "Filter", "SubqueryAlias", "Sort", "GlobalLimit", "LocalLimit",
-                "Deduplicate", "Repartition", "RepartitionByExpression",
-            ):
-                return None
-            if plan.children().size() != 1:
-                return None
-            plan = plan.children().apply(0)
-        return None
-    except Exception:
-        return None
-
-
-def categories_pairwise_comparable(nodes: DataFrame) -> bool:
-    """Driver-side conflict pre-screen: the DISTINCT category vocabulary
-    (constant-folded from the plan when statically knowable — zero jobs —
-    else one partial-agg scan) checked for pairwise ancestor-comparability.
-    When true, no node and no clique can conflict, so the whole category
-    audit can be skipped — the typical homogeneous-graph fast path."""
-    vals = _literal_category_values(nodes)
-    if vals is None:
-        vals = [
-            r[0]
-            for r in nodes.select(F.explode_outer("category").alias("c")).distinct().collect()
-            if r[0]
-        ]
-    return _vocabulary_comparable(vals)
-
-
 def elect_leaders(
     members: DataFrame,
     nodes: DataFrame,
@@ -555,7 +471,6 @@ def clique_merge(
     dedupe_edges: bool = True,
     strict: bool = True,
     prefix_prioritization_map: dict[str, list[str]] | None = None,
-    audit_categories: bool | str = "auto",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """→ (canonical nodes, re-pointed edges, member→leader mapping).
 
@@ -584,22 +499,9 @@ def clique_merge(
     category (get_prefix_prioritization_map semantics); the flat
     ``prefix_priority`` list remains as the category-independent form.
 
-    ``audit_categories`` controls the eviction audit's pre-screen cost
-    (round-6 VERDICT #1 — the always-on vocabulary collect re-executed the
-    full node-frame lineage once per call even for synthesized-constant
-    categories):
-    - ``"auto"`` (default): when the category column is a plan-constant
-      (foldable literal — the pipeline/bench shape) its vocabulary is read
-      off the plan with ZERO jobs and a comparable vocabulary skips the
-      audit outright; otherwise the per-clique stats scan below decides —
-      layers 1+2 share that ONE member-restricted scan instead of paying a
-      separate whole-frame distinct+collect first.
-    - ``False``: caller asserts no category conflict is possible (e.g. it
-      synthesized the column itself); audit skipped entirely. Only valid
-      without ``prefix_prioritization_map`` (ppm needs per-clique
-      categories regardless) — ppm overrides False.
-    - ``True``: always run the stats scan (skip only the constant-fold
-      shortcut).
+    The category audit runs if and only if ``nodes`` has a ``category``
+    column; a caller whose nodes all share one category leaves the column
+    out, since no clique can then conflict.
     """
     from kgx_spark.utils import conditional_broadcast
 
@@ -608,70 +510,51 @@ def clique_merge(
     members = labels
     comp_priority = None
     fragment_filter = None
-    if "category" in nodes.columns and (audit_categories is not False or prefix_prioritization_map):
-        # layered fast path. Layer 1 (free): pairwise comparability of the
-        # category vocabulary, decided WITHOUT a scan — from the plan
-        # constant when the column is a foldable literal ("auto"). When
-        # every known pair is ancestor-comparable, no node and no clique
-        # can conflict and the audit is skipped entirely (borrowed anchors
-        # are copies of member anchors, so they can never introduce a
-        # conflict on their own). Only decisive when no ppm is given — ppm
-        # requires per-clique categories regardless. Data-driven category
-        # columns fall through to layer 2 directly: its member-restricted
-        # stats scan subsumes the old whole-frame vocabulary collect, so
-        # layers 1+2 cost ONE pass over the node lineage, not two.
-        no_conflict_proven = False
-        if audit_categories == "auto" and not prefix_prioritization_map:
-            const_vocab = _literal_category_values(nodes)
-            no_conflict_proven = const_vocab is not None and _vocabulary_comparable(
-                const_vocab
-            )
-        need_audit = not no_conflict_proven
-        if need_audit:
-            # Layer 2: per-clique stats over ONE member-restricted scan;
-            # eviction can only fire in cliques with >1 distinct anchor or
-            # an invalid-biolink member.
-            ct = _closure_table(nodes.sparkSession)
-            member_cats = labels.join(
-                nodes.select("id", "category"), "id", "left"
-            ).localCheckpoint()
-            la = member_cats.select("id", "component").join(
-                category_anchors(member_cats.select("id", "category")), "id", "left"
-            ).join(F.broadcast(ct.select(F.col("category").alias("anchor"), "w")), "anchor", "left")
-            stats = la.groupBy("component").agg(
-                # min() skips null STRUCTS, so null anchors are guarded out
-                # (a bare struct(null, null) would sort before everything)
-                F.min(
-                    F.when(
-                        F.col("anchor").isNotNull(),
-                        F.struct((-F.col("w")).alias("nw"), F.col("anchor").alias("a")),
-                    )
+    if "category" in nodes.columns:
+        # Per-clique stats over ONE member-restricted scan; eviction can
+        # only fire in cliques with >1 distinct anchor or an invalid-biolink
+        # member.
+        ct = _closure_table(nodes.sparkSession)
+        member_cats = labels.join(
+            nodes.select("id", "category"), "id", "left"
+        ).localCheckpoint()
+        la = member_cats.select("id", "component").join(
+            category_anchors(member_cats.select("id", "category")), "id", "left"
+        ).join(F.broadcast(ct.select(F.col("category").alias("anchor"), "w")), "anchor", "left")
+        stats = la.groupBy("component").agg(
+            # min() skips null STRUCTS, so null anchors are guarded out
+            # (a bare struct(null, null) would sort before everything)
+            F.min(
+                F.when(
+                    F.col("anchor").isNotNull(),
+                    F.struct((-F.col("w")).alias("nw"), F.col("anchor").alias("a")),
                 )
-                .getField("a")
-                .alias("clique_category"),
-                F.count_distinct(F.col("anchor")).alias("_n_anchor"),
-                F.max(F.coalesce("invalid_biolink", F.lit(False))).alias("_any_invalid"),
             )
-            if prefix_prioritization_map:
-                ppm = F.create_map(
-                    *[
-                        F.lit(x)
-                        for cat, pri in sorted(prefix_prioritization_map.items())
-                        for x in (cat, F.array(*[F.lit(p) for p in pri]))
-                    ]
-                )
-                stats = stats.localCheckpoint()
-                comp_priority = stats.select(
-                    "component", F.element_at(ppm, F.col("clique_category")).alias("_priority")
-                )
-            cand = (
-                stats.where((F.col("_n_anchor") > 1) | F.col("_any_invalid"))
-                .select("component", "clique_category")
-                .localCheckpoint()
+            .getField("a")
+            .alias("clique_category"),
+            F.count_distinct(F.col("anchor")).alias("_n_anchor"),
+            F.max(F.coalesce("invalid_biolink", F.lit(False))).alias("_any_invalid"),
+        )
+        if prefix_prioritization_map:
+            ppm = F.create_map(
+                *[
+                    F.lit(x)
+                    for cat, pri in sorted(prefix_prioritization_map.items())
+                    for x in (cat, F.array(*[F.lit(p) for p in pri]))
+                ]
             )
-        if need_audit and not cand.isEmpty():
-            # Layer 3: full audit — with neighbor-borrowed anchors — over
-            # the candidate cliques only.
+            stats = stats.localCheckpoint()
+            comp_priority = stats.select(
+                "component", F.element_at(ppm, F.col("clique_category")).alias("_priority")
+            )
+        cand = (
+            stats.where((F.col("_n_anchor") > 1) | F.col("_any_invalid"))
+            .select("component", "clique_category")
+            .localCheckpoint()
+        )
+        if not cand.isEmpty():
+            # Full audit — with neighbor-borrowed anchors — over the
+            # candidate cliques only.
             pairs = pairs.localCheckpoint()
             cand_members = member_cats.join(
                 conditional_broadcast(cand.select("component")), "component", "left_semi"
@@ -754,8 +637,6 @@ def clique_merge(
     # makes it node-scale — broadcast only when provably small (round-1
     # judge finding #3); checkpointed above so its three consumers and the
     # size probe don't re-run the election window.
-    from kgx_spark.utils import conditional_broadcast
-
     b = conditional_broadcast(mapping)
     e = (
         edges.join(b.withColumnRenamed("id", "subject").withColumnRenamed("leader", "_subj_leader"),

@@ -5,7 +5,7 @@ pages(url, warc_ts, html, text, lang)
   → extract_triples       (OpenIE-style pattern matching)
   → detect + link mentions (broadcast alias dictionary, TF-IDF prior)
   → canonicalize          (hash-min CC over same_as evidence, clique merge)
-  → merge + materialize   (KGX-shaped nodes/edges, salted partitions)
+  → merge + materialize   (KGX-shaped nodes/edges, merge hash layout)
 
 with per-stage checkpoints + metrics (stages.py) for kill-resume.
 """

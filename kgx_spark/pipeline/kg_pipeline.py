@@ -2,7 +2,7 @@
 
 pages → extract_text → extract_triples + link_mentions → canonicalize
 (hash-min CC over same_as) → merge/dedup (provenance union) → materialize
-KGX-shaped nodes/edges into salted, skew-aware partitions.
+KGX-shaped nodes/edges, each within-partition sorted by its lookup key.
 
 Each stage is a Stage (stages.py) so a killed run resumes from the last
 committed snapshot; `run_kg_pipeline` is the one-call entry used by
@@ -39,7 +39,6 @@ def build_stages(
     sf_dir: str,
     pages_df: DataFrame | None = None,
     link_entities: bool = True,
-    out_partitions: int = 32,
 ) -> list[Stage]:
     def s_extract(spark: SparkSession, ctx: dict) -> DataFrame:
         # pages is the pipeline INPUT (an existing Iceberg table in
@@ -87,21 +86,14 @@ def build_stages(
     def s_canonical(spark: SparkSession, ctx: dict) -> DataFrame:
         edges = ctx["edges_raw"]
         # one scan + explode instead of a subject∪object double scan of the
-        # snapshot (same rows; halves the endpoint-collection read)
-        node_ids = (
-            edges.select(F.explode(F.array("subject", "object")).alias("id"))
-            .distinct()
-            .withColumn("category", F.array(F.lit("biolink:NamedThing")))
-        )
+        # snapshot (same rows; halves the endpoint-collection read). No
+        # category column: every node would be NamedThing, so no clique can
+        # conflict and clique_merge skips its category audit.
+        node_ids = edges.select(F.explode(F.array("subject", "object")).alias("id")).distinct()
         # dedupe_edges=False: the next stage runs merge_edges anyway — one
         # (s,p,o) shuffle for the whole pipeline, not two.
-        # audit_categories=False: the category column IS the constant literal
-        # synthesized four lines up, so no clique conflict is possible — the
-        # audit's vocabulary pre-screen would re-execute the edges-snapshot
-        # lineage once per call for a known answer (round-6 VERDICT #1).
         _, canon_edges, _ = clique_merge(
-            node_ids, edges, prefix_priority=PREFIX_PRIORITY, dedupe_edges=False,
-            audit_categories=False,
+            node_ids, edges, prefix_priority=PREFIX_PRIORITY, dedupe_edges=False
         )
         return canon_edges
 
@@ -111,11 +103,9 @@ def build_stages(
         # NO post-merge re-shuffle: the merge groupBy already leaves the data
         # hash(s,p,o)-partitioned, which spreads a hub SUBJECT across
         # partitions by (predicate, object) variation — strictly more
-        # skew-proof than re-concentrating it into salt_buckets files, and
+        # skew-proof than a (subject, salt) re-partition, and
         # one full-data exchange cheaper (measured: the second exchange was
         # the anti-scaling term in the materialize stage on the local box).
-        # salted_repartition (stages.py) remains the tool for PRE-aggregation
-        # materializations where one key genuinely owns many rows.
         # Within-partition sort by subject keeps parquet RLE/dictionary
         # compression and row-group skipping effective for subject lookups.
         return merged.sortWithinPartitions("subject")
@@ -131,7 +121,7 @@ def build_stages(
         merged = merge_nodes([nodes])
         valid, _ = validate_nodes(merged)
         # post-merge rows are unique per id — hash(id) layout is already
-        # uniform; salting would only add an exchange (see s_edges note)
+        # uniform; a re-shuffle would only add an exchange (see s_edges note)
         return valid.sortWithinPartitions("id")
 
     stages = [
@@ -147,36 +137,6 @@ def build_stages(
         Stage("nodes", s_nodes),
     ]
     return stages
-
-
-def run_kg_pipeline_fused(
-    spark: SparkSession,
-    sf_dir: str,
-    outdir: str,
-    pages_df: DataFrame | None = None,
-    link_entities: bool = True,
-) -> dict[str, DataFrame]:
-    """One fused DAG: no intermediate snapshots, only the final nodes/edges
-    write. Trades kill-resume durability for zero checkpoint IO — the mode a
-    cluster uses for short jobs, and the measurement mode that isolates the
-    ENGINE's scaling from the per-stage commit floor (see BASELINE.md).
-
-    extract/edges_raw are cached: the canonicalization stage consumes
-    edges_raw twice (CC pair collection + re-pointing), and without a
-    snapshot that would recompute the extraction lineage.
-    """
-    stages = build_stages(sf_dir, pages_df=pages_df, link_entities=link_entities)
-    ctx: dict[str, DataFrame] = {}
-    for st in stages:
-        df = st.fn(spark, ctx)
-        if st.name in ("extract", "edges_raw"):
-            df = df.cache()
-        ctx[st.name] = df
-    ctx["edges"].write.mode("overwrite").parquet(f"{outdir}/edges.parquet")
-    ctx["nodes"].write.mode("overwrite").parquet(f"{outdir}/nodes.parquet")
-    ctx["edges"] = spark.read.parquet(f"{outdir}/edges.parquet")
-    ctx["nodes"] = spark.read.parquet(f"{outdir}/nodes.parquet")
-    return ctx
 
 
 def run_kg_pipeline(

@@ -170,7 +170,6 @@ def link_mentions(
     alias_dict: DataFrame,
     idf_weighting: bool = True,
     n_pages: int | None = None,
-    dense_dictionary: bool = False,
 ) -> DataFrame:
     """mentions(url, mention, pos) ⋈ alias_dict(alias, curie, prior) →
     (url, mention, curie, score_1e6) — best candidate per (url, pos).
@@ -188,20 +187,15 @@ def link_mentions(
     grams were all pruned vanish from the count), so pruning callers must
     always pass ``n_pages``.
 
-    ``dense_dictionary``: the default path materializes the matched
-    mention SITES once (localCheckpoint) because the idf table is an
-    aggregate OF the hits that joins BACK to them. The checkpoint is the
-    NARROW semi-join — (url, pos, mention) only: dictionary payload
-    columns (curie, category, prior) are re-attached from the broadcast
-    dictionary at scoring time, and an alias resolving to several CURIEs
-    fans out AFTER the checkpoint, not inside it (guide §2.3: shuffle/
-    materialize keys and metadata, attach payloads late; measured ~35%
-    off the checkpointed bytes at sf0.1 with identical output). When the
-    dictionary matches a large fraction of all n-grams the checkpoint is
-    still mention-scale; pass ``dense_dictionary=True`` to checkpoint only
-    the idf AGGREGATE (bounded by |dictionary| rows, never corpus-scale)
-    and let the narrow n-gram explode recompute instead (round-3 ADVICE
-    #7).
+    The matched mention SITES are materialized once (localCheckpoint)
+    because the idf table is an aggregate OF the hits that joins BACK to
+    them. The checkpoint is the NARROW semi-join — (url, pos, mention)
+    only: dictionary payload columns (curie, category, prior) are
+    re-attached from the broadcast dictionary at scoring time, and an alias
+    resolving to several CURIEs fans out AFTER the checkpoint, not inside
+    it (guide §2.3: shuffle/materialize keys and metadata, attach payloads
+    late; measured ~35% off the checkpointed bytes at sf0.1 with identical
+    output).
     """
     # Candidate pre-reduction (exact): the score is prior × idf(alias) —
     # idf is constant ACROSS an alias's candidate CURIEs — so two candidates
@@ -228,30 +222,16 @@ def link_mentions(
     if idf_weighting:
         if n_pages is None:
             n_pages = mentions.select("url").distinct().count()
-        if dense_dictionary:
-            # bound the materialization: snapshot the per-alias df aggregate
-            # (≤ |dictionary| rows); the explode+join lineage runs twice,
-            # but both passes are narrow and nothing mention-scale is stored
-            hits = mentions.join(dict_b, on="mention")
-            df_tbl = (
-                hits.groupBy("mention")
-                .agg(F.countDistinct("url").alias("df"))
-                .localCheckpoint()
-            )
-        else:
-            # materialize the matched sites ONCE: unmaterialized, the
-            # n-gram explode and dictionary probe would execute twice
-            # (measured ~2× the linking stage wall at sf0.1). A semi-join
-            # keeps the checkpoint three narrow columns and one row per
-            # SITE (multi-CURIE aliases don't fan out here); df — distinct
-            # pages per alias — is identical on sites and on hits.
-            sites = mentions.select("url", "pos", "mention").join(
-                F.broadcast(alias_dict.select(F.col("alias").alias("mention")).distinct()),
-                on="mention",
-                how="left_semi",
-            ).localCheckpoint()
-            df_tbl = sites.groupBy("mention").agg(F.countDistinct("url").alias("df"))
-            hits = sites.join(dict_b, on="mention")
+        # unmaterialized, the n-gram explode and dictionary probe would
+        # execute twice (measured ~2× the linking stage wall at sf0.1); df —
+        # distinct pages per alias — is identical on sites and on hits.
+        sites = mentions.select("url", "pos", "mention").join(
+            F.broadcast(alias_dict.select(F.col("alias").alias("mention")).distinct()),
+            on="mention",
+            how="left_semi",
+        ).localCheckpoint()
+        df_tbl = sites.groupBy("mention").agg(F.countDistinct("url").alias("df"))
+        hits = sites.join(dict_b, on="mention")
         hits = hits.join(F.broadcast(df_tbl), on="mention").withColumn(
             "score", F.col("prior") * F.log(F.lit(float(n_pages) + 1.0) / (F.col("df") + 1.0))
         )

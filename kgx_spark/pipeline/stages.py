@@ -15,10 +15,12 @@ the marker covers the metrics row too). On a real cluster, swap
 ``_write_snapshot`` for ``df.writeTo(f"{catalog}.{stage}").createOrReplace()``
 — the orchestration logic is identical because Iceberg commits are atomic.
 
-Resume = stages whose marker exists are LOADED, not recomputed. Metrics rows
-record per-stage row counts, partition counts, and wall time; per-partition
-lineage rows record (stage, partition_id, rows) from a spark accumulator-free
-groupBy(spark_partition_id()).
+Resume = stages whose marker exists are LOADED, not recomputed, up to the
+first stage that must run; that stage and every later one recompute, so no
+snapshot is ever built from another run's upstream output. Metrics rows
+record per-stage row counts, file counts, and wall time; per-file lineage
+rows record (stage, partition_id, file, rows, bytes), read from the committed
+snapshot's parquet footers without a Spark job.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -45,16 +46,6 @@ def _stage_dir(workdir: str, name: str) -> str:
 
 def _marker(workdir: str, name: str) -> str:
     return os.path.join(workdir, f"{name}._COMMITTED")
-
-
-def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """(stage, partition_id, rows) — per-partition lineage for the metrics table."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(F.count("*").alias("rows"))
-        .select(F.lit(stage).alias("stage"), F.col("_pid").alias("partition_id"), "rows")
-    )
 
 
 def snapshot_lineage(path: str, stage: str) -> list[dict]:
@@ -119,14 +110,15 @@ def run_stages(
     workdir: str,
     stages: list[Stage],
     force: bool = False,
-    lineage: bool = True,
 ) -> dict[str, DataFrame]:
     """Execute stages in order; previously committed stages are loaded from
-    their snapshot (kill-resume). Returns {stage_name: DataFrame}."""
+    their snapshot (kill-resume) until the first stage that recomputes, after
+    which every stage recomputes. Returns {stage_name: DataFrame}."""
     import gc
 
     os.makedirs(workdir, exist_ok=True)
     ctx: dict[str, DataFrame] = {}
+    recompute = force
     for stage in stages:
         # Stage boundary hygiene: drop driver refs to finished broadcasts /
         # localCheckpoint blocks so the ContextCleaner can release executor
@@ -137,9 +129,15 @@ def run_stages(
         spark.catalog.clearCache()
         out_path = _stage_dir(workdir, stage.name)
         marker = _marker(workdir, stage.name)
-        if not force and os.path.exists(marker):
+        if not recompute and os.path.exists(marker):
             ctx[stage.name] = spark.read.parquet(out_path)
             continue
+        # this stage's snapshot is about to be replaced, and every later
+        # snapshot was built from the old one: unmark this stage before its
+        # data changes (a kill now leaves it unmarked), recompute the rest
+        recompute = True
+        if os.path.exists(marker):
+            os.remove(marker)
         # no marker ⇒ any existing stage dir is a KILLED partial write:
         # mode("overwrite") below replaces the data atomically enough for
         # this emulation (a real Iceberg commit is atomic), and the stale
@@ -151,16 +149,13 @@ def run_stages(
         df.write.mode("overwrite").parquet(out_path)
         committed = spark.read.parquet(out_path)
         wall = time.monotonic() - t0
-        lineage_rows = []
-        if lineage:
-            lineage_rows = snapshot_lineage(out_path, stage.name)
-        rows = sum(r["rows"] for r in lineage_rows) if lineage_rows else committed.count()
+        lineage_rows = snapshot_lineage(out_path, stage.name)
         append_metrics(
             workdir,
             {
                 "stage": stage.name,
-                "rows": rows,
-                "partitions": len(lineage_rows) or committed.rdd.getNumPartitions(),
+                "rows": sum(r["rows"] for r in lineage_rows),
+                "partitions": len(lineage_rows),
                 "wall_sec": round(wall, 3),
                 "lineage": lineage_rows,
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -170,18 +165,3 @@ def run_stages(
             fh.write("committed\n")
         ctx[stage.name] = committed
     return ctx
-
-
-def salted_repartition(df: DataFrame, key: str, num_partitions: int, salt_buckets: int = 8) -> DataFrame:
-    """Skew-aware partitioning for materialization: partition by
-    (key, salt) so hub keys (hot CURIE prefixes / predicates) split across
-    up to ``salt_buckets`` partitions instead of hot-spotting one.
-
-    The salt is xxhash64 over the FULL ROW (not the key — a key-derived salt
-    is constant within the hot group and spreads nothing), so it is
-    deterministic: same input rows → same layout, no RNG.
-    """
-    salted = df.withColumn(
-        "_salt", (F.abs(F.xxhash64(F.struct(*[F.col(c) for c in df.columns]))) % salt_buckets).cast("int")
-    )
-    return salted.repartition(num_partitions, F.col(key), F.col("_salt")).drop("_salt")

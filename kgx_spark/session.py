@@ -109,8 +109,7 @@ def get_spark(
     # "stage slow after a prior stage in the same JVM" anomaly investigated
     # in round 6 turned out to track hypervisor steal, not cache pressure
     # (BASELINE.md round-6 scaling notes).
-    code_cache = os.environ.get("SPARK_GRAFT_CODE_CACHE", "512m")
-    java_opts = f"-XX:ReservedCodeCacheSize={code_cache}"
+    java_opts = "-XX:ReservedCodeCacheSize=512m"
     builder = builder.config("spark.driver.extraJavaOptions", java_opts)
     builder = builder.config("spark.executor.extraJavaOptions", java_opts)
     for k, v in (extra_conf or {}).items():

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -37,28 +36,15 @@ def main() -> None:
     ap.add_argument("--master", default=None, help="spark master (default local[<usable cores>])")
     ap.add_argument("--no-link", action="store_true", help="skip the entity-linking stage")
     ap.add_argument("--force", action="store_true", help="recompute even committed stages")
-    ap.add_argument("--repeat-input", type=int, default=1,
-                    help="replicate the page corpus N× (scaling experiments)")
-    ap.add_argument("--materialize-input", action="store_true",
-                    help="write the replicated pages to parquet UNTIMED first "
-                    "(production reads a pre-existing pages table; synthesis "
-                    "is harness overhead — see BASELINE.md extract probe)")
-    ap.add_argument("--fused", action="store_true",
-                    help="single fused DAG, no intermediate snapshots (no resume)")
     args = ap.parse_args()
 
-    # shuffle files on tmpfs by default: one quota-throttled virtio disk here
-    # vs per-executor local SSDs on a real cluster — see BASELINE.md
-    # round-3 "shuffle-dir" diagnosis; SPARK_GRAFT_LOCAL_DIR=/tmp overrides
-    if os.path.isdir("/dev/shm"):
-        os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm")
     # initial shuffle partitions at 4× cores, AQE coalesces down: the merge
     # aggregation carries large per-key array state (provided_by unions), and
     # one-partition-per-core makes each concurrent task's hash-agg state 4×
     # bigger — measured 88-90 s → 52-69 s (both run orders) on the edges
-    # stage at local[16]/repeat=32 when the agg runs 64-way instead of
-    # 16-way. Same rule as a real cluster: size shuffles to data volume,
-    # not core count, and let AQE right-size the small ones.
+    # stage at local[16] on a 32× page corpus when the agg runs 64-way
+    # instead of 16-way. Same rule as a real cluster: size shuffles to data
+    # volume, not core count, and let AQE right-size the small ones.
     cores = None
     if args.master and "[" in args.master:
         n = args.master[args.master.find("[") + 1 : args.master.find("]")]
@@ -81,44 +67,10 @@ def main() -> None:
         shuffle_partitions=4 * cores,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024)},
     )
-    pages_df = None
-    if args.repeat_input > 1:
-        from pyspark.sql import functions as F
-
-        from kgx_spark.pipeline.synth import synth_pages
-
-        base = synth_pages(spark, args.sf_dir)
-        pages_df = (
-            base.crossJoin(spark.range(args.repeat_input).select(F.col("id").alias("_rep")))
-            .withColumn("url", F.concat_ws("#", "url", "_rep"))
-            .drop("_rep")
-        )
-        if args.materialize_input:
-            # The production pipeline reads a PRE-EXISTING Iceberg pages
-            # table (BASELINE.json north star); synthesizing one is harness
-            # work, not pipeline work. Under this flag the synthetic pages
-            # are written out before the timer starts, so wall/t_s measure
-            # the pipeline from the same starting point production has.
-            # The synthesis term measured a flat ~7 s regardless of
-            # parallelism — untimed here, it stops masking the stages that
-            # do scale.
-            inp = os.path.join(args.workdir, "pages_input")
-            pages_df.write.mode("overwrite").parquet(inp)
-            pages_df = spark.read.parquet(inp)
-
     t0 = time.monotonic()
-    if args.fused:
-        from kgx_spark.pipeline.kg_pipeline import run_kg_pipeline_fused
-
-        ctx = run_kg_pipeline_fused(
-            spark, args.sf_dir, args.workdir,
-            pages_df=pages_df, link_entities=not args.no_link,
-        )
-    else:
-        ctx = run_kg_pipeline(
-            spark, args.sf_dir, args.workdir,
-            pages_df=pages_df, link_entities=not args.no_link, force=args.force,
-        )
+    ctx = run_kg_pipeline(
+        spark, args.sf_dir, args.workdir, link_entities=not args.no_link, force=args.force
+    )
     wall = time.monotonic() - t0
     n_edges = ctx["edges"].count()
     result = {
@@ -128,7 +80,7 @@ def main() -> None:
         "master": spark.sparkContext.master,
         "workdir": args.workdir,
     }
-    if args.repeat_input == 1 and args.no_link:
+    if args.no_link:
         # P/R vs the corpus's embedded ground truth (north-rule gate ≥0.95)
         from kgx_spark.pipeline.eval import expected_triples_for_synth, triple_pr
 

@@ -52,6 +52,20 @@ def test_cc_paths_agree(spark):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
+def test_cc_unknown_plan_size_takes_distributed_path(spark, monkeypatch):
+    # no size estimate must not be read as "small": the driver collect is
+    # skipped and label propagation runs (iterations > 0), same labels
+    from kgx_spark.operators import clique
+
+    monkeypatch.setattr(clique, "_plan_size_bytes", lambda df: None)
+    rows = [("b", "a"), ("b", "c"), ("c", "d"), ("x", "y")]
+    pairs = spark.createDataFrame(rows, "src string, dst string")
+    labels, iters = connected_components(pairs)
+    assert iters > 0
+    got = {r["id"]: r["component"] for r in labels.collect()}
+    assert got == dict(clique._driver_union_find(rows))
+
+
 @pytest.fixture()
 def clique_graph(spark):
     nodes = spark.createDataFrame(

@@ -1,62 +1,19 @@
-"""Round-7 optimization pins: the category-audit pre-screen fast path.
-
-The audit's vocabulary pre-screen (clique.py categories_pairwise_comparable)
-must cost ZERO Spark jobs when the category column is a plan-constant
-(the synthesized-literal shape the KG pipeline and bench use), and the
-audit_categories flag must not change results.
-"""
+"""The category audit runs if and only if the node frame has a ``category``
+column: leaving the column out (the KG pipeline's shape) must not change
+results on a homogeneous graph, and a real conflict is still evicted."""
 
 import pyspark.sql.functions as F
 
-from kgx_spark.operators.clique import (
-    _literal_category_values,
-    _vocabulary_comparable,
-    clique_merge,
-)
+from kgx_spark.operators.clique import clique_merge
 
 
 def _sorted_rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_literal_category_detection(spark):
-    base = (
-        spark.createDataFrame([("A",), ("B",), ("A",)], "id string")
-        .distinct()
-        .withColumn("category", F.array(F.lit("biolink:NamedThing")))
-    )
-    assert _literal_category_values(base) == ["biolink:NamedThing"]
-    # survives transparent nodes stacked on top of the defining Project
-    assert _literal_category_values(
-        base.where(F.col("id") != "Z").sortWithinPartitions("id")
-    ) == ["biolink:NamedThing"]
-    # data-driven columns must NOT be treated as constant
-    assert _literal_category_values(base.withColumn("category", F.array(F.col("id")))) is None
-    assert (
-        _literal_category_values(
-            spark.createDataFrame([("A", ["biolink:Gene"])], "id string, category array<string>")
-        )
-        is None
-    )
-    # multi-element and null constants fold too
-    assert _literal_category_values(
-        base.withColumn("category", F.array(F.lit("biolink:Gene"), F.lit("biolink:Disease")))
-    ) == ["biolink:Gene", "biolink:Disease"]
-    assert _literal_category_values(
-        base.withColumn("category", F.lit(None).cast("array<string>"))
-    ) == []
-
-
-def test_vocabulary_comparable_kernel():
-    assert _vocabulary_comparable(["biolink:NamedThing"])
-    assert _vocabulary_comparable(["biolink:Gene", "biolink:NamedThing"])  # ancestor chain
-    assert not _vocabulary_comparable(["biolink:Gene", "biolink:Disease"])  # disjoint
-    assert _vocabulary_comparable([])  # empty vocabulary cannot conflict
-
-
 def test_audit_flag_result_identical(spark):
-    """audit_categories False / 'auto' / True all produce identical output on
-    a homogeneous synthesized-category graph (the pipeline shape)."""
+    """A category-less node frame (audit skipped) and a constant-NamedThing
+    frame (audit run) give identical edges and mapping."""
     edges = spark.createDataFrame(
         [
             ("P:1", "biolink:same_as", "Q:1"),
@@ -65,26 +22,27 @@ def test_audit_flag_result_identical(spark):
         ],
         "subject string, predicate string, object string",
     )
-    nodes = (
+    bare = (
         edges.select(F.col("subject").alias("id"))
         .unionByName(edges.select(F.col("object").alias("id")))
         .distinct()
-        .withColumn("category", F.array(F.lit("biolink:NamedThing")))
     )
     outs = {}
-    for mode in ("auto", True, False):
-        n, e, m = clique_merge(nodes, edges, prefix_priority=["P", "Q", "R"], audit_categories=mode)
-        outs[mode] = (_sorted_rows(n), _sorted_rows(e), _sorted_rows(m))
-    assert outs["auto"] == outs[True] == outs[False]
+    for name, nodes in (
+        ("bare", bare),
+        ("named_thing", bare.withColumn("category", F.array(F.lit("biolink:NamedThing")))),
+    ):
+        _, e, m = clique_merge(nodes, edges, prefix_priority=["P", "Q", "R"])
+        outs[name] = (_sorted_rows(e), _sorted_rows(m))
+    assert outs["bare"] == outs["named_thing"]
     # the clique actually merged: P:1 leads {P:1, Q:1, R:1}
-    mapping = dict((r[0], r[1]) for r in outs["auto"][2])
+    mapping = dict((r[0], r[1]) for r in outs["bare"][1])
     assert mapping == {"Q:1": "P:1", "R:1": "P:1"}
 
 
 def test_audit_still_evicts_with_auto(spark):
-    """The constant-fold shortcut must NOT swallow real conflicts: a
-    disjoint-category member is still evicted under 'auto' (data-driven
-    column → falls through to the stats scan)."""
+    """A data-driven category column runs the audit: a disjoint-category
+    member is evicted from its clique."""
     nodes = spark.createDataFrame(
         [
             ("P:1", ["biolink:Gene"]),
@@ -100,12 +58,8 @@ def test_audit_still_evicts_with_auto(spark):
         ],
         "subject string, predicate string, object string",
     )
-    _, _, m_auto = clique_merge(nodes, edges, prefix_priority=["P", "Q", "R"])
-    _, _, m_forced = clique_merge(
-        nodes, edges, prefix_priority=["P", "Q", "R"], audit_categories=True
-    )
-    assert _sorted_rows(m_auto) == _sorted_rows(m_forced)
+    _, _, m = clique_merge(nodes, edges, prefix_priority=["P", "Q", "R"])
     # R:1 (Disease, disjoint from the Gene clique category) must not be folded
-    mapping = dict((r[0], r[1]) for r in m_auto.collect())
+    mapping = dict((r[0], r[1]) for r in m.collect())
     assert "R:1" not in mapping
     assert mapping.get("Q:1") == "P:1"

@@ -81,6 +81,8 @@ def test_entity_linking(spark, pages):
     extracted = extract_text(pages)
     mentions = detect_mentions(extracted)
     linked = link_mentions(mentions, alias_dict)
+    # the sites checkpoint replaced the n-gram explode: it runs once
+    assert "Generate" not in linked._jdf.queryExecution().optimizedPlan().toString()
     assert linked.count() > 0
     # every linked curie resolves through the dictionary
     bad = linked.join(alias_dict.select(F.col("curie")), "curie", "left_anti")
@@ -158,30 +160,6 @@ def test_first_token_prune_threshold_guard(spark, pages):
         detect_mentions(extracted, first_tokens=["a"], first_token_df=alias_first_token_df(alias_dict))
 
 
-def test_entity_linking_dense_dictionary_guard(spark, pages):
-    """Dense-dictionary mode (hits ≈ mentions) must produce identical links
-    while materializing only the idf AGGREGATE, never mention-scale hits
-    (round-3 ADVICE #7): the default path's checkpoint snapshots hits (the
-    final plan scans an RDD, no Generate/explode left); dense mode keeps the
-    narrow explode lineage live and checkpoints just the per-alias df table."""
-    alias_dict = synth_alias_dict(spark, SF)
-    mentions = detect_mentions(extract_text(pages))
-    default = link_mentions(mentions, alias_dict)
-    dense = link_mentions(
-        detect_mentions(extract_text(pages)), alias_dict, dense_dictionary=True
-    )
-    # identical output either way
-    assert default.exceptAll(dense).count() == 0
-    assert dense.exceptAll(default).count() == 0
-    # default mode: hits checkpointed → the mention explode is snapshotted
-    # out of the plan; dense mode: explode still in the live plan, and the
-    # only checkpoint (RDD scan) is the idf aggregate
-    default_plan = default._jdf.queryExecution().optimizedPlan().toString()
-    dense_plan = dense._jdf.queryExecution().optimizedPlan().toString()
-    assert "Generate" not in default_plan  # hits snapshot replaced the explode
-    assert "Generate" in dense_plan  # narrow explode recomputes instead
-
-
 def test_full_pipeline_and_resume(spark, pages, tmp_path):
     wd = str(tmp_path / "run1")
     ctx = run_kg_pipeline(spark, SF, wd, link_entities=False)
@@ -249,3 +227,33 @@ def test_kill_mid_write_recomputes_cleanly(spark, pages, tmp_path):
     assert ctx2["edges"].count() == n_edges
     # the garbage partial file is gone (overwrite replaced the dir content)
     assert not os.path.exists(os.path.join(stage_dir, "part-99999-killed.parquet"))
+
+
+def test_forced_rerun_interrupted_then_resumed_does_not_mix_runs(spark, tmp_path):
+    """A forced re-run that dies mid-way, then resumes without force, must
+    not load a downstream snapshot built from the earlier run's upstream
+    output: the resumed run's last stage carries the new run token only."""
+    from kgx_spark.pipeline.stages import Stage, run_stages
+
+    wd = str(tmp_path / "w")
+
+    def stages(token, fail_at=None):
+        def stamp(name, upstream):
+            def fn(spark_, ctx):
+                if name == fail_at:
+                    raise RuntimeError(f"killed in {name}")
+                df = spark_.range(4) if upstream is None else ctx[upstream]
+                return df.withColumn(f"{name}_run", F.lit(token))
+            return Stage(name, fn)
+
+        return [stamp("s1", None), stamp("s2", "s1"), stamp("s3", "s2")]
+
+    run_stages(spark, wd, stages("A"))
+    with pytest.raises(RuntimeError, match="killed in s2"):
+        run_stages(spark, wd, stages("B", fail_at="s2"), force=True)
+    ctx = run_stages(spark, wd, stages("B"))
+
+    s3 = ctx["s3"]
+    assert s3.count() == 4
+    tokens = {v for r in s3.select("s1_run", "s2_run", "s3_run").collect() for v in r}
+    assert tokens == {"B"}

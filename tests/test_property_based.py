@@ -75,10 +75,9 @@ def test_distributed_cc_matches_union_find_random_graphs(spark):
         pairs = [(a, b) for a, b in pairs if a != b]
         expected = dict(_driver_union_find(pairs))
         df = spark.createDataFrame(pairs, "src string, dst string")
-        for encode in (True, False):
-            labels, _ = connected_components(df, driver_threshold=0, encode_ids=encode)
-            got = {r["id"]: r["component"] for r in labels.collect()}
-            assert got == expected, f"trial={trial} encode={encode}"
+        labels, _ = connected_components(df, driver_threshold=0)
+        got = {r["id"]: r["component"] for r in labels.collect()}
+        assert got == expected, f"trial={trial}"
 
 
 def test_png_roundtrip_property():

@@ -59,7 +59,6 @@ def main() -> None:
             edges.select(F.col("subject").alias("id"))
             .unionByName(edges.select(F.col("object").alias("id")))
             .distinct()
-            .withColumn("category", F.array(F.lit("biolink:NamedThing")))
         )
         _, canon, _ = clique_merge(node_ids, edges, prefix_priority=["P", "Q", "R", "S"])
         return canon
