@@ -437,11 +437,10 @@ def q_entity_link(spark: SparkSession, sf: str) -> DataFrame:
     from kgx_spark.pipeline.synth import synth_alias_dict
 
     raw_pages = synth_pages(spark, sf)
-    # page count from the raw pages table (cheap) — NOT re-derived from the
-    # exploded mentions (round-1 judge finding #4); every synthetic page has
-    # non-empty text, so the counts coincide. Counting is also REQUIRED
-    # under first-token pruning (the mentions-derived fallback would lose
-    # pages whose grams were all pruned).
+    # page count from the raw pages table (cheap) — NOT from the exploded
+    # mentions, which would run the explode twice and, under first-token
+    # pruning, lose pages whose grams were all pruned; every synthetic page
+    # has non-empty text, so the two tables' counts coincide.
     n_pages = raw_pages.count()
     pages = extract_text(raw_pages)
     # First-token prune: result-identical (measured 27.2→15.2 s min at

@@ -99,37 +99,12 @@ KNOWN_MIXINS: frozenset[str] = frozenset(_B + m for m in MIXINS)
 KNOWN_PREDICATES: frozenset[str] = frozenset(PREDICATE_ANCESTORS)
 
 
-def ancestors_table(spark: SparkSession) -> DataFrame:
-    """(category, ancestor, distance) rows — broadcast side for closures."""
-    rows = []
-    for cat, ancs in CATEGORY_ANCESTORS.items():
-        for d, a in enumerate(ancs, start=1):
-            rows.append((cat, a, d))
-    return spark.createDataFrame(rows or [("", "", 0)], "category string, ancestor string, distance int")
-
-
 def specificity_table(spark: SparkSession) -> DataFrame:
     """(category, depth) — depth = ancestor count (mixins included); higher =
     more specific. Used for clique category election (clique_merge.py:474-499
     sorts the category union by ancestor count)."""
     rows = [(cat, len(ancs)) for cat, ancs in CATEGORY_ANCESTORS.items()]
     return spark.createDataFrame(rows, "category string, depth int")
-
-
-def predicate_table(spark: SparkSession) -> DataFrame:
-    """(predicate, ancestor, distance) rows for predicate closures."""
-    rows = []
-    for pred, ancs in PREDICATE_ANCESTORS.items():
-        for d, a in enumerate(ancs, start=1):
-            rows.append((pred, a, d))
-    return spark.createDataFrame(rows, "predicate string, ancestor string, distance int")
-
-
-def slot_table(spark: SparkSession) -> DataFrame:
-    """(slot, typeof, multivalued) — the validator type battery's broadcast
-    side (reference gets this from bmt element metadata, validator.py:402-458)."""
-    rows = [(slot, t, mv) for slot, (t, mv) in SLOT_TYPES.items()]
-    return spark.createDataFrame(rows, "slot string, typeof string, multivalued boolean")
 
 
 def prefix_priority(category: str) -> list[str]:

@@ -464,12 +464,3 @@ def error_report(errors: DataFrame) -> DataFrame:
         F.count("*").alias("count"),
     )
 
-
-def report_dict(errors: DataFrame) -> dict:
-    """Driver-side nested report: [level][error_type][message] → sorted
-    entities — the exact JSON shape the reference's ErrorDetecting.get_errors
-    / write_report emits (kgx/error_detection.py:48-174)."""
-    out: dict = {}
-    for r in error_report(errors).collect():
-        out.setdefault(r["level"], {}).setdefault(r["error_type"], {})[r["message"]] = list(r["entities"])
-    return out

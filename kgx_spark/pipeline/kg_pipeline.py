@@ -61,8 +61,8 @@ def build_stages(
     def s_linked(spark: SparkSession, ctx: dict) -> DataFrame:
         alias_dict = synth_alias_dict(spark, sf_dir)
         # page count from the (snapshotted/cached, html-free) extract table —
-        # NOT derived inside link_mentions, which would execute the n-gram
-        # explode twice (once for the count, once for the linking plan).
+        # NOT from the mentions, which would execute the n-gram explode
+        # twice (once for the count, once for the linking plan).
         n_pages = ctx["extract"].count()
         # first-token prune: result-identical (an n-gram whose first token
         # starts no alias can't survive the dictionary join) and cuts the

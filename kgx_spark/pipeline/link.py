@@ -29,15 +29,18 @@ def tokens(col: Column) -> Column:
 # held on the driver) — switch to a broadcast semi-join (round-5 VERDICT #4).
 MAX_INSET_FIRST_TOKENS = 50_000
 
+# mentions are the 1..MAX_NGRAM word n-grams of a page
+MAX_NGRAM = 3
 
-def alias_first_token_df(alias_dict: DataFrame, alias_col: str = "alias") -> DataFrame:
+
+def alias_first_token_df(alias_dict: DataFrame) -> DataFrame:
     """Distinct first tokens of the alias surface forms as a single-column
     DataFrame (``first_token``) — never collected, so it stays valid for
     dictionaries far past broadcast-list size."""
     return (
         alias_dict.select(
             F.element_at(
-                F.split(F.trim(F.lower(F.col(alias_col))), r"\s+"), 1
+                F.split(F.trim(F.lower(F.col("alias"))), r"\s+"), 1
             ).alias("first_token")
         )
         .where(F.col("first_token").isNotNull() & (F.col("first_token") != ""))
@@ -45,21 +48,7 @@ def alias_first_token_df(alias_dict: DataFrame, alias_col: str = "alias") -> Dat
     )
 
 
-def alias_first_tokens(alias_dict: DataFrame, alias_col: str = "alias") -> list[str]:
-    """Distinct first tokens collected driver-side (bounded by the
-    dictionary, which is broadcast-sized by contract). Feed to
-    detect_mentions(first_tokens=...) to prune n-gram starts that can never
-    match any alias. For dictionaries whose first-token set may exceed
-    MAX_INSET_FIRST_TOKENS, use first_token_prune() instead — it picks the
-    plan-safe form automatically."""
-    return [r["first_token"] for r in alias_first_token_df(alias_dict, alias_col).collect()]
-
-
-def first_token_prune(
-    alias_dict: DataFrame,
-    alias_col: str = "alias",
-    max_inset: int = MAX_INSET_FIRST_TOKENS,
-) -> dict:
+def first_token_prune(alias_dict: DataFrame, max_inset: int = MAX_INSET_FIRST_TOKENS) -> dict:
     """Pick the plan-safe first-token prune form for this dictionary:
     kwargs for detect_mentions — ``{"first_tokens": [...]}`` (in-array InSet
     probe, cheapest) when the distinct first-token set is plan-embeddable,
@@ -68,7 +57,7 @@ def first_token_prune(
     max_inset+1 rows, never the full set). ONE job either way — the probe
     collect IS the token list when it fits (the previous
     count-then-collect pair scanned the dictionary twice)."""
-    df = alias_first_token_df(alias_dict, alias_col)
+    df = alias_first_token_df(alias_dict)
     rows = df.limit(max_inset + 1).collect()
     if len(rows) > max_inset:
         return {"first_token_df": df}
@@ -77,13 +66,12 @@ def first_token_prune(
 
 def detect_mentions(
     pages: DataFrame,
-    max_ngram: int = 3,
-    text_col: str = "extracted_text",
     first_tokens: list[str] | None = None,
     first_token_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(url, mention, pos) candidate surface forms: all 1..max_ngram word
-    n-grams, lowercased; ``pos`` is the starting token index.
+    """(url, mention, pos) candidate surface forms of ``extracted_text``:
+    all 1..MAX_NGRAM word n-grams, lowercased; ``pos`` is the starting
+    token index.
 
     SHUFFLE-FREE: n-grams are built inside the token ARRAY with
     transform+element_at before any explode, so the whole stage is a narrow
@@ -92,7 +80,7 @@ def detect_mentions(
     token stream, per n-gram length; at 10^12 documents that shuffle IS the
     job. Same output, zero exchanges.)
 
-    ``first_tokens`` (from alias_first_tokens) prunes INSIDE the array,
+    ``first_tokens`` (from first_token_prune) prunes INSIDE the array,
     before the explode: an n-gram whose first token is no alias's first
     token can never survive the downstream dictionary equality join, so
     dropping it early is result-identical while shrinking the exploded
@@ -115,12 +103,12 @@ def detect_mentions(
     concatenated BEFORE the single explode. (The previous design unioned
     one explode branch per n-gram length; each branch re-evaluated the full
     upstream lineage — the Arrow-batched html extraction appeared
-    ``max_ngram`` times as ArrowEvalPython nodes in the plan, tripling the
+    MAX_NGRAM times as ArrowEvalPython nodes in the plan, tripling the
     most expensive narrow stage. Positions are the in-array indices either
     way, so the output rows are identical.)"""
     if first_tokens is not None and first_token_df is not None:
         raise ValueError("pass first_tokens OR first_token_df, not both")
-    toks_col = tokens(F.lower(F.col(text_col)))
+    toks_col = tokens(F.lower(F.col("extracted_text")))
     base = pages.select("url", toks_col.alias("_toks"))
     t = F.col("_toks")
     # element i (0-based) → concat of tokens[i+1 .. i+n] (element_at is
@@ -146,7 +134,7 @@ def detect_mentions(
 
         return F.filter(F.transform(t, _slot), lambda s: s["mention"].isNotNull())
 
-    per_n = [_slots(n) for n in range(1, max_ngram + 1)]
+    per_n = [_slots(n) for n in range(1, MAX_NGRAM + 1)]
     out = base.select("url", F.explode(F.concat(*per_n)).alias("_g")).select(
         "url",
         F.col("_g.pos").alias("pos"),
@@ -168,24 +156,19 @@ def detect_mentions(
 def link_mentions(
     mentions: DataFrame,
     alias_dict: DataFrame,
-    idf_weighting: bool = True,
-    n_pages: int | None = None,
+    n_pages: int,
 ) -> DataFrame:
     """mentions(url, mention, pos) ⋈ alias_dict(alias, curie, prior) →
     (url, mention, curie, score_1e6) — best candidate per (url, pos).
 
     Score = prior × idf(alias); idf = ln(N_pages / pages-containing-alias),
     computed over the matched mentions themselves (TF-IDF candidate scoring
-    per BASELINE.json). Argmax per mention site via row_number — ties broken
-    by curie for determinism.
+    per BASELINE.json). Argmax per mention site via min_by — ties broken by
+    curie for determinism.
 
-    Pass ``n_pages`` (the corpus page count, known cheaply from the pages
-    table) — deriving it here would run the expensive n-gram explode once for
-    the count and AGAIN for the main plan (round-1 judge finding). The
-    fallback distinct-count is kept only for callers without a page count;
-    it is additionally WRONG under first-token-pruned mentions (pages whose
-    grams were all pruned vanish from the count), so pruning callers must
-    always pass ``n_pages``.
+    ``n_pages`` is the corpus page count, taken from the pages table.
+    Deriving it from ``mentions`` would run the n-gram explode twice and
+    miss the pages whose grams the first-token prune dropped.
 
     The matched mention SITES are materialized once (localCheckpoint)
     because the idf table is an aggregate OF the hits that joins BACK to
@@ -202,12 +185,12 @@ def link_mentions(
     # of one alias tie on score iff they tie on prior, and the site argmax's
     # tie-break is min curie. Keeping only the min-curie row per
     # (alias, prior) therefore retains, for every distinct score an alias
-    # can produce, exactly the row the full argmax would select — for any
-    # idf sign and for idf_weighting=False alike. This shrinks the
-    # candidate fan-out per mention from |curies-per-alias| to
-    # |distinct priors per alias| BEFORE the scoring join (~15× fewer rows
-    # through the argmax on the sf fixtures: 6.27M → ~0.4M at sf0.1), while
-    # df/idf come from mention SITES and are unaffected.
+    # can produce, exactly the row the full argmax would select, for any
+    # idf sign. This shrinks the candidate fan-out per mention from
+    # |curies-per-alias| to |distinct priors per alias| BEFORE the scoring
+    # join (~15× fewer rows through the argmax on the sf fixtures: 6.27M →
+    # ~0.4M at sf0.1), while df/idf come from mention SITES and are
+    # unaffected.
     cand_dict = (
         alias_dict.groupBy("alias", "prior")
         .agg(F.min_by(F.struct("curie", "category"), F.col("curie")).alias("_best"))
@@ -219,24 +202,19 @@ def link_mentions(
         )
     )
     dict_b = F.broadcast(cand_dict.withColumnRenamed("alias", "mention"))
-    if idf_weighting:
-        if n_pages is None:
-            n_pages = mentions.select("url").distinct().count()
-        # unmaterialized, the n-gram explode and dictionary probe would
-        # execute twice (measured ~2× the linking stage wall at sf0.1); df —
-        # distinct pages per alias — is identical on sites and on hits.
-        sites = mentions.select("url", "pos", "mention").join(
-            F.broadcast(alias_dict.select(F.col("alias").alias("mention")).distinct()),
-            on="mention",
-            how="left_semi",
-        ).localCheckpoint()
-        df_tbl = sites.groupBy("mention").agg(F.countDistinct("url").alias("df"))
-        hits = sites.join(dict_b, on="mention")
-        hits = hits.join(F.broadcast(df_tbl), on="mention").withColumn(
-            "score", F.col("prior") * F.log(F.lit(float(n_pages) + 1.0) / (F.col("df") + 1.0))
-        )
-    else:
-        hits = mentions.join(dict_b, on="mention").withColumn("score", F.col("prior"))
+    # unmaterialized, the n-gram explode and dictionary probe would execute
+    # twice (measured ~2× the linking stage wall at sf0.1); df — distinct
+    # pages per alias — is identical on sites and on hits.
+    sites = mentions.select("url", "pos", "mention").join(
+        F.broadcast(alias_dict.select(F.col("alias").alias("mention")).distinct()),
+        on="mention",
+        how="left_semi",
+    ).localCheckpoint()
+    df_tbl = sites.groupBy("mention").agg(F.countDistinct("url").alias("df"))
+    hits = sites.join(dict_b, on="mention")
+    hits = hits.join(F.broadcast(df_tbl), on="mention").withColumn(
+        "score", F.col("prior") * F.log(F.lit(float(n_pages) + 1.0) / (F.col("df") + 1.0))
+    )
     # argmax per mention site as a HASH AGGREGATION, not a window:
     # row_number().over(partitionBy(url,pos).orderBy(score desc, curie))
     # plans as Exchange + Sort over (url,pos,score,curie). min_by with key

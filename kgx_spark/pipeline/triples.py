@@ -45,13 +45,9 @@ def _pattern_regex() -> str:
     return f"({CURIE_TOKEN}) ({phrases}) (?=({CURIE_TOKEN}))"
 
 
-def extract_triples(
-    pages: DataFrame,
-    text_col: str = "extracted_text",
-    url_col: str = "url",
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """pages → raw triples(subject, predicate, object, provided_by[url]).
+def extract_triples(pages: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
+    """pages(url, extracted_text) → raw triples(subject, predicate, object,
+    provided_by[url]).
 
     Three regexp_extract_all group pulls per page (JVM, same compiled regex)
     zipped positionally, one explode, one predicate-map lookup. No shuffle
@@ -59,16 +55,16 @@ def extract_triples(
     to the triple rows (the streaming path carries ``warc_ts`` as the event
     time for watermark dedup); the default keeps the batch plan unchanged.
     """
-    rx = _pattern_regex()
+    rx, text = _pattern_regex(), F.col("extracted_text")
     pred_map = F.create_map(*[F.lit(x) for kv in sorted(RELATION_PATTERNS.items()) for x in kv])
     matches = pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         *[F.col(c) for c in carry_cols],
         F.explode(
             F.arrays_zip(
-                F.regexp_extract_all(F.col(text_col), F.lit(rx), F.lit(1)).alias("s"),
-                F.regexp_extract_all(F.col(text_col), F.lit(rx), F.lit(2)).alias("p"),
-                F.regexp_extract_all(F.col(text_col), F.lit(rx), F.lit(3)).alias("o"),
+                F.regexp_extract_all(text, F.lit(rx), F.lit(1)).alias("s"),
+                F.regexp_extract_all(text, F.lit(rx), F.lit(2)).alias("p"),
+                F.regexp_extract_all(text, F.lit(rx), F.lit(3)).alias("o"),
             )
         ).alias("m"),
     )
@@ -78,15 +74,4 @@ def extract_triples(
         F.col("m.o").alias("object"),
         F.array(F.col("url")).alias("provided_by"),
         *[F.col(c) for c in carry_cols],
-    )
-
-
-def split_sentences(pages: DataFrame, text_col: str = "extracted_text") -> DataFrame:
-    """url, sentence_id, sentence — batched sentence segmentation (split on
-    terminal punctuation; deterministic)."""
-    return pages.select(
-        "url",
-        F.posexplode(
-            F.filter(F.split(F.col(text_col), r"(?<=[.!?])\s+"), lambda s: F.length(s) > 0)
-        ).alias("sentence_id", "sentence"),
     )

@@ -94,9 +94,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Shuffle/spill directory: a cluster has many local SSDs; this sandbox has
-    # one slow virtio disk. SPARK_GRAFT_LOCAL_DIR=/dev/shm moves shuffle files
-    # to RAM for benchmarking (the 128 GiB box absorbs our shuffle volumes).
+    # Shuffle/spill directory: a cluster gives each executor local SSDs; a
+    # single host may have one slow disk. SPARK_GRAFT_LOCAL_DIR=/dev/shm moves
+    # shuffle files to RAM, which pays only when memory holds the shuffle
+    # volume beside the driver heap.
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)

@@ -56,21 +56,14 @@ PAGES_STREAM_SCHEMA = T.StructType(
 
 
 def stream_pages_to_triples(
-    spark: SparkSession,
-    landing_dir: str,
-    watermark: str = "1 hour",
-    schema: T.StructType | None = None,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, landing_dir: str, watermark: str = "1 hour"
 ) -> DataFrame:
     """→ streaming DataFrame of validated, watermark-deduped triples.
 
     Columns: subject, predicate, object, provided_by, warc_ts (event time).
     Callers attach a sink; ``run_triples_stream`` wires the parquet one.
     """
-    reader = spark.readStream.schema(schema or PAGES_STREAM_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.parquet(landing_dir)
+    pages = spark.readStream.schema(PAGES_STREAM_SCHEMA).parquet(landing_dir)
     text = extract_text(pages).select("url", "warc_ts", "extracted_text")
     triples = extract_triples(text, carry_cols=("warc_ts",))
     valid, _errors = validate_edges(triples)  # error stream: attach via foreachBatch
@@ -156,8 +149,11 @@ def stream_kg_update(
         else:
             merged = merge_edges([new])
         _swap_snapshot(merged, edges_dir)
-        with open(hwm_path, "w") as fh:
+        # write-then-rename: a kill mid-write must not leave a truncated
+        # high-water mark that every later update fails to parse
+        with open(hwm_path + ".tmp", "w") as fh:
             json.dump({"batch_id": batch_id}, fh)
+        os.replace(hwm_path + ".tmp", hwm_path)
 
     q = (
         stream_pages_to_triples(spark, landing_dir, watermark)

@@ -7,20 +7,24 @@ semantics): the streamed triple log matches batch distinct (s,p,o), a
 re-dropped page adds nothing, and the incrementally-merged edges snapshot
 matches the batch merge over the full corpus — including replay
 idempotence through the recorded batchId high-water mark and recovery from
-a snapshot swap cut short by a crash."""
+a snapshot swap or a high-water-mark write cut short by a crash."""
 
 import glob
+import json
 import os
 import shutil
+from types import SimpleNamespace
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from kgx_spark.operators.merge import merge_edges
 from kgx_spark.operators.validate import validate_edges
 from kgx_spark.pipeline.extract import extract_text
 from kgx_spark.pipeline.synth import synth_pages
 from kgx_spark.pipeline.triples import extract_triples
+from kgx_spark.streaming import kg_stream
 from kgx_spark.streaming.kg_stream import run_triples_stream, stream_kg_update
 
 SF = "/root/testdata/sf0.001"
@@ -143,3 +147,27 @@ def test_stream_kg_update_recovers_interrupted_swap(spark, tmp_path, crash_state
     assert got == _batch_spo(pages)
     assert not os.path.exists(edges + ".old")
 
+
+def test_stream_kg_update_survives_kill_mid_hwm_write(spark, tmp_path, monkeypatch):
+    """A kill while the high-water mark is being written must not wedge the
+    stream: the next update still reads the mark, re-runs the cut batch and
+    leaves the graph of both drops."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+
+    def torn_dump(obj, fh):
+        fh.write(json.dumps(obj)[:5])
+        raise OSError("killed mid-write")
+
+    _copy_drop(b_dir, landing, "dropB")
+    with monkeypatch.context() as m:
+        m.setattr(kg_stream, "json", SimpleNamespace(load=json.load, dump=torn_dump))
+        with pytest.raises(StreamingQueryException, match="killed mid-write"):
+            stream_kg_update(spark, landing, edges, ckpt)
+
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert _read_spo(spark, edges) == _batch_spo(pages)

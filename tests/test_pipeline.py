@@ -79,8 +79,9 @@ def test_extract_triples_matches_embedded_facts(spark, pages):
 def test_entity_linking(spark, pages):
     alias_dict = synth_alias_dict(spark, SF)
     extracted = extract_text(pages)
+    n_pages = extracted.count()
     mentions = detect_mentions(extracted)
-    linked = link_mentions(mentions, alias_dict)
+    linked = link_mentions(mentions, alias_dict, n_pages=n_pages)
     # the sites checkpoint replaced the n-gram explode: it runs once
     assert "Generate" not in linked._jdf.queryExecution().optimizedPlan().toString()
     assert linked.count() > 0
@@ -88,7 +89,7 @@ def test_entity_linking(spark, pages):
     bad = linked.join(alias_dict.select(F.col("curie")), "curie", "left_anti")
     assert bad.count() == 0
     # argmax determinism: one candidate per (url, mention site) — re-run equal
-    linked2 = link_mentions(detect_mentions(extracted), alias_dict)
+    linked2 = link_mentions(detect_mentions(extracted), alias_dict, n_pages=n_pages)
     assert linked.exceptAll(linked2).count() == 0
 
 
@@ -98,10 +99,10 @@ def test_entity_linking_first_token_prune(spark, pages):
     so pruned linking output == unpruned linking output; pruned mentions
     are a subset with positions PRESERVED (mid-array holes must not shift
     pos); the pruned plan stays shuffle-free."""
-    from kgx_spark.pipeline.link import alias_first_tokens
+    from kgx_spark.pipeline.link import first_token_prune
 
     alias_dict = synth_alias_dict(spark, SF)
-    ft = alias_first_tokens(alias_dict)
+    ft = first_token_prune(alias_dict)["first_tokens"]
     assert ft and all(" " not in t for t in ft)
     extracted = extract_text(pages)
 
@@ -115,8 +116,6 @@ def test_entity_linking_first_token_prune(spark, pages):
     )
     assert stray.count() == 0
 
-    # n_pages must be passed explicitly under pruning: the fallback derives
-    # it from the mentions frame, and pruning can drop whole pages from it
     n_pages = extracted.count()
     linked_pruned = link_mentions(pruned, alias_dict, n_pages=n_pages)
     linked_full = link_mentions(detect_mentions(extracted), alias_dict, n_pages=n_pages)
@@ -131,11 +130,7 @@ def test_first_token_prune_threshold_guard(spark, pages):
     """Past MAX_INSET_FIRST_TOKENS the prune must switch from an in-plan
     InSet literal to a broadcast semi-join (round-5 VERDICT #4), with
     identical results on all three paths (list / semi-join / unpruned)."""
-    from kgx_spark.pipeline.link import (
-        alias_first_token_df,
-        alias_first_tokens,
-        first_token_prune,
-    )
+    from kgx_spark.pipeline.link import alias_first_token_df, first_token_prune
 
     alias_dict = synth_alias_dict(spark, SF)
     # dispatcher: small set → list form; tiny max_inset → DataFrame form
@@ -146,7 +141,7 @@ def test_first_token_prune_threshold_guard(spark, pages):
 
     extracted = extract_text(pages)
     n_pages = extracted.count()
-    via_list = detect_mentions(extracted, first_tokens=alias_first_tokens(alias_dict))
+    via_list = detect_mentions(extracted, first_tokens=kw_small["first_tokens"])
     via_join = detect_mentions(extracted, first_token_df=alias_first_token_df(alias_dict))
     assert via_list.exceptAll(via_join).count() == 0
     assert via_join.exceptAll(via_list).count() == 0

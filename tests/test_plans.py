@@ -49,8 +49,9 @@ def test_entity_link_dictionary_broadcasts(spark):
     from kgx_spark.pipeline.link import detect_mentions, link_mentions
     from kgx_spark.pipeline.synth import synth_alias_dict, synth_pages
 
-    pages = extract_text(synth_pages(spark, SF))
-    linked = link_mentions(detect_mentions(pages, max_ngram=2), synth_alias_dict(spark, SF), idf_weighting=False)
+    raw_pages = synth_pages(spark, SF)
+    pages = extract_text(raw_pages)
+    linked = link_mentions(detect_mentions(pages), synth_alias_dict(spark, SF), n_pages=raw_pages.count())
     assert "BroadcastHashJoin" in plan_of(linked)
 
 
@@ -126,19 +127,6 @@ def test_whole_stage_codegen_covers_hot_path(spark):
     p = plan_of(extract_triples(pages), "formatted")
     assert "codegen id" in p  # Generate + Project fused into WholeStageCodegen
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p  # no Python in this path
-
-
-def test_multimodal_decode_has_no_shuffle(spark):
-    """Binary media columns must never shuffle: the decode/feature plan is a
-    single narrow mapInPandas stage over the scan."""
-    from kgx_spark.operators.multimodal import decode_features
-
-    df = spark.createDataFrame(
-        [("a", "image", bytearray(b"\x89PNG123"))],
-        "media_id string, kind string, content binary",
-    )
-    p = plan_of(decode_features(df))
-    assert "Exchange" not in p
 
 
 def test_mention_detection_has_no_shuffle(spark):

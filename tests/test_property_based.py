@@ -80,29 +80,6 @@ def test_distributed_cc_matches_union_find_random_graphs(spark):
         assert got == expected, f"trial={trial}"
 
 
-def test_png_roundtrip_property():
-    """encode_png ∘ decode_png == identity on random images of every
-    supported channel count and shape (hypothesis-generated pixels)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from hypothesis.extra.numpy import arrays
-
-    from kgx_spark.functions.codecs import decode_png, encode_png
-
-    @settings(max_examples=30, deadline=None)
-    @given(
-        st.integers(1, 12), st.integers(1, 12), st.sampled_from([1, 3, 4]),
-        st.integers(0, 2**32 - 1),
-    )
-    def check(h, w, c, seed):
-        rng = np.random.default_rng(seed)
-        px = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
-        assert (decode_png(encode_png(px)) == px).all()
-
-    check()
-
-
 def test_rdfxml_conversion_deterministic_property():
     """Same RDF/XML bytes → byte-identical N-Triples across repeated runs,
     for generated documents mixing resources, literals, and nesting."""
