@@ -14,12 +14,16 @@ merge need streaming-specific forms:
 - ``stream_kg_update``: ``foreachBatch`` incremental merge of each
   micro-batch into a persistent edges snapshot using the batch merge
   kernel (`merge_edges`, the reference's (s,p,o) identity,
-  graph_merge.py:151-213). Per-batch idempotence via a recorded batchId
-  high-water mark, so a replayed micro-batch after a crash cannot
-  double-merge. On a cluster the read-merge-rewrite becomes an Iceberg/
-  Delta MERGE INTO against the edges table — the local parquet
-  snapshot-swap emulates that commit, same as the batch pipeline's
-  stage snapshots (pipeline/stages.py).
+  graph_merge.py:151-213). Only the snapshot rows whose key the batch
+  touches are re-aggregated with it; the rest are copied through (the
+  merge is idempotent on its own one-row-per-key output), and an empty
+  micro-batch — Spark's no-data batch, or a re-crawl the watermark dedup
+  absorbed — leaves the snapshot alone. Per-batch idempotence via a
+  recorded batchId high-water mark, so a replayed micro-batch after a
+  crash cannot double-merge. On a cluster the read-merge-rewrite becomes
+  an Iceberg/Delta MERGE INTO against the edges table — the local
+  parquet snapshot-swap emulates that commit, same as the batch
+  pipeline's stage snapshots (pipeline/stages.py).
 
 Scale notes: the stream is narrow until the per-batch merge, so executors
 process page files wherever they land — no shuffle before dedup. The
@@ -31,6 +35,7 @@ re-converged at the merge stage which unions provenance per (s,p,o)).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -39,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kgx_spark.functions.keys import generate_edge_identifiers
 from kgx_spark.operators.merge import merge_edges
 from kgx_spark.operators.validate import validate_edges
 from kgx_spark.pipeline.extract import extract_text
@@ -94,10 +100,35 @@ def run_triples_stream(
     q.awaitTermination()
 
 
+_KEY = ["subject", "predicate", "object"]
+
+
+def _merge_into(existing: DataFrame, new: DataFrame) -> DataFrame:
+    """``merge_edges([existing, new])`` for a one-row-per-key snapshot,
+    re-aggregating only the keys ``new`` touches.
+
+    A key the batch lacks groups to its snapshot row alone, and the merge
+    is idempotent on its own output (sorted distinct lists, id set), so
+    those rows are copied through with only a missing id filled. The
+    batch's keys broadcast into a semi and an anti join; duplicates among
+    them change neither."""
+    keys = F.broadcast(new.select(*_KEY))
+    touched = existing.join(keys, _KEY, "left_semi")
+    kept = generate_edge_identifiers(existing.join(keys, _KEY, "left_anti"))
+    return kept.unionByName(merge_edges([touched, new]), allowMissingColumns=True)
+
+
+def _has_snapshot(edges_dir: str) -> bool:
+    """A snapshot exists iff the directory holds parquet files; an empty,
+    pre-created directory is no snapshot yet."""
+    return bool(glob.glob(os.path.join(edges_dir, "**", "*.parquet"), recursive=True))
+
+
 def _swap_snapshot(df: DataFrame, live_dir: str) -> None:
     """Write df next to the live snapshot, then swap directories — the
     local emulation of a table-format commit (same contract as the batch
-    stage snapshots)."""
+    stage snapshots). The write completes before the first rename, so df
+    may lazily read the live snapshot it replaces."""
     tmp, old = live_dir + ".tmp", live_dir + ".old"
     df.write.mode("overwrite").parquet(tmp)
     if os.path.isdir(live_dir):
@@ -140,12 +171,12 @@ def stream_kg_update(
             with open(hwm_path) as fh:
                 if batch_id <= json.load(fh)["batch_id"]:
                     return
-        new = batch.drop("warc_ts")
-        if os.path.isdir(edges_dir):
-            existing = spark.read.parquet(edges_dir)
-            # materialize the merge before the swap: the plan reads the
-            # directory the swap replaces
-            merged = merge_edges([existing, new]).localCheckpoint()
+        # one run of the extraction and the dedup state commit
+        new = batch.drop("warc_ts").localCheckpoint()
+        if new.isEmpty():
+            return
+        if _has_snapshot(edges_dir):
+            merged = _merge_into(spark.read.parquet(edges_dir), new)
         else:
             merged = merge_edges([new])
         _swap_snapshot(merged, edges_dir)

@@ -171,3 +171,46 @@ def test_stream_kg_update_survives_kill_mid_hwm_write(spark, tmp_path, monkeypat
 
     stream_kg_update(spark, landing, edges, ckpt)
     assert _read_spo(spark, edges) == _batch_spo(pages)
+
+
+def test_stream_kg_update_into_empty_edges_dir(spark, tmp_path):
+    """A pre-created, empty edges directory is no snapshot yet: the first
+    drop starts the graph instead of failing to infer a parquet schema."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+    os.makedirs(edges)
+
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert _read_spo(spark, edges) == _batch_spo(spark.read.parquet(a_dir))
+
+
+def test_drop_rewrites_snapshot_once(spark, tmp_path, monkeypatch):
+    """A drop rewrites the snapshot once; Spark's no-data batch after it, a
+    drain of an unchanged landing dir and a re-crawl the watermark dedup
+    absorbs rewrite nothing."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+    swaps = []
+    real_swap = kg_stream._swap_snapshot
+
+    def counted_swap(df, live_dir):
+        swaps.append(live_dir)
+        real_swap(df, live_dir)
+
+    monkeypatch.setattr(kg_stream, "_swap_snapshot", counted_swap)
+
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert len(swaps) == 1
+    before = sorted(map(tuple, spark.read.parquet(edges).collect()))
+
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert len(swaps) == 1
+
+    _copy_drop(a_dir, landing, "dropA_again")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert len(swaps) == 1
+    assert sorted(map(tuple, spark.read.parquet(edges).collect())) == before

@@ -178,3 +178,19 @@ def test_first_token_prune_guard_plan_form(spark):
     # the guarded path still prunes correctly
     got = {r["mention"] for r in mentions.where(F.col("ngram_len") == 1).collect()}
     assert got == {"tok00001", "tok00500"}
+
+
+def test_stream_merge_reads_snapshot_through_broadcast_joins(spark, tmp_path):
+    """The stream's per-batch merge splits the snapshot by the batch's keys
+    with two broadcast joins; a shuffle join here would move the whole
+    snapshot for every drop."""
+    from kgx_spark.streaming.kg_stream import _merge_into
+
+    schema = "subject string, predicate string, object string, provided_by array<string>"
+    path = str(tmp_path / "snapshot")
+    spark.createDataFrame([("A:1", "biolink:treats", "B:1", ["u1"])], schema).write.parquet(path)
+    batch = spark.createDataFrame([("A:2", "biolink:treats", "B:1", ["u2"])], schema)
+    joins = [line for line in plan_of(_merge_into(spark.read.parquet(path), batch)).splitlines() if "Join" in line]
+    assert sum("BroadcastHashJoin" in j and "LeftAnti" in j for j in joins) == 1, joins
+    assert sum("BroadcastHashJoin" in j and "LeftSemi" in j for j in joins) == 1, joins
+    assert not any("SortMergeJoin" in j for j in joins), joins

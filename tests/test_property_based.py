@@ -58,6 +58,62 @@ def test_merge_nodes_idempotent(spark, rows):
     assert a == b  # merge is idempotent on already-merged input
 
 
+_EDGE_SCHEMA = "subject string, predicate string, object string, provided_by array<string>, note string"
+_edge_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["A:1", "A:2"]),
+        st.sampled_from(["biolink:treats", "biolink:related_to"]),
+        st.sampled_from(["B:1", "B:2"]),
+        st.none() | st.lists(st.sampled_from(["u1", "u2", "u3"]), max_size=3),
+        st.none() | st.sampled_from(["x", "y"]),
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+def _frozen_rows(df):
+    cols = sorted(df.columns)
+    return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.select(*cols).collect())
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_edge_rows, _edge_rows)
+def test_touched_key_merge_equals_full_merge(spark, tmp_path, e1, e2):
+    """The stream's touched-key merge of a batch into a merged snapshot is
+    the full merge of the two: over a key universe of 8, the snapshot and
+    the batch overlap and the batch repeats keys."""
+    from kgx_spark.operators.merge import merge_edges
+    from kgx_spark.streaming.kg_stream import _merge_into
+
+    path = str(tmp_path / "snapshot")
+    merge_edges([spark.createDataFrame(e1, _EDGE_SCHEMA)]).write.mode("overwrite").parquet(path)
+    snapshot = spark.read.parquet(path)
+    batch = spark.createDataFrame(e2, _EDGE_SCHEMA)
+    assert _frozen_rows(_merge_into(snapshot, batch)) == _frozen_rows(merge_edges([snapshot, batch]))
+
+
+def test_touched_key_merge_fills_ids_of_an_idless_snapshot(spark, tmp_path):
+    """A start snapshot without ``id`` (s, p, o and sorted provided_by, as
+    a bulk export writes it) gets the full merge's sha2 ids on every row,
+    touched or not."""
+    from kgx_spark.operators.merge import merge_edges
+    from kgx_spark.streaming.kg_stream import _merge_into
+
+    schema = "subject string, predicate string, object string, provided_by array<string>"
+    path = str(tmp_path / "snapshot")
+    spark.createDataFrame(
+        [("A:1", "biolink:treats", "B:1", ["u1", "u2"]), ("A:2", "biolink:treats", "B:1", ["u3"])], schema
+    ).write.parquet(path)
+    snapshot = spark.read.parquet(path)
+    batch = spark.createDataFrame(
+        [("A:1", "biolink:treats", "B:1", ["u4"]), ("A:3", "biolink:treats", "B:2", ["u4"])], schema
+    )
+    got = _merge_into(snapshot, batch)
+    assert _frozen_rows(got) == _frozen_rows(merge_edges([snapshot, batch]))
+    assert got.where("id IS NULL").count() == 0
+
+
 def test_distributed_cc_matches_union_find_random_graphs(spark):
     """Distributed hash-min LP (with int encoding + pointer doubling) and the
     driver union-find are the same function on seeded random pair sets."""
