@@ -31,6 +31,28 @@ watermark dedup keys on three strings (bounded state, evicted by event
 time); provided_by keeps the FIRST sighting inside a watermark window
 (the batch merge unions across all sightings — a documented divergence,
 re-converged at the merge stage which unions provenance per (s,p,o)).
+
+The stream query runs on a session of its own (``_stream_session``) with
+two fixed settings; the merge stays on the caller's session, so its
+shuffle, AQE and broadcast joins are the caller's:
+
+- ``spark.sql.shuffle.partitions = 1``. Spark reads it only when it
+  creates a checkpoint, and records it there as the dedup state's
+  partition count. A drop holds a few thousand keys, so more state
+  partitions buy no parallelism worth their cost: each adds a state-store
+  load, delta file, checksums and renames per micro-batch. A checkpoint
+  that already exists keeps its recorded count.
+- ``FileSystemBasedCheckpointFileManager``. Its rename is an atomic local
+  ``rename(2)``. With the default ``FileContext`` manager, Hadoop's local
+  file system forks a ``readlink`` process per rename when its native
+  library is missing, and a checkpoint renames every file it writes. The
+  checkpoint is local-only either way: the high-water mark is written
+  with ``os.replace``. Every checksum file stays.
+
+No-data micro-batches stay on: the one after a drop evicts the dedup state
+its watermark expired. Without it eviction waits until the end of the next
+data batch, so a key re-asserted after its state expired would be dropped
+as a duplicate instead of merging its new provenance.
 """
 
 from __future__ import annotations
@@ -39,6 +61,7 @@ import glob
 import json
 import os
 import shutil
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,7 +90,7 @@ def stream_pages_to_triples(
     """→ streaming DataFrame of validated, watermark-deduped triples.
 
     Columns: subject, predicate, object, provided_by, warc_ts (event time).
-    Callers attach a sink; ``run_triples_stream`` wires the parquet one.
+    Callers attach a sink; ``stream_kg_update`` wires the snapshot merge.
     """
     pages = spark.readStream.schema(PAGES_STREAM_SCHEMA).parquet(landing_dir)
     text = extract_text(pages).select("url", "warc_ts", "extracted_text")
@@ -76,28 +99,6 @@ def stream_pages_to_triples(
     return valid.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
         ["subject", "predicate", "object"]
     )
-
-
-def run_triples_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "1 hour",
-) -> None:
-    """Drain everything currently in the landing dir into a parquet triple
-    log (exactly-once via the checkpoint), then stop — the
-    ``availableNow`` production pattern for scheduled incremental runs; a
-    24/7 deployment uses the same query with a processing-time trigger."""
-    q = (
-        stream_pages_to_triples(spark, landing_dir, watermark)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 _KEY = ["subject", "predicate", "object"]
@@ -151,6 +152,39 @@ def _recover_snapshot(live_dir: str) -> None:
         os.rename(old, live_dir)
 
 
+# The stream query's own settings; the merge keeps the caller's session.
+_STREAM_CONF = {
+    "spark.sql.shuffle.partitions": "1",
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    ),
+}
+_stream_sessions: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """The session the stream query runs on: ``spark.newSession()`` with
+    ``_STREAM_CONF``, made once per caller session. Every session that
+    starts a query adds a listener to the application's listener bus that
+    is never removed, so a new session per update would leak one per drop."""
+    stream = _stream_sessions.get(spark)
+    if stream is None:
+        stream = spark.newSession()
+        for key, value in _STREAM_CONF.items():
+            stream.conf.set(key, value)
+        _stream_sessions[spark] = stream
+    return stream
+
+
+def _read_snapshot(spark: SparkSession, edges_dir: str, schema: T.StructType) -> DataFrame:
+    """The live snapshot on ``spark``; before the first drop, an empty one
+    of the batch's schema. Either way the merge is planned on ``spark``,
+    not on the micro-batch's stream session with its one shuffle partition."""
+    if _has_snapshot(edges_dir):
+        return spark.read.parquet(edges_dir)
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
+
 def stream_kg_update(
     spark: SparkSession,
     landing_dir: str,
@@ -161,8 +195,8 @@ def stream_kg_update(
     """Continuous KG maintenance: drain page drops and MERGE their triples
     into the persistent edges snapshot (reference merge semantics per
     (s,p,o): provenance unions, deterministic ids). Idempotent per
-    micro-batch: a batchId at or below the recorded high-water mark is a
-    no-op, so foreachBatch replays after a crash cannot double-merge."""
+    micro-batch: a batchId at or below the recorded high-water mark is not
+    merged again, so foreachBatch replays after a crash cannot double-merge."""
     hwm_path = os.path.join(checkpoint_dir, "_merged_batch.json")
     _recover_snapshot(edges_dir)
 
@@ -170,16 +204,15 @@ def stream_kg_update(
         if os.path.exists(hwm_path):
             with open(hwm_path) as fh:
                 if batch_id <= json.load(fh)["batch_id"]:
+                    # merged before a kill: Spark still requires the replay
+                    # to commit the batch's dedup state, so run it unmerged
+                    batch.write.format("noop").mode("overwrite").save()
                     return
         # one run of the extraction and the dedup state commit
         new = batch.drop("warc_ts").localCheckpoint()
         if new.isEmpty():
             return
-        if _has_snapshot(edges_dir):
-            merged = _merge_into(spark.read.parquet(edges_dir), new)
-        else:
-            merged = merge_edges([new])
-        _swap_snapshot(merged, edges_dir)
+        _swap_snapshot(_merge_into(_read_snapshot(spark, edges_dir, new.schema), new), edges_dir)
         # write-then-rename: a kill mid-write must not leave a truncated
         # high-water mark that every later update fails to parse
         with open(hwm_path + ".tmp", "w") as fh:
@@ -187,7 +220,7 @@ def stream_kg_update(
         os.replace(hwm_path + ".tmp", hwm_path)
 
     q = (
-        stream_pages_to_triples(spark, landing_dir, watermark)
+        stream_pages_to_triples(_stream_session(spark), landing_dir, watermark)
         .writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

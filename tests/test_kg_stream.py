@@ -3,9 +3,9 @@ extract→triples→validate lifted over a file-source stream, with
 watermark dedup and foreachBatch incremental merge.
 
 Checked against the BATCH operators on the same pages (the reference
-semantics): the streamed triple log matches batch distinct (s,p,o), a
-re-dropped page adds nothing, and the incrementally-merged edges snapshot
-matches the batch merge over the full corpus — including replay
+semantics): a re-dropped page adds nothing, a key re-asserted past the
+watermark merges, and the incrementally-merged edges snapshot matches the
+batch merge over the full corpus — including replay
 idempotence through the recorded batchId high-water mark and recovery from
 a snapshot swap or a high-water-mark write cut short by a crash."""
 
@@ -13,6 +13,7 @@ import glob
 import json
 import os
 import shutil
+from datetime import datetime, timedelta
 from types import SimpleNamespace
 
 import pyspark.sql.functions as F
@@ -25,7 +26,11 @@ from kgx_spark.pipeline.extract import extract_text
 from kgx_spark.pipeline.synth import synth_pages
 from kgx_spark.pipeline.triples import extract_triples
 from kgx_spark.streaming import kg_stream
-from kgx_spark.streaming.kg_stream import run_triples_stream, stream_kg_update
+from kgx_spark.streaming.kg_stream import (
+    PAGES_STREAM_SCHEMA,
+    stream_kg_update,
+    stream_pages_to_triples,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -62,31 +67,6 @@ def _read_spo(spark, path):
         (r.subject, r.predicate, r.object)
         for r in spark.read.parquet(path).select("subject", "predicate", "object").collect()
     }
-
-
-def test_stream_triples_incremental_and_dedup(spark, tmp_path):
-    tmpdir = str(tmp_path)
-    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
-    out, ckpt = f"{tmpdir}/triples", f"{tmpdir}/ckpt"
-
-    _copy_drop(a_dir, landing, "dropA")
-    run_triples_stream(spark, landing, out, ckpt)
-    got_a = _read_spo(spark, out)
-    want_a = _batch_spo(spark.read.parquet(a_dir))
-    assert got_a == want_a
-    # streamed rows are (s,p,o)-unique (the watermark dedup)
-    n_rows = spark.read.parquet(out).count()
-    assert n_rows == len(got_a)
-
-    # drop B plus a RE-DROP of drop A (a re-crawl inside the watermark):
-    # only B's new assertions may appear
-    _copy_drop(b_dir, landing, "dropB")
-    _copy_drop(a_dir, landing, "dropA_again")
-    run_triples_stream(spark, landing, out, ckpt)
-    got_all = _read_spo(spark, out)
-    want_all = _batch_spo(pages)
-    assert got_all == want_all
-    assert spark.read.parquet(out).count() == len(want_all)
 
 
 def test_stream_kg_update_matches_batch_merge(spark, tmp_path):
@@ -173,6 +153,33 @@ def test_stream_kg_update_survives_kill_mid_hwm_write(spark, tmp_path, monkeypat
     assert _read_spo(spark, edges) == _batch_spo(pages)
 
 
+def test_stream_kg_update_replays_a_batch_merged_before_a_kill(spark, tmp_path):
+    """A kill after a batch's high-water mark is written but before Spark
+    commits the batch: the restart replays it. The replay must not merge
+    again, and must still commit its dedup state, or every restart fails."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+    with open(f"{ckpt}/_merged_batch.json") as fh:
+        merged = json.load(fh)["batch_id"]
+    # roll Spark's logs back to the kill: no commit of the merged batch,
+    # and no trace of the no-data batch after it
+    for log, n in (("commits", merged), ("commits", merged + 1), ("offsets", merged + 1)):
+        os.remove(f"{ckpt}/{log}/{n}")
+        os.remove(f"{ckpt}/{log}/.{n}.crc")
+    before = sorted(map(tuple, spark.read.parquet(edges).collect()))
+
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert sorted(map(tuple, spark.read.parquet(edges).collect())) == before
+
+    _copy_drop(b_dir, landing, "dropB")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert _read_spo(spark, edges) == _batch_spo(pages)
+
+
 def test_stream_kg_update_into_empty_edges_dir(spark, tmp_path):
     """A pre-created, empty edges directory is no snapshot yet: the first
     drop starts the graph instead of failing to infer a parquet schema."""
@@ -214,3 +221,113 @@ def test_drop_rewrites_snapshot_once(spark, tmp_path, monkeypatch):
     stream_kg_update(spark, landing, edges, ckpt)
     assert len(swaps) == 1
     assert sorted(map(tuple, spark.read.parquet(edges).collect())) == before
+
+
+def _land_page(spark, landing, tmpdir, url, ts, text):
+    """Land a one-page drop whose html holds ``text``."""
+    page = spark.createDataFrame([(url, ts, f"<p>{text} filler words</p>".encode())], PAGES_STREAM_SCHEMA)
+    src = f"{tmpdir}/{url.replace(':', '_')}"
+    page.coalesce(1).write.parquet(src)
+    _copy_drop(src, landing, url.replace(":", "_"))
+
+
+def _provenance(spark, edges):
+    return {
+        (r.subject, r.object): list(r.provided_by)
+        for r in spark.read.parquet(edges).select("subject", "object", "provided_by").collect()
+    }
+
+
+def test_key_past_watermark_still_merges(spark, tmp_path):
+    """A key re-asserted after its dedup state expired merges its new
+    provenance; one re-asserted inside the watermark is absorbed. Spark's
+    no-data batch after each drop is what evicts the expired state before
+    the next drop's data batch."""
+    tmpdir = str(tmp_path)
+    landing, edges, ckpt = f"{tmpdir}/landing", f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+    os.makedirs(landing)
+    t0 = datetime(2024, 1, 1)
+    drops = [
+        ("u:a", t0, "P:1 interacts with S:1."),
+        ("u:b", t0 + timedelta(hours=2), "P:2 interacts with S:2."),
+        ("u:c", t0 + timedelta(hours=2, minutes=5), "P:1 interacts with S:1. P:2 interacts with S:2."),
+    ]
+    for url, ts, text in drops:
+        _land_page(spark, landing, tmpdir, url, ts, text)
+        stream_kg_update(spark, landing, edges, ckpt)
+
+    assert _provenance(spark, edges) == {("P:1", "S:1"): ["u:a", "u:c"], ("P:2", "S:2"): ["u:b"]}
+
+
+def _state_partitions(ckpt):
+    """Partition directories of the dedup operator's state store."""
+    return sorted(d for d in os.listdir(f"{ckpt}/state/0") if d.isdigit())
+
+
+def test_checkpoint_with_callers_state_partitions_resumes(spark, tmp_path):
+    """A checkpoint whose dedup state has the caller's shuffle partition
+    count (the layout of a stream started on the caller's session) resumes:
+    its state still absorbs a re-crawl, new keys merge, and the recorded
+    partition count is kept."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    _copy_drop(a_dir, landing, "dropA")
+    q = (
+        stream_pages_to_triples(spark, landing)
+        .writeStream.foreachBatch(lambda batch, batch_id: batch.write.format("noop").mode("overwrite").save())
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert len(_state_partitions(ckpt)) == n_parts
+
+    _copy_drop(a_dir, landing, "dropA_again")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert not kg_stream._has_snapshot(edges)
+
+    _copy_drop(b_dir, landing, "dropB")
+    stream_kg_update(spark, landing, edges, ckpt)
+    spo_a, spo_b = _batch_spo(spark.read.parquet(a_dir)), _batch_spo(spark.read.parquet(b_dir))
+    assert spo_b - spo_a
+    assert _read_spo(spark, edges) == spo_b - spo_a
+    assert len(_state_partitions(ckpt)) == n_parts
+
+
+def _n_files(root):
+    return sum(len(files) for _, _, files in os.walk(root))
+
+
+# files a warm drop adds under a one-partition checkpoint. Per micro-batch
+# (the drop's data batch and Spark's no-data batch): an offset and a commit
+# log entry, each with its .crc, and one state delta with its .crc, Spark's
+# checksum file and that file's .crc. Plus the data batch's source log entry
+# and its .crc: 2 * (2 + 2 + 4) + 2. With the caller's N state partitions
+# the delta term is 4 * N.
+WARM_DROP_CHECKPOINT_FILES = 18
+
+
+def test_stream_settings_stay_on_the_stream(spark, tmp_path):
+    """The stream runs on a session of its own: one dedup state partition
+    and a checkpoint file manager that renames in place. The caller's
+    session keeps its settings, and its stream session is made once."""
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointFileManagerClass")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    assert _state_partitions(ckpt) == ["0"]
+
+    n_files = _n_files(ckpt)
+    _copy_drop(b_dir, landing, "dropB")
+    stream_kg_update(spark, landing, edges, ckpt)
+    assert _n_files(ckpt) - n_files == WARM_DROP_CHECKPOINT_FILES
+    assert kg_stream._stream_session(spark) is kg_stream._stream_session(spark)
+    assert _read_spo(spark, edges) == _batch_spo(pages)

@@ -3,6 +3,8 @@ on (SURVEY.md §4): broadcast semi-joins, map-side partial aggregation,
 parquet filter pushdown + column pruning. A regression here silently turns
 a 100 TB job from hours into days, so it's tested like correctness."""
 
+import re
+
 import pyspark.sql.functions as F
 
 from kgx_spark import fixtures as FX
@@ -194,3 +196,23 @@ def test_stream_merge_reads_snapshot_through_broadcast_joins(spark, tmp_path):
     assert sum("BroadcastHashJoin" in j and "LeftAnti" in j for j in joins) == 1, joins
     assert sum("BroadcastHashJoin" in j and "LeftSemi" in j for j in joins) == 1, joins
     assert not any("SortMergeJoin" in j for j in joins), joins
+
+
+def test_stream_merges_plan_the_callers_shuffle_partitions(spark, tmp_path):
+    """The micro-batch lives on the stream's one-partition session, yet the
+    first drop's merge (into an empty snapshot) and a warm drop's merge both
+    plan their exchange on the caller's session."""
+    from kgx_spark.streaming.kg_stream import _merge_into, _read_snapshot, _stream_session
+
+    n_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    stream = _stream_session(spark)
+    assert stream.conf.get("spark.sql.shuffle.partitions") == "1" != n_parts
+    schema = "subject string, predicate string, object string, provided_by array<string>"
+    batch = stream.createDataFrame([("A:2", "biolink:treats", "B:1", ["u2"])], schema).localCheckpoint()
+    path = str(tmp_path / "snapshot")
+    first = _merge_into(_read_snapshot(spark, path, batch.schema), batch)
+    spark.createDataFrame([("A:1", "biolink:treats", "B:1", ["u1"])], schema).write.parquet(path)
+    warm = _merge_into(_read_snapshot(spark, path, batch.schema), batch)
+    exchange = r"Exchange hashpartitioning\(subject#\d+, predicate#\d+, object#\d+, (\d+)\)"
+    for merged in (first, warm):
+        assert re.findall(exchange, plan_of(merged)) == [n_parts]
