@@ -503,7 +503,7 @@ def clique_merge(
     column; a caller whose nodes all share one category leaves the column
     out, since no clique can then conflict.
     """
-    from kgx_spark.utils import conditional_broadcast
+    from kgx_spark.utils import conditional_broadcast, fits_broadcast
 
     pairs = build_same_as_pairs(nodes, edges)
     labels, _ = connected_components(pairs)
@@ -636,8 +636,11 @@ def clique_merge(
     # is usually clique-sized (≪ nodes), but a pathological same_as universe
     # makes it node-scale — broadcast only when provably small (round-1
     # judge finding #3); checkpointed above so its three consumers and the
-    # size probe don't re-run the election window.
-    b = conditional_broadcast(mapping)
+    # size probe don't re-run the election window. One probe decides both
+    # map joins: members_per_leader below is mapping grouped by leader, so
+    # it never has more rows than mapping.
+    map_small = fits_broadcast(mapping)
+    b = F.broadcast(mapping) if map_small else mapping
     e = (
         edges.join(b.withColumnRenamed("id", "subject").withColumnRenamed("leader", "_subj_leader"),
                    on="subject", how="left")
@@ -675,8 +678,8 @@ def clique_merge(
 
     # --- fold members into leaders (clique_merge.py:349-385) ---
     # derived from the CHECKPOINTED mapping (which is exactly the non-leader
-    # members), so the size probe and the join below don't re-run the
-    # election window
+    # members); no probe of its own, since a second probe would re-run the
+    # election window through leader_props (leader_map is not checkpointed)
     leader_props = (
         leader_map.where(F.col("id") == F.col("leader"))
         .select(F.col("leader").alias("id"), "election_strategy")
@@ -689,7 +692,9 @@ def clique_merge(
         .join(leader_props, on="id", how="left")
     )
     n = nodes.join(b, on="id", how="left_anti")  # drop non-leader members
-    n = n.join(conditional_broadcast(members_per_leader), on="id", how="left")
+    if map_small:
+        members_per_leader = F.broadcast(members_per_leader)
+    n = n.join(members_per_leader, on="id", how="left")
     # stamp the reference's leader annotations onto merged-clique leaders
     # (clique_merge.py:239-242 sets leader_annotation=True +
     # election_strategy during election; :290-300 copies them onto the

@@ -93,6 +93,13 @@ def get_spark(
         .config("spark.executor.memory", os.environ.get("SPARK_GRAFT_EXECUTOR_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # generated-class cache (static conf, per JVM): a warm crawl build
+        # (run_kg_pipeline, link_entities=True, kgbench's 600 pages) needs
+        # 131 distinct classes, so Spark's default LRU of 100 evicted each
+        # one before the next run asked for it — 131 Janino compiles plus C1
+        # JIT of every reloaded class per repeated run. With 1000 entries a
+        # repeated run compiles 2 (CodegenMetrics.METRIC_COMPILATION_TIME).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Shuffle/spill directory: a cluster gives each executor local SSDs; a
     # single host may have one slow disk. SPARK_GRAFT_LOCAL_DIR=/dev/shm moves

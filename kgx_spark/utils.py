@@ -31,8 +31,12 @@ def conditional_broadcast(df: DataFrame, row_limit: int | None = None) -> DataFr
     frame is returned unhinted and AQE decides (broadcast if runtime stats
     are small enough, shuffle join otherwise).
     """
+    return F.broadcast(df) if fits_broadcast(df, row_limit) else df
+
+
+def fits_broadcast(df: DataFrame, row_limit: int | None = None) -> bool:
+    """The probe behind ``conditional_broadcast``: does ``df`` have at most
+    ``row_limit`` rows (default ``BROADCAST_ROW_LIMIT``, read at call time)?"""
     if row_limit is None:
         row_limit = BROADCAST_ROW_LIMIT
-    if df.limit(row_limit + 1).count() <= row_limit:
-        return F.broadcast(df)
-    return df
+    return df.limit(row_limit + 1).count() <= row_limit

@@ -82,9 +82,14 @@ def test_conditional_broadcast_small_vs_large(spark):
 
 def test_clique_mapping_not_force_broadcast_when_large(spark):
     """clique_merge on a pathological same_as universe (every node a member)
-    must not force-broadcast the member→leader map."""
+    must not force-broadcast the member→leader map, on the edge side or the
+    node side; one probe of the map decides both, and a small map hints
+    both."""
     from kgx_spark.operators.clique import clique_merge
     from kgx_spark import utils as U
+
+    def hinted(df):
+        return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
 
     n = 4000
     nodes = spark.range(0, n).select(
@@ -99,11 +104,15 @@ def test_clique_mapping_not_force_broadcast_when_large(spark):
     old = U.BROADCAST_ROW_LIMIT
     U.BROADCAST_ROW_LIMIT = 100  # force the "large" path at test scale
     try:
-        _, e, mapping = clique_merge(nodes, edges, dedupe_edges=False)
-        # no forced broadcast hint anywhere in the re-pointing plan
-        assert "ResolvedHint" not in e._jdf.queryExecution().analyzed().toString()
+        n_out, e, _ = clique_merge(nodes, edges, dedupe_edges=False)
+        # no forced broadcast hint anywhere in the re-pointing plan, nor in
+        # the member fold of the canonical nodes
+        assert not hinted(e)
+        assert not hinted(n_out)
     finally:
         U.BROADCAST_ROW_LIMIT = old
+    n_out, e, _ = clique_merge(nodes, edges, dedupe_edges=False)
+    assert hinted(e) and hinted(n_out)
 
 
 def test_meta_kg_catalog_not_broadcast_hinted(spark):
