@@ -20,10 +20,11 @@ merge need streaming-specific forms:
   micro-batch — Spark's no-data batch, or a re-crawl the watermark dedup
   absorbed — leaves the snapshot alone. Per-batch idempotence via a
   recorded batchId high-water mark, so a replayed micro-batch after a
-  crash cannot double-merge. On a cluster the read-merge-rewrite becomes
-  an Iceberg/Delta MERGE INTO against the edges table — the local
-  parquet snapshot-swap emulates that commit, same as the batch
-  pipeline's stage snapshots (pipeline/stages.py).
+  crash cannot double-merge. Each merged snapshot is swapped in by the
+  batch pipeline's stage commit (pipeline/stages.py ``commit``, with its
+  commit record), and ``recover`` finishes a swap a crash cut short before
+  the next update reads the snapshot. On a cluster the read-merge-rewrite
+  becomes an Iceberg/Delta MERGE INTO against the edges table.
 
 Scale notes: the stream is narrow until the per-batch merge, so executors
 process page files wherever they land — no shuffle before dedup. The
@@ -60,7 +61,6 @@ from __future__ import annotations
 import glob
 import json
 import os
-import shutil
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +71,7 @@ from kgx_spark.functions.keys import generate_edge_identifiers
 from kgx_spark.operators.merge import merge_edges
 from kgx_spark.operators.validate import validate_edges
 from kgx_spark.pipeline.extract import extract_text
+from kgx_spark.pipeline.stages import commit, recover
 from kgx_spark.pipeline.triples import extract_triples
 
 # the pages table contract (pipeline/synth.py synth_pages; in production an
@@ -125,31 +126,9 @@ def _has_snapshot(edges_dir: str) -> bool:
     return bool(glob.glob(os.path.join(edges_dir, "**", "*.parquet"), recursive=True))
 
 
-def _swap_snapshot(df: DataFrame, live_dir: str) -> None:
-    """Write df next to the live snapshot, then swap directories — the
-    local emulation of a table-format commit (same contract as the batch
-    stage snapshots). The write completes before the first rename, so df
-    may lazily read the live snapshot it replaces."""
-    tmp, old = live_dir + ".tmp", live_dir + ".old"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(live_dir):
-        os.rename(live_dir, old)
-    os.rename(tmp, live_dir)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _recover_snapshot(live_dir: str) -> None:
-    """Finish a snapshot swap that a crash cut short. A kill between the
-    two renames leaves the graph only in ``.old``: move it back. A kill
-    after them leaves a stale ``.old`` that the next swap's rename would
-    fail on: remove it."""
-    old = live_dir + ".old"
-    if not os.path.isdir(old):
-        return
-    if os.path.isdir(live_dir):
-        shutil.rmtree(old)
-    else:
-        os.rename(old, live_dir)
+# The stream's snapshot commit, looked up here at each merge so a tracer can
+# wrap it (kgbench's traced run does).
+_swap_snapshot = commit
 
 
 # The stream query's own settings; the merge keeps the caller's session.
@@ -198,7 +177,7 @@ def stream_kg_update(
     micro-batch: a batchId at or below the recorded high-water mark is not
     merged again, so foreachBatch replays after a crash cannot double-merge."""
     hwm_path = os.path.join(checkpoint_dir, "_merged_batch.json")
-    _recover_snapshot(edges_dir)
+    recover(edges_dir)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
         if os.path.exists(hwm_path):

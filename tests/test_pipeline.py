@@ -1,10 +1,13 @@
 """Web-text pipeline tests: extraction byte-identity, triple P/R on a known
 embedded fact set, entity linking, canonicalization, kill-resume."""
 
+import glob
 import os
+import shutil
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from kgx_spark.pipeline.extract import extract_text, extract_text_bytes
 from kgx_spark.pipeline.kg_pipeline import run_kg_pipeline
@@ -174,11 +177,11 @@ def test_full_pipeline_and_resume(spark, pages, tmp_path):
     assert stages_run == ["extract", "triples", "edges_raw", "canonical", "edges", "nodes"]
     assert all(m["lineage"] for m in metrics if m["rows"] > 0)
 
-    # kill-resume: delete the LAST stage's marker → only that stage re-runs,
-    # and its stale metrics row is scrubbed (ONE row per stage, no
-    # double-count — round-2 next-round #8)
+    # kill-resume: drop the LAST stage's commit record → only that stage
+    # re-runs, and the metrics hold ONE record per stage (no double-count —
+    # round-2 next-round #8)
     committed_before = {m["stage"]: m["committed_at"] for m in metrics}
-    os.remove(os.path.join(wd, "nodes._COMMITTED"))
+    os.remove(os.path.join(wd, "nodes.parquet", "_commit.json"))
     ctx2 = run_kg_pipeline(spark, SF, wd, link_entities=False)
     metrics2 = read_metrics(wd)
     assert [m["stage"] for m in metrics2] == stages_run  # exactly one row each
@@ -191,37 +194,58 @@ def test_full_pipeline_and_resume(spark, pages, tmp_path):
 
 
 def test_kill_mid_write_recomputes_cleanly(spark, pages, tmp_path):
-    """Round-2 next-round #8: a run killed MID-WRITE leaves the stage dir
-    with partial files, possibly a metrics row, and NO marker. The re-run
-    must recompute that stage from scratch (not trust the partial data) and
-    must not duplicate its metrics row."""
+    """Round-2 next-round #8: a run killed MID-WRITE leaves a partial
+    ``<stage>.parquet.tmp`` beside the stage's directory. When that stage
+    has no valid commit record (here: a directory left without one, with a
+    data file missing), the re-run must recompute it and every stage after
+    it from scratch (not trust the partial data), must not duplicate their
+    metrics records, and must leave no partial file behind."""
     wd = str(tmp_path / "w")
     ctx = run_kg_pipeline(spark, SF, wd, link_entities=False)
     n_edges = ctx["edges"].count()
-    stages_run = [m["stage"] for m in read_metrics(wd)]
+    metrics = read_metrics(wd)
+    stages_run = [m["stage"] for m in metrics]
+    committed_before = {m["stage"]: m["committed_at"] for m in metrics}
 
-    # simulate the kill: marker gone, stage dir present but corrupted with a
-    # partial file (the metrics row from the killed run is still there)
+    # simulate the kill: canonical's record gone and one of its data files
+    # missing, and the killed write's garbage partial file in its .tmp
     stage_dir = os.path.join(wd, "canonical.parquet")
-    os.remove(os.path.join(wd, "canonical._COMMITTED"))
+    os.remove(os.path.join(stage_dir, "_commit.json"))
     for f in os.listdir(stage_dir):
         if f.startswith("part-"):
             os.remove(os.path.join(stage_dir, f))
             break
-    with open(os.path.join(stage_dir, "part-99999-killed.parquet"), "wb") as fh:
+    tmp_dir = stage_dir + ".tmp"
+    os.makedirs(tmp_dir)
+    with open(os.path.join(tmp_dir, "part-99999-killed.parquet"), "wb") as fh:
         fh.write(b"\x00partial garbage, not a parquet footer")
-    # downstream markers gone too — a real resume re-runs everything after
-    # the killed stage (their inputs changed)
-    for s in ("edges", "nodes"):
-        os.remove(os.path.join(wd, f"{s}._COMMITTED"))
 
     ctx2 = run_kg_pipeline(spark, SF, wd, link_entities=False)
     metrics2 = read_metrics(wd)
-    # exactly one metrics row per stage — the killed rows were scrubbed
+    # exactly one metrics record per stage; canonical and the stages after
+    # it were recomputed, the ones before it loaded
     assert [m["stage"] for m in metrics2] == stages_run
+    recomputed = {m["stage"] for m in metrics2 if m["committed_at"] != committed_before[m["stage"]]}
+    assert recomputed == {"canonical", "edges", "nodes"}
     assert ctx2["edges"].count() == n_edges
-    # the garbage partial file is gone (overwrite replaced the dir content)
-    assert not os.path.exists(os.path.join(stage_dir, "part-99999-killed.parquet"))
+    # the garbage partial file is gone
+    assert not os.path.exists(tmp_dir)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_resume_without_a_stage_does_not_load_its_downstream(spark, tmp_path):
+    """A resume with entity linking off, in the workdir of a linked build,
+    must not load the linked build's downstream snapshots: its edges carry
+    no mention edge and equal a fresh unlinked build's."""
+    wd = str(tmp_path / "w")
+    run_kg_pipeline(spark, SF, wd, link_entities=True)
+    resumed = run_kg_pipeline(spark, SF, wd, link_entities=False)["edges"]
+    fresh = run_kg_pipeline(spark, SF, str(tmp_path / "fresh"), link_entities=False)["edges"]
+    assert resumed.where(F.col("predicate") == "biolink:mentions").count() == 0
+    assert _rows(resumed) == _rows(fresh)
 
 
 def test_forced_rerun_interrupted_then_resumed_does_not_mix_runs(spark, tmp_path):
@@ -301,8 +325,117 @@ def test_jobs_per_stage_and_committed_schemas(spark, tmp_path):
     jobs = {name: end - start for (name, start), end in zip(starts, ends)}
     assert jobs == STAGE_JOBS
 
-    # the commit reads each snapshot back with the written frame's schema;
-    # it must be the schema a fresh read of the snapshot infers
+    # a resume that loads every stage reads each snapshot with its recorded
+    # schema: no Spark job
+    first = scheduler.nextJobId()
+    loaded = run_stages(spark, wd, stages)
+    assert scheduler.nextJobId() - first == 0
+
+    # fresh or loaded, a stage's frame has the schema a fresh read of its
+    # snapshot infers
     for st in stages:
         inferred = spark.read.parquet(os.path.join(wd, f"{st.name}.parquet")).schema
         assert ctx[st.name].schema == inferred, st.name
+        assert loaded[st.name].schema == inferred, st.name
+
+
+# The steps of a snapshot commit (stages.commit) a kill can follow, each with
+# the on-disk state it leaves: does <dir>, <dir>.tmp, <dir>.tmp/_commit.json,
+# <dir>.old exist?
+COMMIT_STEPS = {
+    "data_written": (True, True, False, False),
+    "record_written": (True, True, True, False),
+    "live_renamed": (False, True, True, True),
+    "tmp_renamed": (True, False, False, True),
+}
+
+
+def _kill_commit_after(monkeypatch, step, path):
+    """Make the next commit to ``path`` raise right after ``step``."""
+
+    def kill():
+        raise RuntimeError(f"killed after {step}")
+
+    if step == "data_written":
+        real_parquet = DataFrameWriter.parquet
+
+        def parquet(self, p, *a, **kw):
+            real_parquet(self, p, *a, **kw)
+            if p == path + ".tmp":
+                kill()
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+        return
+    # the record is written just before the first rename (live → .old)
+    src, before = {
+        "record_written": (path, True),
+        "live_renamed": (path, False),
+        "tmp_renamed": (path + ".tmp", False),
+    }[step]
+    real_rename = os.rename
+
+    def rename(a, b):
+        if a == src and before:
+            kill()
+        real_rename(a, b)
+        if a == src:
+            kill()
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+def _commit_state(path):
+    return tuple(
+        os.path.exists(p) for p in (path, path + ".tmp", os.path.join(path + ".tmp", "_commit.json"), path + ".old")
+    )
+
+
+@pytest.mark.parametrize("step", list(COMMIT_STEPS))
+@pytest.mark.parametrize("target", ["stage", "stream"])
+def test_kill_after_every_commit_step_then_resume(spark, pages, tmp_path, monkeypatch, target, step):
+    """A kill after any step of a snapshot commit — a stage of a build, or a
+    stream batch's merge — resumes to what an uninterrupted run wrote,
+    every column (provided_by included) compared, with one commit record
+    per snapshot."""
+    from kgx_spark.pipeline.stages import read_record
+    from kgx_spark.streaming.kg_stream import stream_kg_update
+
+    if target == "stage":
+        wd = str(tmp_path / "w")
+        ctx = run_kg_pipeline(spark, SF, wd, link_entities=False)
+        want = {s: _rows(ctx[s]) for s in ("edges", "nodes")}
+        stages_run = [m["stage"] for m in read_metrics(wd)]
+        path = os.path.join(wd, "canonical.parquet")
+        with monkeypatch.context() as m:
+            _kill_commit_after(m, step, path)
+            with pytest.raises(Exception, match=f"killed after {step}"):
+                run_kg_pipeline(spark, SF, wd, link_entities=False, force=True)
+        assert _commit_state(path) == COMMIT_STEPS[step]
+        ctx2 = run_kg_pipeline(spark, SF, wd, link_entities=False)
+        assert {s: _rows(ctx2[s]) for s in ("edges", "nodes")} == want
+        assert [m["stage"] for m in read_metrics(wd)] == stages_run
+        return
+
+    # the same two drops, each merged by an uninterrupted stream and by one
+    # whose second merge is killed
+    landing, ckpt = str(tmp_path / "landing"), str(tmp_path / "ckpt")
+    path, ref, ref_ckpt = str(tmp_path / "edges"), str(tmp_path / "ref"), str(tmp_path / "ref_ckpt")
+    os.makedirs(landing)
+    half = F.crc32(F.col("url")) % 2 == 0
+    for tag, drop in (("a", pages.where(half)), ("b", pages.where(~half))):
+        src = str(tmp_path / tag)
+        drop.select("url", "warc_ts", "html").write.parquet(src)
+        for i, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
+            shutil.copy(f, os.path.join(landing, f"{tag}_{i}.parquet"))
+        stream_kg_update(spark, landing, ref, ref_ckpt)
+        if tag == "a":
+            stream_kg_update(spark, landing, path, ckpt)
+    with monkeypatch.context() as m:
+        _kill_commit_after(m, step, path)
+        with pytest.raises(Exception, match=f"killed after {step}"):
+            stream_kg_update(spark, landing, path, ckpt)
+    assert _commit_state(path) == COMMIT_STEPS[step]
+    stream_kg_update(spark, landing, path, ckpt)
+    got = spark.read.parquet(path)
+    assert _rows(got) == _rows(spark.read.parquet(ref))
+    assert read_record(path)["rows"] == got.count()

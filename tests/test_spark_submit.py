@@ -63,5 +63,5 @@ def test_spark_submit_pyfiles_deployment(tmp_path):
     result = json.loads(out.stdout.strip().splitlines()[-1])
     assert result["edges"] > 0
     # the kill-resume contract held under spark-submit too
-    assert (tmp_path / "wd" / "edges._COMMITTED").exists()
-    assert (tmp_path / "wd" / "metrics.jsonl").exists()
+    record = tmp_path / "wd" / "edges.parquet" / "_commit.json"
+    assert json.loads(record.read_text())["rows"] > 0
