@@ -49,10 +49,13 @@ def build_stages(
         # extracted text, orders of magnitude smaller than the html.
         pages = pages_df if pages_df is not None else synth_pages(spark, sf_dir)
         # Few-large-files inputs (single-split parquet at test scale)
-        # under-parallelize the CPU-bound extract/triples path — re-spread to
-        # ~2× cores; the extract snapshot then preserves this layout.
-        target = max(2 * spark.sparkContext.defaultParallelism, 8)
-        pages = pages.repartition(target, "url")
+        # under-parallelize the CPU-bound extract/triples path — re-spread
+        # by url over the session's shuffle partitions (AQE may coalesce
+        # them); the extract snapshot then preserves this layout. Each
+        # Python UDF task pays a fixed worker set-up (~0.25 CPU-s measured
+        # on a 4-vCPU host, whatever its rows), so extract wants as few
+        # tasks as keep the cores busy, not a multiple of them.
+        pages = pages.repartition("url")
         return extract_text(pages).select("url", "warc_ts", "extracted_text", "lang")
 
     def s_triples(spark: SparkSession, ctx: dict) -> DataFrame:
@@ -117,8 +120,9 @@ def build_stages(
         ids = edges.select(
             F.explode(F.array("subject", "object")).alias("id"), F.col("provided_by")
         )
-        nodes = ids.withColumn("category", F.array(F.lit("biolink:NamedThing")))
-        merged = merge_nodes([nodes])
+        # every node is a NamedThing: validate_nodes sets that category on
+        # the merged rows, so the merge aggregates provided_by only
+        merged = merge_nodes([ids])
         valid, _ = validate_nodes(merged)
         # post-merge rows are unique per id — hash(id) layout is already
         # uniform; a re-shuffle would only add an exchange (see s_edges note)

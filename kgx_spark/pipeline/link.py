@@ -11,6 +11,12 @@ TF-IDF-weighted prior with a deterministic argmax aggregation.
 Scale: mentions explode pages into n-grams — the expensive part — but each
 n-gram row is tiny and the alias join is broadcast (dictionary ≪ corpus).
 The idf table is one small groupBy over mentions, also broadcast back.
+
+Row paths here use no higher-order-function lambdas: Spark runs
+``transform``/``filter``/``exists`` in the interpreter, element by element,
+outside whole-stage codegen (on a warm crawl build on a 4-vCPU host, the
+lambda form of the n-gram job cost 3.6 CPU-s). Tokens and n-grams are built from
+``array_remove``, ``slice``, ``arrays_zip`` and ``sequence`` instead.
 """
 
 from __future__ import annotations
@@ -20,8 +26,9 @@ from pyspark.sql import functions as F
 
 
 def tokens(col: Column) -> Column:
-    """Whitespace tokenization → array<string> (empty tokens dropped)."""
-    return F.filter(F.split(F.trim(col), r"\s+"), lambda t: t != "")
+    """Whitespace tokenization → array<string> (empty tokens dropped;
+    split never yields a null element, so removing "" is exact)."""
+    return F.array_remove(F.split(F.trim(col), r"\s+"), "")
 
 
 # Above this many distinct first tokens, an InSet literal stops being a
@@ -69,88 +76,81 @@ def detect_mentions(
     first_tokens: list[str] | None = None,
     first_token_df: DataFrame | None = None,
 ) -> DataFrame:
-    """(url, mention, pos) candidate surface forms of ``extracted_text``:
-    all 1..MAX_NGRAM word n-grams, lowercased; ``pos`` is the starting
-    token index.
+    """(url, pos, mention, ngram_len) candidate surface forms of
+    ``extracted_text``: all 1..MAX_NGRAM word n-grams, lowercased; ``pos``
+    is the starting token index.
 
-    SHUFFLE-FREE: n-grams are built inside the token ARRAY with
-    transform+element_at before any explode, so the whole stage is a narrow
-    map over the page scan. (The previous design posexploded tokens and ran
-    lead() over a (url, pos) window — a full shuffle AND sort of the entire
-    token stream, per n-gram length; at 10^12 documents that shuffle IS the
-    job. Same output, zero exchanges.)
+    SHUFFLE-FREE: n-grams are built inside the token ARRAY before any
+    explode, so the whole stage is a narrow map over the page scan. (A
+    posexplode of tokens plus lead() over a (url, pos) window would shuffle
+    and sort the entire token stream, per n-gram length.)
 
-    ``first_tokens`` (from first_token_prune) prunes INSIDE the array,
-    before the explode: an n-gram whose first token is no alias's first
-    token can never survive the downstream dictionary equality join, so
-    dropping it early is result-identical while shrinking the exploded
-    row volume by the corpus's non-entity token fraction (typically most
-    of it). The membership test compiles to a Catalyst InSet hash probe,
-    and positions are carried in a (pos, mention) struct so mid-array
-    pruning cannot shift them.
+    ONE pass, ONE explode, NO lambdas: the token array is zipped with its
+    shifts ``slice(t, 2, …)``, ``slice(t, 3, …)`` and the positions
+    ``sequence(0, size-1)``; block n is the first size-n+1 zipped slots,
+    each tagged with its length n by a zipped ``array_repeat``. The blocks
+    are concatenated and exploded once, and each mention is the
+    ``concat_ws`` of its slot's first n words. Every expression here is
+    whole-stage-codegen'd. Higher-order functions (``transform``,
+    ``filter``, ``exists`` and their lambdas) are not: Spark evaluates
+    them element by element in the interpreter, so they stay off this row
+    path.
+
+    ``first_tokens`` (from first_token_prune) drops the slots whose first
+    word opens no alias, right after the explode and inside the same
+    codegen stage: such an n-gram can never survive the downstream
+    dictionary equality join, so the prune is result-identical while it
+    skips building the mention string for the corpus's non-entity tokens
+    (typically most of them). The membership test compiles to a Catalyst
+    InSet hash probe.
 
     ``first_token_df`` (from alias_first_token_df / first_token_prune) is
-    the same prune as a post-explode broadcast LEFT SEMI join on the
-    mention's first token — for dictionaries whose first-token set is too
-    large to embed as an InSet literal (> MAX_INSET_FIRST_TOKENS). It keeps
-    plan size and driver memory bounded at the cost of exploding the full
-    n-gram volume first; past broadcastable sizes skip pruning entirely —
+    the same prune as a post-explode broadcast LEFT SEMI join on the first
+    word — for dictionaries whose first-token set is too large to embed as
+    an InSet literal (> MAX_INSET_FIRST_TOKENS). It keeps plan size and
+    driver memory bounded; past broadcastable sizes skip pruning entirely —
     a first-token set that large filters little anyway. Result-identical
-    to the list form (tests/test_pipeline.py pins all three paths equal).
-
-    ONE pass, ONE explode: the per-length gram arrays are built as
-    (pos, mention, ngram_len) structs inside the token array and
-    concatenated BEFORE the single explode. (The previous design unioned
-    one explode branch per n-gram length; each branch re-evaluated the full
-    upstream lineage — the Arrow-batched html extraction appeared
-    MAX_NGRAM times as ArrowEvalPython nodes in the plan, tripling the
-    most expensive narrow stage. Positions are the in-array indices either
-    way, so the output rows are identical.)"""
+    to the list form (tests/test_pipeline.py pins all three paths equal)."""
     if first_tokens is not None and first_token_df is not None:
         raise ValueError("pass first_tokens OR first_token_df, not both")
-    toks_col = tokens(F.lower(F.col("extracted_text")))
-    base = pages.select("url", toks_col.alias("_toks"))
     t = F.col("_toks")
-    # element i (0-based) → concat of tokens[i+1 .. i+n] (element_at is
-    # 1-based); starts past size-n yield null mentions. With
-    # ``first_tokens``, starts whose token opens no alias are nulled too
-    # (holes mid-array — positions ride in the struct, so pruning cannot
-    # shift them); the filter drops all null-mention slots. The factory
-    # pins n per length — F.transform dispatches on the lambda's arity, so
-    # the slot function must take exactly (x, i).
-    def _slots(n):
-        def _slot(x, i):
-            keep = i + n <= F.size(t)
-            if first_tokens is not None:
-                keep = keep & x.isin(first_tokens)
-            return F.struct(
-                i.alias("pos"),
-                F.when(
-                    keep,
-                    F.concat_ws(" ", *[F.element_at(t, i + j + 1) for j in range(n)]),
-                ).alias("mention"),
-                F.lit(n).alias("ngram_len"),
-            )
-
-        return F.filter(F.transform(t, _slot), lambda s: s["mention"].isNotNull())
-
-    per_n = [_slots(n) for n in range(1, MAX_NGRAM + 1)]
-    out = base.select("url", F.explode(F.concat(*per_n)).alias("_g")).select(
-        "url",
-        F.col("_g.pos").alias("pos"),
-        F.col("_g.mention").alias("mention"),
-        F.col("_g.ngram_len").alias("ngram_len"),
+    n = F.size(t)
+    words = [f"_w{j}" for j in range(MAX_NGRAM)]
+    # slot i: (word i, word i+1, …, pos i); arrays_zip pads the shorter
+    # shifts with nulls. With no tokens, sequence(0, -1) counts down to two
+    # padding slots, but every block below takes the first 0 of them.
+    slots = F.arrays_zip(
+        t.alias(words[0]),
+        *[F.slice(t, j + 1, n).alias(words[j]) for j in range(1, MAX_NGRAM)],
+        F.sequence(F.lit(0), n - 1).alias("pos"),
     )
-    if first_token_df is not None:
-        # mentions are concat_ws(" ")-joined, so the first token is
-        # everything before the first single space
-        out = out.join(
-            F.broadcast(first_token_df),
-            on=F.element_at(F.split(F.col("mention"), " "), 1)
-            == first_token_df["first_token"],
-            how="left_semi",
+    # one projection computes the slots once per page; the blocks slice it
+    base = pages.select("url", tokens(F.lower(F.col("extracted_text"))).alias("_toks")).select(
+        "url", n.alias("_n"), slots.alias("_slots")
+    )
+    blocks = []
+    for k in range(1, MAX_NGRAM + 1):
+        m = F.greatest(F.col("_n") - (k - 1), F.lit(0))
+        blocks.append(
+            F.arrays_zip(F.slice("_slots", 1, m).alias("s"), F.array_repeat(F.lit(k), m).alias("ngram_len"))
         )
-    return out
+    out = base.select("url", F.explode(F.concat(*blocks)).alias("_g"))
+    first = F.col("_g.s").getField(words[0])
+    if first_tokens is not None:
+        out = out.where(first.isin(first_tokens))
+    if first_token_df is not None:
+        out = out.join(F.broadcast(first_token_df), on=first == first_token_df["first_token"], how="left_semi")
+    ngram_len = F.col("_g.ngram_len")
+    # concat_ws skips nulls: word j joins only the grams longer than j
+    mention = F.concat_ws(
+        " ", first, *[F.when(ngram_len > j, F.col("_g.s").getField(words[j])) for j in range(1, MAX_NGRAM)]
+    )
+    return out.select(
+        "url",
+        F.col("_g.s.pos").alias("pos"),
+        mention.alias("mention"),
+        ngram_len.alias("ngram_len"),
+    )
 
 
 def link_mentions(

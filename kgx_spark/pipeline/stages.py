@@ -125,9 +125,18 @@ def read_record(path: str) -> dict | None:
 
 
 def read_metrics(workdir: str) -> list[dict]:
-    """The records of the committed stages in ``workdir``, in commit order."""
-    records = (read_record(d) for d in glob.glob(os.path.join(workdir, "*.parquet")))
-    return sorted((r for r in records if r is not None), key=lambda r: r["committed_at"])
+    """The records of the newest run's stages in ``workdir``, in run order:
+    the newest record and its ``parent`` chain. A stage the newest run
+    skipped keeps its snapshot and record, but no stage of that run names
+    it as parent, so it is left out."""
+    records = [r for r in map(read_record, glob.glob(os.path.join(workdir, "*.parquet"))) if r]
+    by_version = {r["version"]: r for r in records}
+    chain = []
+    r = max(records, key=lambda r: r["committed_at"], default=None)
+    while r is not None:
+        chain.append(r)
+        r = by_version.get(r["parent"])
+    return chain[::-1]
 
 
 def run_stages(

@@ -248,6 +248,26 @@ def test_resume_without_a_stage_does_not_load_its_downstream(spark, tmp_path):
     assert _rows(resumed) == _rows(fresh)
 
 
+def test_read_metrics_reports_the_newest_run_only(spark, tmp_path):
+    """read_metrics follows the newest run's parent chain: a stage the
+    last run skipped keeps its snapshot and record but is not reported,
+    and a resume that loads every stage reports the build it loaded."""
+    wd = str(tmp_path / "w")
+    linked_stages = ["extract", "triples", "linked", "edges_raw", "canonical", "edges", "nodes"]
+    run_kg_pipeline(spark, SF, wd, link_entities=True)
+    built = read_metrics(wd)
+    assert [m["stage"] for m in built] == linked_stages
+    run_kg_pipeline(spark, SF, wd, link_entities=True)
+    assert read_metrics(wd) == built
+    run_kg_pipeline(spark, SF, wd, link_entities=False)
+    resumed = read_metrics(wd)
+    assert [m["stage"] for m in resumed] == [s for s in linked_stages if s != "linked"]
+    assert os.path.exists(os.path.join(wd, "linked.parquet", "_commit.json"))
+    # extract and triples were loaded, the stages after the skipped one rebuilt
+    assert resumed[:2] == built[:2]
+    assert {m["version"] for m in resumed[2:]}.isdisjoint(m["version"] for m in built)
+
+
 def test_forced_rerun_interrupted_then_resumed_does_not_mix_runs(spark, tmp_path):
     """A forced re-run that dies mid-way, then resumes without force, must
     not load a downstream snapshot built from the earlier run's upstream

@@ -164,6 +164,45 @@ def test_mention_detection_has_no_shuffle(spark):
         assert "Union" not in tree, tree
 
 
+def optimized_plan(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_mention_detection_has_no_lambdas(spark):
+    """Higher-order-function lambdas (transform/filter/exists) run
+    interpreted, element by element, outside whole-stage codegen; the
+    n-gram row path must build without any, pruned or not."""
+    from kgx_spark.pipeline.link import detect_mentions
+
+    pages = spark.createDataFrame(
+        [("u1", "alpha beta gamma")], "url string, extracted_text string"
+    )
+    for mentions in (detect_mentions(pages), detect_mentions(pages, first_tokens=["alpha", "beta"])):
+        p = optimized_plan(mentions)
+        assert "lambdafunction" not in p, p
+
+
+def test_nodes_stage_merges_provenance_only(spark):
+    """Every crawl node is a NamedThing, set by validate_nodes after the
+    merge: the nodes stage collects provided_by and no constant category
+    array per exploded endpoint row."""
+    from kgx_spark.pipeline.kg_pipeline import build_stages
+
+    (nodes_stage,) = [st for st in build_stages(SF, link_entities=True) if st.name == "nodes"]
+    edges = spark.createDataFrame(
+        [("A:1", "biolink:treats", "B:1", ["u1"], "e1")],
+        "subject string, predicate string, object string, provided_by array<string>, id string",
+    )
+    nodes = nodes_stage.fn(spark, {"edges": edges})
+    p = optimized_plan(nodes)
+    assert p.count("collect_list(") == 1, p
+    assert "collect_list(provided_by" in p, p
+    assert sorted(map(tuple, nodes.collect())) == [
+        ("A:1", ["u1"], ["biolink:NamedThing"]),
+        ("B:1", ["u1"], ["biolink:NamedThing"]),
+    ]
+
+
 def test_first_token_prune_guard_plan_form(spark):
     """A dictionary whose first-token set exceeds the InSet threshold must
     prune via a broadcast LEFT SEMI join, never a giant in-plan membership

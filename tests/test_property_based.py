@@ -1,11 +1,15 @@
 """Property-based tests (hypothesis) — beyond the reference's test strategy
 (SURVEY.md §5 notes the reference has none)."""
 
+import re
+from collections import Counter
+
 import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
 
 from kgx_spark.operators.clique import _driver_union_find
 from kgx_spark.pipeline.extract import extract_text_bytes
+from kgx_spark.pipeline.link import MAX_NGRAM, detect_mentions
 
 html_text = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400
@@ -56,6 +60,56 @@ def test_merge_nodes_idempotent(spark, rows):
     a = {tuple(r) for r in once.collect()}
     b = {tuple(r) for r in twice.collect()}
     assert a == b  # merge is idempotent on already-merged input
+
+
+# Spark's trim strips spaces only; its split pattern \s+ is Java's ASCII
+# whitespace class
+_SPARK_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _ngram_oracle(pages, first_tokens):
+    out = Counter()
+    for url, text in pages:
+        if text is None:
+            continue
+        toks = [t for t in _SPARK_WS.split(text.lower().strip(" ")) if t]
+        for i in range(len(toks)):
+            if first_tokens is not None and toks[i] not in first_tokens:
+                continue
+            for k in range(1, MAX_NGRAM + 1):
+                if i + k <= len(toks):
+                    out[(url, i, " ".join(toks[i : i + k]), k)] += 1
+    return out
+
+
+_page_text = st.none() | st.text(alphabet="aB \t\n", max_size=12) | st.builds(
+    lambda lead, words, seps: lead + "".join(w + s for w, s in zip(words, seps)),
+    st.sampled_from(["", " ", "\t", "\n ", "  "]),
+    st.lists(st.sampled_from(["a", "b", "ab", "Ba"]), min_size=1, max_size=3),
+    st.lists(st.sampled_from([" ", "\t", "  ", "\n"]), min_size=3, max_size=3),
+)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    st.lists(_page_text, min_size=1, max_size=4),
+    st.lists(st.sampled_from(["a", "b", "ab", "ba", "c"]), max_size=3, unique=True),
+)
+def test_detect_mentions_matches_ngram_oracle(spark, texts, first_tokens):
+    """detect_mentions yields exactly the (url, pos, mention, ngram_len)
+    multiset of a pure-Python n-gram enumeration — unpruned, and with
+    either first-token prune form — on empty, null, whitespace-only and
+    tab- or newline-led texts with repeated tokens."""
+    pages = [(f"u{i}", t) for i, t in enumerate(texts)]
+    df = spark.createDataFrame(pages, "url string, extracted_text string")
+    ft_df = spark.createDataFrame([(t,) for t in first_tokens], "first_token string")
+    for kwargs, prune in (
+        ({}, None),
+        ({"first_tokens": first_tokens}, set(first_tokens)),
+        ({"first_token_df": ft_df}, set(first_tokens)),
+    ):
+        got = Counter(tuple(r) for r in detect_mentions(df, **kwargs).collect())
+        assert got == _ngram_oracle(pages, prune), kwargs
 
 
 _EDGE_SCHEMA = "subject string, predicate string, object string, provided_by array<string>, note string"
