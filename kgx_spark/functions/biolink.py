@@ -123,24 +123,3 @@ def context_prefixes() -> frozenset[str]:
     prefix-vs-context check, validator.py:560-585)."""
     return CONTEXT_PREFIXES
 
-
-def get_biolink_model_schema(biolink_release: str | None = None) -> str | None:
-    """``kgx.config.get_biolink_model_schema`` (config.py:131-145): format
-    the raw-GitHub URL for a pinned model release. Accepts bare or
-    v-prefixed major.minor.patch SemVer (the reference's two fullmatch
-    patterns, config.py:127-128); anything else raises TypeError; ``None``
-    returns ``None``. URL construction only — nothing is fetched."""
-    import re
-
-    if not biolink_release:
-        return None
-    if not re.fullmatch(r"v?\d+\.\d+\.\d+", biolink_release):
-        raise TypeError(
-            "The 'biolink_release' argument '"
-            + biolink_release
-            + "' is not a properly formatted 'major.minor.patch' semantic version?"
-        )
-    return (
-        "https://raw.githubusercontent.com/biolink/biolink-model/"
-        f"{biolink_release}/biolink-model.yaml"
-    )

@@ -37,7 +37,6 @@ _ROW_TRIPLE = 2
 _ROW_QUAD = 3
 _ROW_GRAPH_START = 4
 _ROW_GRAPH_END = 5
-_ROW_NAMESPACE = 6
 _ROW_NAME = 9
 _ROW_PREFIX = 10
 _ROW_DATATYPE = 11
@@ -436,7 +435,7 @@ class JellyDecoder:
                     raise ValueError(
                         "jelly: quad/graph stream — KGX reads triple streams only"
                     )
-                # _ROW_NAMESPACE is advisory (prefix declarations) — ignored
+                # a namespace row (field 6) is advisory (prefix declarations) — ignored
 
     @staticmethod
     def _check_options(buf: bytes) -> None:

@@ -122,42 +122,6 @@ def meta_edge_count_by_source(
     )
 
 
-def meta_predicate_counts(edges: DataFrame, nodes: DataFrame) -> DataFrame:
-    """(predicate, count) over 'valid' edges — the reference's predicate
-    tally (_capture_predicate, meta_knowledge_graph.py:447-483) minus its
-    missing-endpoint decrements (analyse_edge :566-597). An edge whose
-    subject or object id never appeared as a node record is subtracted
-    back out, but the predicate key survives with count 0, so the
-    distinct-predicate count (get_predicate_count :741-752) still sees it
-    — hence left joins with a flag, not semi-joins.
-
-    The endpoint catalog is every deduplicated node id regardless of
-    category validity (analyse_node registers the id before the category
-    check — :414-441). Divergence note: the reference skips the
-    object-existence check when the subject has zero category mappings
-    (the check sits inside the per-category loop, :577-588); we apply it
-    unconditionally.
-
-    Scale: two unhinted joins against an id-only catalog (AQE broadcasts
-    when small) + one low-cardinality groupBy — same shape as
-    dangling_edges.
-    """
-    ids = _catalog_nodes(nodes).select("id")
-    valid = edges.where(F.col("predicate").rlike(PREDICATE_REGEX)).select(
-        "subject", "predicate", "object"
-    )
-    joined = valid.join(
-        ids.select(F.col("id").alias("subject"), F.lit(1).alias("s_ok")), "subject", "left"
-    ).join(
-        ids.select(F.col("id").alias("object"), F.lit(1).alias("o_ok")), "object", "left"
-    )
-    return joined.groupBy("predicate").agg(
-        F.sum(
-            F.when(F.col("s_ok").isNotNull() & F.col("o_ok").isNotNull(), 1).otherwise(0)
-        ).alias("count")
-    )
-
-
 def meta_knowledge_graph(
     nodes: DataFrame,
     edges: DataFrame,

@@ -66,9 +66,6 @@ from kgx_spark.functions.biolink import (
 from kgx_spark.functions.curie import CURIE_REGEX, curie_reference, is_curie
 from kgx_spark.functions.text import sentence_case
 
-# Back-compat alias: callers may pass their own snapshot.
-KNOWN_CATEGORIES = KNOWN_CLASSES
-
 REQUIRED_NODE_PROPERTIES = ("id", "category")  # validator.py:216-243
 # validator.py:246-273 + the executable battery (see module docstring)
 REQUIRED_EDGE_PROPERTIES = ("id", "subject", "predicate", "object")

@@ -3,14 +3,15 @@
 North-rule stage 1 (BASELINE.json): "trafilatura-style boilerplate-stripped
 text extraction in vectorized Arrow UDFs (byte-identical per url)".
 
-The container has no trafilatura, so the extractor is a self-contained,
-version-pinned pure function of the html bytes (EXTRACTOR_VERSION below):
+The container has no trafilatura, so the extractor is a self-contained
+pure function of the html bytes:
 1. drop <script>/<style>/<nav>/<header>/<footer>/<aside> subtrees,
 2. strip remaining tags,
 3. decode a minimal entity set,
 4. collapse whitespace.
 
-Determinism contract (tested in tests/test_pipeline.py):
+Determinism contract (tested in tests/test_pipeline.py against the
+pure-Python oracle in tests/extract_oracle.py):
 - pure function of bytes (no locale, no time, no dict-order dependence);
 - vectorized: a pandas UDF over Arrow batches (BASELINE.json mandates
   "no per-row Python" — the regexes run per batch via pandas .str, the only
@@ -28,8 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
-EXTRACTOR_VERSION = "1.2.0"  # bump on ANY behavior change (byte-identity pin)
-
 # script/style are CDATA-ish: a browser treats an UNCLOSED <script> as
 # running to end-of-document, so the extractor must too — otherwise
 # malformed html leaks executable-code text into the corpus (adversarial
@@ -44,22 +43,6 @@ _WS = re.compile(r"\s+")
 _ENTITY_MAP = {"&amp;": "&", "&lt;": "<", "&gt;": ">", "&quot;": '"',
                "&#39;": "'", "&nbsp;": " ", "&copy;": "©"}
 _ENTITY_RX = re.compile("|".join(re.escape(k) for k in _ENTITY_MAP))
-
-
-def _decode_entities(s: str) -> str:
-    return _ENTITY_RX.sub(lambda m: _ENTITY_MAP[m.group(0)], s)
-
-
-def extract_text_bytes(html: bytes | None) -> str | None:
-    """The pinned pure extraction function (reference point for tests)."""
-    if html is None:
-        return None
-    s = html.decode("utf-8", errors="replace")
-    s = _DROP_CDATA.sub(" ", s)
-    s = _DROP_SUBTREES.sub(" ", s)
-    s = _TAGS.sub(" ", s)
-    s = _decode_entities(s)
-    return _WS.sub(" ", s).strip()
 
 
 @pandas_udf(StringType())

@@ -105,17 +105,6 @@ EDGE_SCHEMA = T.StructType(
     ]
 )
 
-# pages corpus table (north rule input_hint, BASELINE.json:15)
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("html", T.BinaryType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("lang", T.StringType(), True),
-    ]
-)
-
 # Deterministic output column order for TSV export — the reference's exact
 # OrderedSet contents (kgx/sink/tsv_sink.py:179-182 _order_node_columns,
 # 216-225 _order_edge_columns: core first, then sorted, '_'-internal last).
@@ -124,17 +113,6 @@ NODE_CORE_ORDER = [
     "exact_synonym", "broad_synonym", "narrow_synonym", "related_synonym",
 ]
 EDGE_CORE_ORDER = ["id", "subject", "predicate", "object", "category", "relation", "provided_by"]
-
-
-def is_multivalued(column: str) -> bool:
-    """True if the KGX convention types this column as a list.
-
-    This covers DECLARED columns only. Undeclared long-tail columns are
-    handled by dynamic delimiter sniffing at ingest
-    (kgx_spark.operators.sanitize.sniff_list_columns — the Spark analogue of
-    kgx/utils/kgx_utils.py:884-899).
-    """
-    return column in MULTIVALUED_PROPERTIES
 
 
 def ordered_columns(columns: list[str], core_order: list[str]) -> list[str]:

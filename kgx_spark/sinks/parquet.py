@@ -3,44 +3,12 @@
 Reference: kgx/sink/parquet_sink.py:45-115 buffers ALL records in pandas then
 writes once via pyarrow (single-process, memory-bound). Here it's a native
 distributed write; at cluster scale the same call targets an Iceberg table
-(`df.writeTo(table).append()`) with the salted partition spec from
-kgx_spark.pipeline.materialize.
+(`df.writeTo(table).append()`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_bucketed(
-    nodes: DataFrame | None,
-    edges: DataFrame | None,
-    table_prefix: str,
-    buckets: int = 32,
-) -> None:
-    """Bucketed managed tables for shuffle-free repeated joins.
-
-    nodes bucketed by `id`, edges by `subject` — the two hot join keys
-    (edge-endpoint resolution, clique re-pointing, summary joins). Two
-    bucketed tables with matching bucket counts sort-merge-join WITHOUT an
-    exchange: the co-location survives across jobs, which a plain
-    `repartition` cannot (its layout dies with the job). At cluster scale
-    the same declaration is an Iceberg `bucket(N, id)` partition transform.
-    """
-    if nodes is not None:
-        (
-            nodes.write.mode("overwrite")
-            .bucketBy(buckets, "id")
-            .sortBy("id")
-            .saveAsTable(f"{table_prefix}_nodes")
-        )
-    if edges is not None:
-        (
-            edges.write.mode("overwrite")
-            .bucketBy(buckets, "subject")
-            .sortBy("subject", "predicate", "object")
-            .saveAsTable(f"{table_prefix}_edges")
-        )
 
 
 def write_kgx_parquet(

@@ -101,12 +101,6 @@ def build_edge_page_query(
     return q, bind_vars
 
 
-def curie_from_key(collection: str, key: str) -> str:
-    """(collection 'CL', _key '1000300') → 'CL:1000300'
-    (arango_source.py:219-230)."""
-    return key if ":" in key else f"{collection}:{key}"
-
-
 def read_arango(*args, **kwargs):  # pragma: no cover - driver absent in sandbox
     try:
         import arango  # noqa: F401

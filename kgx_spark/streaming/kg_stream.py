@@ -18,13 +18,15 @@ merge need streaming-specific forms:
   touches are re-aggregated with it; the rest are copied through (the
   merge is idempotent on its own one-row-per-key output), and an empty
   micro-batch — Spark's no-data batch, or a re-crawl the watermark dedup
-  absorbed — leaves the snapshot alone. Per-batch idempotence via a
-  recorded batchId high-water mark, so a replayed micro-batch after a
-  crash cannot double-merge. Each merged snapshot is swapped in by the
-  batch pipeline's stage commit (pipeline/stages.py ``commit``, with its
-  commit record), and ``recover`` finishes a swap a crash cut short before
-  the next update reads the snapshot. On a cluster the read-merge-rewrite
-  becomes an Iceberg/Delta MERGE INTO against the edges table.
+  absorbed — leaves the snapshot alone. The same idempotence makes a
+  micro-batch that Spark replays after a crash re-merge to the snapshot it
+  already merged: provenance is a sorted distinct union and the snapshot's
+  ids are kept. Each merged snapshot is swapped in by the batch pipeline's
+  stage commit (pipeline/stages.py ``commit``, with its commit record);
+  ``recover`` finishes a swap a crash cut short, and the next update reads
+  the snapshot with the schema its record holds. On a cluster the
+  read-merge-rewrite becomes an Iceberg/Delta MERGE INTO against the edges
+  table.
 
 Scale notes: the stream is narrow until the per-batch merge, so executors
 process page files wherever they land — no shuffle before dedup. The
@@ -46,9 +48,8 @@ shuffle, AQE and broadcast joins are the caller's:
 - ``FileSystemBasedCheckpointFileManager``. Its rename is an atomic local
   ``rename(2)``. With the default ``FileContext`` manager, Hadoop's local
   file system forks a ``readlink`` process per rename when its native
-  library is missing, and a checkpoint renames every file it writes. The
-  checkpoint is local-only either way: the high-water mark is written
-  with ``os.replace``. Every checksum file stays.
+  library is missing, and a checkpoint renames every file it writes. Every
+  checksum file stays.
 
 No-data micro-batches stay on: the one after a drop evicts the dedup state
 its watermark expired. Without it eviction waits until the end of the next
@@ -59,7 +60,6 @@ as a duplicate instead of merging its new provenance.
 from __future__ import annotations
 
 import glob
-import json
 import os
 import weakref
 
@@ -71,7 +71,7 @@ from kgx_spark.functions.keys import generate_edge_identifiers
 from kgx_spark.operators.merge import merge_edges
 from kgx_spark.operators.validate import validate_edges
 from kgx_spark.pipeline.extract import extract_text
-from kgx_spark.pipeline.stages import commit, recover
+from kgx_spark.pipeline.stages import commit, read_record, recover
 from kgx_spark.pipeline.triples import extract_triples
 
 # the pages table contract (pipeline/synth.py synth_pages; in production an
@@ -156,9 +156,15 @@ def _stream_session(spark: SparkSession) -> SparkSession:
 
 
 def _read_snapshot(spark: SparkSession, edges_dir: str, schema: T.StructType) -> DataFrame:
-    """The live snapshot on ``spark``; before the first drop, an empty one
-    of the batch's schema. Either way the merge is planned on ``spark``,
-    not on the micro-batch's stream session with its one shuffle partition."""
+    """The live snapshot on ``spark``, read with the schema its commit
+    record holds, so no schema-inference job runs; a snapshot without a
+    record (one copied in from elsewhere) is read bare. Before the first
+    drop, an empty one of the batch's schema. Either way the merge is
+    planned on ``spark``, not on the micro-batch's stream session with its
+    one shuffle partition."""
+    record = read_record(edges_dir)
+    if record is not None:
+        return spark.read.schema(T.StructType.fromJson(record["schema"])).parquet(edges_dir)
     if _has_snapshot(edges_dir):
         return spark.read.parquet(edges_dir)
     return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
@@ -173,30 +179,17 @@ def stream_kg_update(
 ) -> None:
     """Continuous KG maintenance: drain page drops and MERGE their triples
     into the persistent edges snapshot (reference merge semantics per
-    (s,p,o): provenance unions, deterministic ids). Idempotent per
-    micro-batch: a batchId at or below the recorded high-water mark is not
-    merged again, so foreachBatch replays after a crash cannot double-merge."""
-    hwm_path = os.path.join(checkpoint_dir, "_merged_batch.json")
+    (s,p,o): provenance unions, deterministic ids). A micro-batch that
+    Spark replays after a crash merges again, and the merge's idempotence
+    leaves the snapshot as the first merge wrote it."""
     recover(edges_dir)
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        if os.path.exists(hwm_path):
-            with open(hwm_path) as fh:
-                if batch_id <= json.load(fh)["batch_id"]:
-                    # merged before a kill: Spark still requires the replay
-                    # to commit the batch's dedup state, so run it unmerged
-                    batch.write.format("noop").mode("overwrite").save()
-                    return
         # one run of the extraction and the dedup state commit
         new = batch.drop("warc_ts").localCheckpoint()
         if new.isEmpty():
             return
         _swap_snapshot(_merge_into(_read_snapshot(spark, edges_dir, new.schema), new), edges_dir)
-        # write-then-rename: a kill mid-write must not leave a truncated
-        # high-water mark that every later update fails to parse
-        with open(hwm_path + ".tmp", "w") as fh:
-            json.dump({"batch_id": batch_id}, fh)
-        os.replace(hwm_path + ".tmp", hwm_path)
 
     q = (
         stream_pages_to_triples(_stream_session(spark), landing_dir, watermark)

@@ -22,7 +22,6 @@ from kgx_spark.sources.arango_source import (
     build_aql_node_filter,
     build_edge_page_query,
     build_node_page_query,
-    curie_from_key,
 )
 from kgx_spark.sources.neo_source import (
     build_count_query,
@@ -169,11 +168,6 @@ def test_aql_edge_page_query_with_endpoint_docs():
 def test_aql_empty_filters():
     assert build_aql_node_filter(None) == ("", {})
     assert build_aql_edge_filter({}) == ("", {})
-
-
-def test_curie_from_key():
-    assert curie_from_key("CL", "1000300") == "CL:1000300"
-    assert curie_from_key("nodes", "GO:1") == "GO:1"  # already a CURIE
 
 
 # ------------------------------------------------------------------ docs

@@ -5,20 +5,17 @@ watermark dedup and foreachBatch incremental merge.
 Checked against the BATCH operators on the same pages (the reference
 semantics): a re-dropped page adds nothing, a key re-asserted past the
 watermark merges, and the incrementally-merged edges snapshot matches the
-batch merge over the full corpus — including replay
-idempotence through the recorded batchId high-water mark and recovery from
-a snapshot swap or a high-water-mark write cut short by a crash."""
+batch merge over the full corpus — including the idempotence of a batch
+Spark replays after a crash, and recovery from a snapshot swap cut short
+by a crash."""
 
 import glob
-import json
 import os
 import shutil
 from datetime import datetime, timedelta
-from types import SimpleNamespace
 
 import pyspark.sql.functions as F
 import pytest
-from pyspark.errors import StreamingQueryException
 
 from kgx_spark.operators.merge import merge_edges
 from kgx_spark.operators.validate import validate_edges
@@ -128,43 +125,20 @@ def test_stream_kg_update_recovers_interrupted_swap(spark, tmp_path, crash_state
     assert not os.path.exists(edges + ".old")
 
 
-def test_stream_kg_update_survives_kill_mid_hwm_write(spark, tmp_path, monkeypatch):
-    """A kill while the high-water mark is being written must not wedge the
-    stream: the next update still reads the mark, re-runs the cut batch and
-    leaves the graph of both drops."""
-    tmpdir = str(tmp_path)
-    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
-    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
-
-    _copy_drop(a_dir, landing, "dropA")
-    stream_kg_update(spark, landing, edges, ckpt)
-
-    def torn_dump(obj, fh):
-        fh.write(json.dumps(obj)[:5])
-        raise OSError("killed mid-write")
-
-    _copy_drop(b_dir, landing, "dropB")
-    with monkeypatch.context() as m:
-        m.setattr(kg_stream, "json", SimpleNamespace(load=json.load, dump=torn_dump))
-        with pytest.raises(StreamingQueryException, match="killed mid-write"):
-            stream_kg_update(spark, landing, edges, ckpt)
-
-    stream_kg_update(spark, landing, edges, ckpt)
-    assert _read_spo(spark, edges) == _batch_spo(pages)
-
-
 def test_stream_kg_update_replays_a_batch_merged_before_a_kill(spark, tmp_path):
-    """A kill after a batch's high-water mark is written but before Spark
-    commits the batch: the restart replays it. The replay must not merge
-    again, and must still commit its dedup state, or every restart fails."""
+    """A kill after a batch's merge is swapped in but before Spark commits
+    the batch: the restart replays it. The replay must leave the snapshot
+    as it was, and must still commit its dedup state, or every restart
+    fails."""
     tmpdir = str(tmp_path)
     landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
     edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
 
     _copy_drop(a_dir, landing, "dropA")
     stream_kg_update(spark, landing, edges, ckpt)
-    with open(f"{ckpt}/_merged_batch.json") as fh:
-        merged = json.load(fh)["batch_id"]
+    # the newest commit is Spark's no-data batch after the drop; the batch
+    # before it merged the drop
+    merged = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit()) - 1
     # roll Spark's logs back to the kill: no commit of the merged batch,
     # and no trace of the no-data batch after it
     for log, n in (("commits", merged), ("commits", merged + 1), ("offsets", merged + 1)):
@@ -178,6 +152,33 @@ def test_stream_kg_update_replays_a_batch_merged_before_a_kill(spark, tmp_path):
     _copy_drop(b_dir, landing, "dropB")
     stream_kg_update(spark, landing, edges, ckpt)
     assert _read_spo(spark, edges) == _batch_spo(pages)
+
+
+def test_warm_drop_reads_its_snapshot_without_a_job(spark, tmp_path):
+    """A committed snapshot is read with the schema its commit record
+    holds, so reading it launches no Spark job; without the record, a bare
+    read infers the schema with one."""
+    tmpdir = str(tmp_path)
+    landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
+    edges, ckpt = f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+    _copy_drop(a_dir, landing, "dropA")
+    stream_kg_update(spark, landing, edges, ckpt)
+    # the checkpoint holds Spark's logs and state only (and their .crc files)
+    assert {n for n in os.listdir(ckpt) if not n.startswith(".")} == {
+        "commits", "metadata", "offsets", "sources", "state"
+    }
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    schema = spark.read.parquet(edges).schema
+
+    first = scheduler.nextJobId()
+    snapshot = kg_stream._read_snapshot(spark, edges, schema)
+    assert scheduler.nextJobId() - first == 0
+    assert snapshot.schema == schema
+
+    os.remove(f"{edges}/_commit.json")
+    first = scheduler.nextJobId()
+    assert kg_stream._read_snapshot(spark, edges, schema).schema == schema
+    assert scheduler.nextJobId() - first == 1
 
 
 def test_stream_kg_update_into_empty_edges_dir(spark, tmp_path):

@@ -9,12 +9,14 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import DataFrameWriter
 
-from kgx_spark.pipeline.extract import extract_text, extract_text_bytes
+from kgx_spark.pipeline.extract import extract_text
 from kgx_spark.pipeline.kg_pipeline import run_kg_pipeline
 from kgx_spark.pipeline.link import detect_mentions, link_mentions
 from kgx_spark.pipeline.stages import read_metrics
 from kgx_spark.pipeline.synth import synth_alias_dict, synth_pages
 from kgx_spark.pipeline.triples import extract_triples
+
+from extract_oracle import extract_text_bytes
 
 SF = "/root/testdata/sf0.001"
 

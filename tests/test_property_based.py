@@ -8,8 +8,9 @@ import hypothesis.strategies as st
 from hypothesis import HealthCheck, given, settings
 
 from kgx_spark.operators.clique import _driver_union_find
-from kgx_spark.pipeline.extract import extract_text_bytes
 from kgx_spark.pipeline.link import MAX_NGRAM, detect_mentions
+
+from extract_oracle import extract_text_bytes
 
 html_text = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=400

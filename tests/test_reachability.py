@@ -1,23 +1,65 @@
-"""Every kgx_spark module is reached from a user path.
+"""Every kgx_spark module, and every top-level definition in it, is reached
+from a user path.
 
 The user paths are the KGX CLI, the batch crawl build, the streaming
-update, the pipeline script and the ``__spark_entry__`` registry. Their
-``import`` and ``from … import`` statements are followed statically (ast,
-imports inside functions included); a module nothing reaches is dead code
-and must be deleted, not kept for its tests.
+update, the pipeline script, the ``__spark_entry__`` registry and the
+benchmark (``kgbench/run.py``). Everything is read statically with ``ast``;
+no module is imported and no Spark session starts.
+
+- Modules: the roots' ``import`` and ``from … import`` statements are
+  followed (imports inside functions included).
+- Definitions (top-level functions, classes and assigned names): the names
+  a reached definition references are followed, through ``from … import``
+  bindings and ``module.attr`` references, transitively. A module's
+  top-level statements that define nothing run on import and are roots too.
+
+A module or definition nothing reaches is dead code and must be deleted,
+not kept for its tests; a test's reference oracle lives in ``tests/``.
+Dunder names (``__version__``) are Python's module metadata, not code, and
+are not checked. Run this file after deleting or adding any top-level
+definition.
 """
 
 import ast
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-ROOTS = [
-    "kgx_spark/__main__.py",
-    "kgx_spark/pipeline/kg_pipeline.py",
-    "kgx_spark/streaming/kg_stream.py",
-    "scripts/run_pipeline.py",
-    "__spark_entry__.py",
-]
+# user-path root files → the definitions in them a user calls (None: all)
+ROOTS = {
+    "kgx_spark/__main__.py": None,
+    "kgx_spark/pipeline/kg_pipeline.py": {"run_kg_pipeline"},
+    "kgx_spark/streaming/kg_stream.py": {"stream_kg_update"},
+    "scripts/run_pipeline.py": None,
+    "__spark_entry__.py": None,
+    "kgbench/run.py": None,
+}
+# definitions kept although no user path calls them: each reproduces a file
+# the reference KGX CLI writes, and wiring it into the CLI adds a flag
+CLI_PARITY = {
+    # `kgx transform --infores-catalog FILE` writes the transformer's
+    # get_infores_catalog() (transformer.py:313-319) as a TSV; COVERAGE.md,
+    # provenance-map row
+    "kgx_spark.functions.infores.transformer_infores_catalog",
+}
+# dead definitions whose deletion takes tier-1 tests with it, so each waits
+# for a change of its own (ROADMAP.md, "Delete the deferred test-only
+# definitions"); what they use is not reported
+DEFERRED = {
+    # the AQL builders; read_arango only raises when its driver is absent
+    # and returns None when it is present, so it calls none of them
+    "kgx_spark.sources.arango_source.build_aql_edge_filter",
+    "kgx_spark.sources.arango_source.build_aql_node_filter",
+    "kgx_spark.sources.arango_source.build_edge_page_query",
+    "kgx_spark.sources.arango_source.build_node_page_query",
+    # transform.merge merges in the configured order
+    "kgx_spark.operators.merge.merge_all_graphs",
+    # only the streaming package's __init__ re-exports it
+    "kgx_spark.streaming.ingest.stream_kgx_jsonl",
+    # rdf_nt reads CURIE_LOOKUP itself
+    "kgx_spark.sources.rdf_dispatch.build_curie_map",
+    # clique_merge takes its prefix order as an argument
+    "kgx_spark.functions.biolink.prefix_priority",
+}
 
 
 def _module_name(path: Path) -> str:
@@ -31,17 +73,23 @@ def _package_modules() -> dict[str, Path]:
     return {_module_name(p): p for p in (ROOT / "kgx_spark").rglob("*.py")}
 
 
-def _imported_names(path: Path, modules: dict[str, Path]) -> set[str]:
-    """Dotted names this file imports: ``from a import b`` yields ``a.b``
-    when that is a module, else ``a``; relative imports are resolved
-    against the file's package."""
+def _bindings(path: Path, modules: dict[str, Path]) -> dict[str, tuple[str, str | None]]:
+    """Every name an import in this file binds → (module, name), or
+    (module, None) when it binds a module. ``from a import b`` binds a
+    module when ``a.b`` is one; relative imports are resolved against the
+    file's package."""
     package = _module_name(path)
     if path.name != "__init__.py":
         package = package.rpartition(".")[0]
-    out = set()
+    out = {}
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if isinstance(node, ast.Import):
-            out.update(a.name for a in node.names)
+            for a in node.names:
+                if a.asname:
+                    out[a.asname] = (a.name, None)
+                else:
+                    head = a.name.partition(".")[0]
+                    out[head] = (head, None)
         elif isinstance(node, ast.ImportFrom):
             base = node.module or ""
             if node.level:
@@ -49,8 +97,13 @@ def _imported_names(path: Path, modules: dict[str, Path]) -> set[str]:
                 base = ".".join(anchor + ([base] if base else []))
             for a in node.names:
                 sub = f"{base}.{a.name}"
-                out.add(sub if sub in modules else base)
+                out[a.asname or a.name] = (sub, None) if sub in modules else (base, a.name)
     return out
+
+
+def _imported_names(path: Path, modules: dict[str, Path]) -> set[str]:
+    """Dotted module names this file imports."""
+    return {mod for mod, _ in _bindings(path, modules).values()}
 
 
 def _reached(modules: dict[str, Path]) -> set[str]:
@@ -78,3 +131,107 @@ def test_every_module_is_reached_from_a_user_path():
     modules = _package_modules()
     unreached = sorted(set(modules) - _reached(modules))
     assert not unreached, f"no user path imports {unreached}"
+
+
+class _Module:
+    """A file's top-level definitions, its import bindings and its
+    top-level statements that define nothing."""
+
+    def __init__(self, path: Path, modules: dict[str, Path]):
+        self.defs: dict[str, list[ast.stmt]] = {}
+        self.other: list[ast.stmt] = []
+        self.bindings = _bindings(path, modules)
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                self.defs.setdefault(stmt.name, []).append(stmt)
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name):
+                            self.defs.setdefault(n.id, []).append(stmt)
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                self.other.append(stmt)
+
+
+def _references(node: ast.AST) -> list[list[str]]:
+    """Each name and ``a.b.c`` attribute chain in ``node``, as a list of
+    parts (``a.b.c`` also yields ``a.b`` and ``a``)."""
+    out = []
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.append([n.id])
+        elif isinstance(n, ast.Attribute):
+            chain = [n.attr]
+            v = n.value
+            while isinstance(v, ast.Attribute):
+                chain.append(v.attr)
+                v = v.value
+            if isinstance(v, ast.Name):
+                out.append([v.id, *reversed(chain)])
+    return out
+
+
+def _reached_definitions(modules: dict[str, Path], extra: set[str] = frozenset()) -> set[str]:
+    """Dotted ``module.name`` of every definition the roots, and the
+    ``extra`` definitions, reach."""
+    parsed = {name: _Module(path, modules) for name, path in modules.items()}
+    seen: set[str] = set()
+    todo: list[tuple[str, ast.AST]] = []
+
+    def reach(mod: str, name: str) -> None:
+        m = parsed.get(mod)
+        if m is None:
+            return
+        if name in m.defs:
+            if f"{mod}.{name}" not in seen:
+                seen.add(f"{mod}.{name}")
+                todo.extend((mod, stmt) for stmt in m.defs[name])
+        elif name in m.bindings and m.bindings[name][1] is not None:
+            reach(*m.bindings[name])
+
+    def follow(mod: str, chain: list[str]) -> None:
+        head, *attrs = chain
+        target, attr = parsed[mod].bindings.get(head, (mod, head))
+        if attr is not None or head in parsed[mod].defs:
+            reach(mod, head)
+            return
+        # a module alias: walk submodules down the chain, then its attribute
+        for part in attrs:
+            if f"{target}.{part}" in modules:
+                target = f"{target}.{part}"
+            else:
+                reach(target, part)
+                return
+
+    for rel, names in ROOTS.items():
+        path = ROOT / rel
+        mod = _module_name(path)
+        if mod not in parsed:  # a root outside the package
+            parsed[mod] = _Module(path, modules)
+        for name in parsed[mod].defs if names is None else names:
+            reach(mod, name)
+    for dotted in extra:
+        reach(*dotted.rsplit(".", 1))
+    for mod, m in parsed.items():
+        todo.extend((mod, stmt) for stmt in m.other)
+    while todo:
+        mod, node = todo.pop()
+        for chain in _references(node):
+            follow(mod, chain)
+    return seen
+
+
+def test_every_definition_is_reached_from_a_user_path():
+    modules = _package_modules()
+    defined = {
+        f"{mod}.{name}"
+        for mod, path in modules.items()
+        for name in _Module(path, modules).defs
+        if not (name.startswith("__") and name.endswith("__"))
+    }
+    exempt = CLI_PARITY | DEFERRED
+    unreached = sorted(defined - _reached_definitions(modules, exempt))
+    assert not unreached, f"no user path reaches {unreached}"
+    # the two sets name only definitions that exist and no user path reaches
+    assert exempt <= defined - _reached_definitions(modules), "stale entry in CLI_PARITY or DEFERRED"

@@ -569,19 +569,12 @@ def test_meta_kg_graph_fixture_node_stats(spark):
 
 def test_meta_kg_graph_fixture_edge_stats(spark):
     """::test_generate_meta_knowledge_graph_by_inspector edge-side asserts:
-    539 valid edges, 13 (subject_category, predicate, object_category)
-    mappings, Gene-interacts_with-Gene count 165, and the
-    aggregator_knowledge_source facet counts (string 160, hpoa 111)."""
-    from kgx_spark.operators.meta_kg import (
-        meta_edge_count_by_source,
-        meta_edge_stats,
-        meta_predicate_counts,
-    )
+    13 (subject_category, predicate, object_category) mappings,
+    Gene-interacts_with-Gene count 165, and the aggregator_knowledge_source
+    facet counts (string 160, hpoa 111)."""
+    from kgx_spark.operators.meta_kg import meta_edge_count_by_source, meta_edge_stats
 
     nodes, edges = _graph_fixture(spark)
-
-    preds = meta_predicate_counts(edges, nodes)
-    assert preds.agg({"count": "sum"}).collect()[0][0] == 539
 
     mappings = {
         (r["subject_category"], r["predicate"], r["object_category"]): r["count"]
@@ -612,13 +605,12 @@ def test_meta_kg_graph_fixture_edge_stats(spark):
 def test_meta_kg_multi_category_fixture(spark):
     """::test_meta_knowledge_graph_multiple_category_and_predicate_parsing —
     the Cartesian category-product semantics: 10 nodes / 7 categories /
-    35 node-category mappings; 8 valid edges (one dangles on HP:0010636) /
-    2 predicates / 25 edge mappings / 100 edge counts across mappings."""
+    35 node-category mappings; 25 edge mappings / 100 edge counts across
+    mappings."""
     from kgx_spark.operators.meta_kg import (
         _catalog_nodes,
         meta_edge_stats,
         meta_node_stats,
-        meta_predicate_counts,
     )
     from kgx_spark.sources.tsv import read_kgx_tsv
 
@@ -635,11 +627,6 @@ def test_meta_kg_multi_category_fixture(spark):
     assert node_stats["biolink:BiologicalEntity"] == 5
     assert "biolink:AnatomicalEntityEntity" not in node_stats
     assert sum(node_stats.values()) == 35
-
-    preds = {r["predicate"]: r["count"] for r in meta_predicate_counts(edges, nodes).collect()}
-    assert len(preds) == 2
-    assert preds["biolink:has_phenotype"] == 4
-    assert sum(preds.values()) == 8
 
     edge_stats = meta_edge_stats(edges, nodes)
     rows = edge_stats.collect()

@@ -2,8 +2,8 @@
 
 from kgx_spark.schema import (
     EDGE_CORE_ORDER,
+    MULTIVALUED_PROPERTIES,
     NODE_CORE_ORDER,
-    is_multivalued,
     ordered_columns,
 )
 
@@ -38,5 +38,5 @@ def test_edge_column_ordering():
 
 
 def test_multivalued_convention():
-    assert is_multivalued("category") and is_multivalued("publications")
-    assert not is_multivalued("predicate") and not is_multivalued("name")
+    assert {"category", "publications"} <= MULTIVALUED_PROPERTIES
+    assert not {"predicate", "name"} & MULTIVALUED_PROPERTIES

@@ -209,18 +209,3 @@ def test_curie_lookup_service_custom_map():
     assert curie_lookup("XYZ:123", curie_map=merged) == "custom entry"
     # repeated builds stay independent (no reference-style shared mutation)
     assert "XYZ:123" not in build_curie_map()
-
-
-# --- get_biolink_model_schema parity (tests/unit/test_config.py) ----------
-def test_get_biolink_model_schema_reference_cases():
-    from kgx_spark.functions.biolink import get_biolink_model_schema
-
-    assert get_biolink_model_schema("v3.2.1") == (
-        "https://raw.githubusercontent.com/biolink/biolink-model/v3.2.1/biolink-model.yaml"
-    )
-    assert get_biolink_model_schema("2.0.1") == (
-        "https://raw.githubusercontent.com/biolink/biolink-model/2.0.1/biolink-model.yaml"
-    )
-    assert get_biolink_model_schema() is None
-    with pytest.raises(TypeError):
-        get_biolink_model_schema("not.a.semver")
