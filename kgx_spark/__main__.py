@@ -95,7 +95,8 @@ def main(argv: list[str] | None = None) -> int:
 
     # connector verbs (kgx/cli/__init__.py:218-661) — wired to the
     # import-gated distributed connectors; without the bolt/arango drivers
-    # (absent in this sandbox) they exit 1 with the gate's message
+    # they exit 1 with the gate's message. arangodb-download has no reader
+    # and exits 1 with "not supported" even with the driver installed
     nd = sub.add_parser("neo4j-download", help="kgx neo4j-download (cli/__init__.py:218-322)")
     nd.add_argument("--uri", "-l", required=True)
     nd.add_argument("--username", "-u", required=True)
@@ -312,7 +313,7 @@ def main(argv: list[str] | None = None) -> int:
                 write_arango(
                     nodes, edges, args.uri, args.database, args.username, args.password
                 )
-        except ImportError as e:
+        except (ImportError, NotImplementedError) as e:
             print(str(e), file=sys.stderr)
             return 1
     elif args.cmd == "validate":

@@ -22,7 +22,6 @@ from kgx_spark.functions.biolink_model import (
     CONTEXT_PREFIXES,
     MIXINS,
     PREDICATES,
-    PREFIX_PRIORITY,
     SLOT_TYPES,
 )
 
@@ -105,17 +104,6 @@ def specificity_table(spark: SparkSession) -> DataFrame:
     sorts the category union by ancestor count)."""
     rows = [(cat, len(ancs)) for cat, ancs in CATEGORY_ANCESTORS.items()]
     return spark.createDataFrame(rows, "category string, depth int")
-
-
-def prefix_priority(category: str) -> list[str]:
-    """Per-class id-prefix ranking (kgx_utils.py:419-438), falling back up the
-    is_a chain so e.g. biolink:Snv inherits SequenceVariant's prefixes."""
-    if category in PREFIX_PRIORITY:
-        return PREFIX_PRIORITY[category]
-    for anc in CATEGORY_ANCESTORS.get(category, []):
-        if anc in PREFIX_PRIORITY:
-            return PREFIX_PRIORITY[anc]
-    return []
 
 
 def context_prefixes() -> frozenset[str]:

@@ -24,7 +24,8 @@ ours is a pure function of (value, input ordinal):
 - preserve=False non-core scalars keep the HIGHEST non-null ordinal — the
   reference's overwrite-with-incoming (merge_node applies prepare_data_dict
   with the later-merged graph as `data`, graph_merge.py:150-213), which under
-  merge_all_graphs' largest-graph-first ordering is exactly "last graph wins";
+  the reference merge_all_graphs' largest-graph-first ordering is exactly
+  "last graph wins";
 - list union = sorted distinct (the reference itself sorts list values on
   import — kgx_utils.py:871);
 - conflict-promotion joins the sorted distinct values with '|' (the KGX TSV
@@ -83,7 +84,8 @@ def _scalar_merge(name: str, preserve: bool) -> Column:
 
     preserve=True: conflicting values → '|'-joined sorted distinct list;
     preserve=False: overwrite with the incoming (highest-ordinal) value —
-    under merge_all_graphs ordering this reproduces the reference's
+    with the inputs listed largest-first (the reference merge_all_graphs'
+    order) this reproduces the reference's
     test_merge_no_preserve outcome (x1.p1 == 'a',
     tests/integration/test_graph_merge.py:47-80).
     """
@@ -175,20 +177,3 @@ def merge_graphs(
     edges = merge_edges([g[1] for g in graphs], preserve, key_col=edge_key_col)
     return nodes, edges
 
-
-def merge_all_graphs(
-    graphs: list[tuple[DataFrame, DataFrame]],
-    preserve: bool = True,
-    edge_key_col: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """merge_all_graphs (graph_merge.py:12-56): the reference pops the graph
-    with the most edges and merges the REST into it in order, so the largest
-    graph's values are overwritten by every other input under
-    preserve=False. Reproduced by reordering the inputs largest-first before
-    the ordinal tagging (the groupBy itself stays one shuffle; the edge
-    counts are N cheap driver-side jobs, same as the reference's len() —
-    callers that already know their order use merge_graphs directly)."""
-    sizes = [g[1].count() for g in graphs]
-    largest = sizes.index(max(sizes))
-    ordered = [graphs[largest]] + [g for i, g in enumerate(graphs) if i != largest]
-    return merge_graphs(ordered, preserve, edge_key_col=edge_key_col)

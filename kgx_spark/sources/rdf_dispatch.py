@@ -115,18 +115,6 @@ CURIE_LOOKUP: dict[str, str] = {
 }
 
 
-def build_curie_map(custom: dict[str, str] | None = None) -> dict[str, str]:
-    """``CurieLookupService(curie_map=...)`` merge semantics
-    (curie_lookup_service.py:20-25): the service starts from its built-in
-    map and ``update``s it with the user's entries, so custom keys are
-    added and custom values override built-ins. The reference mutates the
-    module-level CURIE_MAP in place (a shared-state quirk); we return a
-    copy so repeated calls stay independent."""
-    merged = dict(CURIE_LOOKUP)
-    if custom:
-        merged.update(custom)
-    return merged
-
 #: Published biolink-model slot/class ``mappings`` (the data behind the
 #: reference's ``toolkit.get_element_by_mapping``), keyed by mapping CURIE
 #: → element name as it appears in our model tables. bmt indexes both the
@@ -267,17 +255,15 @@ def _underscore(word: str) -> str:
     return word.lower()
 
 
-def curie_lookup(curie: str, curie_map: dict[str, str] | None = None) -> str | None:
+def curie_lookup(curie: str) -> str | None:
     """``kgx.utils.graph_utils.curie_lookup`` (graph_utils.py:129-157):
     OIO/OWL/owl/OBO/rdfs-prefixed CURIEs underscore their reference part;
     everything else resolves through the CurieLookupService map (built-ins
-    + preloaded-ontology rdfs:labels — CURIE_LOOKUP above). Pass
-    ``curie_map`` (from build_curie_map) to resolve against a
-    custom-extended service map."""
+    + preloaded-ontology rdfs:labels — CURIE_LOOKUP above)."""
     prefix = curie.split(":", 1)[0] if ":" in curie else None
     if prefix in ("OIO", "OWL", "owl", "OBO", "rdfs"):
         return _underscore(curie.split(":", 1)[1])
-    return (curie_map if curie_map is not None else CURIE_LOOKUP).get(curie)
+    return CURIE_LOOKUP.get(curie)
 
 
 def _name_index() -> dict[str, tuple[str, str]]:

@@ -1,9 +1,8 @@
-"""Structured Streaming ingest (optional surface).
+"""Streaming KG update.
 
 The reference's "streaming" is bounded generator iteration
 (kgx/transformer.py:116) — batch DataFrames already satisfy those semantics
-(SURVEY.md §2.8). This package adds a true continuous-ingest mode for
-KGX-record streams (e.g. a landing directory of JSONL drops).
+(SURVEY.md §2.8). This package holds the one continuous path:
+``kg_stream.stream_kg_update`` merges landing drops of crawled pages into a
+live edge snapshot.
 """
-
-from kgx_spark.streaming.ingest import stream_kgx_jsonl  # noqa: F401

@@ -459,8 +459,9 @@ def merge(
     reorders inputs largest-edge-count-first before merging; that ordering
     is observable only through scalar-conflict resolution. Here sources
     merge in the configured order — counting edges first would be a full
-    scan per source at scale. Callers needing the reference's exact
-    ordering use operators.merge.merge_all_graphs directly."""
+    scan per source at scale. Under preserve=False a scalar conflict can
+    therefore resolve differently from the reference; list the sources
+    largest-first to reproduce its result."""
     graphs = [read_source(spark, s) for s in sources]
     nodes, edges = merge_graphs(graphs, preserve=preserve)
     if operations:

@@ -28,7 +28,6 @@ strict-mode clique merge exclude valid nodes):
   - CLASSES and MIXINS are disjoint; class names are CamelCase, predicate
     names snake_case
   - derived ancestor closures are transitively closed
-  - PREFIX_PRIORITY keys are known classes
   - SLOT_TYPES multivalued flags match the reference's
     is_property_multivalued map (kgx/utils/kgx_utils.py:87-113) for every
     slot both define, modulo the documented deliberate deviations
@@ -131,11 +130,6 @@ def parse_model(yaml_path: str) -> dict:
             parent = spec.get("is_a")
             predicates[_snake(name)] = _snake(parent) if parent else None
 
-    prefix_priority = {
-        camel_of[name]: (spec or {}).get("id_prefixes", [])
-        for name, spec in raw_classes.items()
-        if (spec or {}).get("id_prefixes") and camel_of[name] in classes
-    }
     context_prefixes = sorted(model.get("prefixes", {}))
 
     slot_types = {}
@@ -152,7 +146,6 @@ def parse_model(yaml_path: str) -> dict:
         "CLASSES": classes,
         "MIXINS": mixins,
         "PREDICATES": predicates,
-        "PREFIX_PRIORITY": prefix_priority,
         "CONTEXT_PREFIXES": context_prefixes,
         "SLOT_TYPES": slot_types,
     }
@@ -176,7 +169,7 @@ def verify_snapshot() -> list[str]:
     sys.path.insert(0, ".")
     from kgx_spark.functions import biolink as B
     from kgx_spark.functions.biolink_model import (
-        CLASSES, CONTEXT_PREFIXES, MIXINS, PREDICATES, PREFIX_PRIORITY, SLOT_TYPES,
+        CLASSES, CONTEXT_PREFIXES, MIXINS, PREDICATES, SLOT_TYPES,
     )
 
     problems: list[str] = []
@@ -230,10 +223,6 @@ def verify_snapshot() -> list[str]:
             if a in anc and not set(anc[a]) <= set(ancestors):
                 missing = sorted(set(anc[a]) - set(ancestors))
                 problems.append(f"{cls}: ancestor {a}'s ancestors missing {missing}")
-
-    for cls in PREFIX_PRIORITY:
-        if cls.removeprefix("biolink:") not in CLASSES:
-            problems.append(f"PREFIX_PRIORITY key not a known class: {cls}")
 
     if not CONTEXT_PREFIXES:
         problems.append("CONTEXT_PREFIXES is empty")

@@ -1,7 +1,7 @@
-"""Neo4j Cypher / ArangoDB AQL generation parity (no servers, no drivers —
-the query TEXT is the testable semantic core; the reference shapes are
-kgx/source/neo_source.py:102-301,483-594, kgx/sink/neo_sink.py:188-241,
-kgx/source/arango_source.py:208-278,477-588, kgx/sink/arango_sink.py:296-311).
+"""Neo4j Cypher generation and ArangoDB record-shaping parity (no servers,
+no drivers — the query TEXT is the testable semantic core; the reference
+shapes are kgx/source/neo_source.py:102-301,483-594,
+kgx/sink/neo_sink.py:188-241, kgx/sink/arango_sink.py:296-311).
 
 Runtime I/O is import-gated (drivers absent in this sandbox) and raises a
 clear ImportError — also pinned here."""
@@ -16,12 +16,6 @@ from kgx_spark.sinks.neo_sink import (
     generate_unwind_edge_query,
     generate_unwind_node_query,
     sanitize_category,
-)
-from kgx_spark.sources.arango_source import (
-    build_aql_edge_filter,
-    build_aql_node_filter,
-    build_edge_page_query,
-    build_node_page_query,
 )
 from kgx_spark.sources.neo_source import (
     build_count_query,
@@ -138,36 +132,6 @@ def test_multi_category_cache_key_to_cypher_label():
     assert "|" not in nq
     cq = create_constraint_query("`biolink:Gene`")
     assert "FOR (n:`biolink:Gene`)" in cq
-
-
-# ------------------------------------------------------------------ AQL
-
-
-def test_aql_node_page_query():
-    q, bv = build_node_page_query("nodes", {"category": ["biolink:Gene"]})
-    assert q.startswith("FOR doc IN `nodes` FILTER ")
-    assert "LENGTH(INTERSECTION(doc.category, @cat_values)) > 0" in q
-    assert "LIMIT @offset, @limit RETURN UNSET(doc, '_id', '_rev')" in q
-    assert bv == {"cat_values": ["biolink:Gene"]}
-
-
-def test_aql_edge_page_query_with_endpoint_docs():
-    q, bv = build_edge_page_query(
-        "edges",
-        {"subject_category": {"biolink:Gene"}, "predicate": "biolink:treats",
-         "provided_by": ["infores:a"]},
-    )
-    assert "LET s = DOCUMENT(edge._from) LET o = DOCUMENT(edge._to)" in q
-    assert "LENGTH(INTERSECTION(s.category, @subj_cat_values)) > 0" in q
-    assert "edge.predicate IN @pred_values" in q
-    assert "@ksf_provided_by ANY IN edge.provided_by" in q
-    assert bv["pred_values"] == ["biolink:treats"]
-    assert bv["ksf_provided_by"] == ["infores:a"]
-
-
-def test_aql_empty_filters():
-    assert build_aql_node_filter(None) == ("", {})
-    assert build_aql_edge_filter({}) == ("", {})
 
 
 # ------------------------------------------------------------------ docs

@@ -160,7 +160,8 @@ def test_merge_edges_by_explicit_key(spark):
         [("F", "biolink:same_as", "E", "F-biolink:same_as-E", "OWL:same_as", None)],
         schema,
     )
-    # merge_all_graphs order: g2 (largest, 4 edges) first, then g1, g3
+    # the reference merge_all_graphs' order, largest graph first: g2 (4
+    # edges), then g1, g3
     merged = merge_edges([g2, g1, g3], key_col="id")
     assert merged.count() == 6
 

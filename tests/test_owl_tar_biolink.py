@@ -10,7 +10,6 @@ from kgx_spark.functions.biolink import (
     KNOWN_CLASSES,
     KNOWN_PREDICATES,
     PREDICATE_ANCESTORS,
-    prefix_priority,
 )
 from kgx_spark.operators.clique import clique_merge
 from kgx_spark.sinks.tsv import write_kgx_tsv
@@ -136,12 +135,6 @@ def test_closure_shape():
     assert "biolink:ChemicalEntity" in CATEGORY_ANCESTORS["biolink:SmallMolecule"]
     assert CATEGORY_ANCESTORS["biolink:Protein"].index("biolink:Polypeptide") == 0
     assert PREDICATE_ANCESTORS["biolink:binds"][0] == "biolink:directly_physically_interacts_with"
-
-
-def test_prefix_priority_inheritance():
-    assert prefix_priority("biolink:Gene")[0] == "NCBIGene"
-    # Snv has no explicit entry — inherits SequenceVariant's
-    assert prefix_priority("biolink:Snv")[0] == "CAID"
 
 
 def test_clique_category_extension(spark):

@@ -41,25 +41,6 @@ CLI_PARITY = {
     # provenance-map row
     "kgx_spark.functions.infores.transformer_infores_catalog",
 }
-# dead definitions whose deletion takes tier-1 tests with it, so each waits
-# for a change of its own (ROADMAP.md, "Delete the deferred test-only
-# definitions"); what they use is not reported
-DEFERRED = {
-    # the AQL builders; read_arango only raises when its driver is absent
-    # and returns None when it is present, so it calls none of them
-    "kgx_spark.sources.arango_source.build_aql_edge_filter",
-    "kgx_spark.sources.arango_source.build_aql_node_filter",
-    "kgx_spark.sources.arango_source.build_edge_page_query",
-    "kgx_spark.sources.arango_source.build_node_page_query",
-    # transform.merge merges in the configured order
-    "kgx_spark.operators.merge.merge_all_graphs",
-    # only the streaming package's __init__ re-exports it
-    "kgx_spark.streaming.ingest.stream_kgx_jsonl",
-    # rdf_nt reads CURIE_LOOKUP itself
-    "kgx_spark.sources.rdf_dispatch.build_curie_map",
-    # clique_merge takes its prefix order as an argument
-    "kgx_spark.functions.biolink.prefix_priority",
-}
 
 
 def _module_name(path: Path) -> str:
@@ -230,8 +211,7 @@ def test_every_definition_is_reached_from_a_user_path():
         for name in _Module(path, modules).defs
         if not (name.startswith("__") and name.endswith("__"))
     }
-    exempt = CLI_PARITY | DEFERRED
-    unreached = sorted(defined - _reached_definitions(modules, exempt))
+    unreached = sorted(defined - _reached_definitions(modules, CLI_PARITY))
     assert not unreached, f"no user path reaches {unreached}"
-    # the two sets name only definitions that exist and no user path reaches
-    assert exempt <= defined - _reached_definitions(modules), "stale entry in CLI_PARITY or DEFERRED"
+    # the set names only definitions that exist and no user path reaches
+    assert CLI_PARITY <= defined - _reached_definitions(modules), "stale entry in CLI_PARITY"

@@ -496,10 +496,10 @@ def test_merge_fixture_preserve(spark):
     own merge/ TSV fixtures through our source + merge kernel: 6 nodes,
     8 edges; x1 keeps its name, unions categories, and its conflicting p1
     carries BOTH graphs' values ('a' and '1', here '|'-encoded)."""
-    from kgx_spark.operators.merge import merge_all_graphs
+    from kgx_spark.operators.merge import merge_graphs
 
     t1, t2 = _merge_inputs(spark)
-    nodes, edges = merge_all_graphs([t1, t2], preserve=True)
+    nodes, edges = merge_graphs([t1, t2], preserve=True)
     n = _by_id(nodes)
     assert len(n) == 6
     assert edges.count() == 8
@@ -518,11 +518,12 @@ def test_merge_fixture_preserve(spark):
 def test_merge_fixture_no_preserve(spark):
     """::test_merge_no_preserve — overwrite mode: x1's category still unions
     (multivalued), but p1 resolves to the INCOMING graph's 'a' (the largest
-    graph — test1, 5 edges — is the merge target; test2 overwrites it)."""
-    from kgx_spark.operators.merge import merge_all_graphs
+    graph — test1, 5 edges — is the merge target; test2 overwrites it).
+    The inputs are listed largest-first, the reference's merge order."""
+    from kgx_spark.operators.merge import merge_graphs
 
     t1, t2 = _merge_inputs(spark)
-    nodes, edges = merge_all_graphs([t1, t2], preserve=False)
+    nodes, edges = merge_graphs([t1, t2], preserve=False)
     n = _by_id(nodes)
     assert len(n) == 6
     assert edges.count() == 8

@@ -197,15 +197,3 @@ def test_curie_lookup_service_reference_rows(curie, label):
     assert curie in CURIE_LOOKUP
     assert curie_lookup(curie) == label
 
-
-def test_curie_lookup_service_custom_map():
-    # test_curie_lookup_with_custom: user entries merge on top of the
-    # built-ins; built-ins still resolve through the merged map.
-    from kgx_spark.sources.rdf_dispatch import build_curie_map, curie_lookup
-
-    merged = build_curie_map({"XYZ:123": "custom entry"})
-    assert merged["XYZ:123"] == "custom entry"
-    assert merged["BFO:0000054"] == "realized_in"
-    assert curie_lookup("XYZ:123", curie_map=merged) == "custom entry"
-    # repeated builds stay independent (no reference-style shared mutation)
-    assert "XYZ:123" not in build_curie_map()

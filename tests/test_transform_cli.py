@@ -384,6 +384,24 @@ def test_cli_connector_verbs_parse_and_gate(spark, tsv_dir, capsys):
         main(["neo4j-download", "--uri", "bolt://h"])
 
 
+def test_cli_arangodb_download_with_driver_is_unsupported(spark, tmp_path, capsys, monkeypatch):
+    """With `python-arango` importable, arangodb-download still exits 1 with
+    a "not supported" message: there is no ArangoDB reader."""
+    import sys
+    import types
+
+    from kgx_spark.__main__ import main
+
+    monkeypatch.setitem(sys.modules, "arango", types.ModuleType("arango"))
+    rc = main([
+        "arangodb-download", "--uri", "http://h:8529", "-d", "db", "-u", "user",
+        "-p", "pw", "-o", str(tmp_path / "out"), "--output-format", "tsv",
+    ])
+    assert rc == 1
+    assert "arangodb-download is not supported" in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()
+
+
 def test_cli_meta_knowledge_graph_report(spark, tsv_dir, capsys):
     import json as _json
 
