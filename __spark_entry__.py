@@ -43,7 +43,7 @@ from kgx_spark.operators.summary import (
 from kgx_spark.operators.validate import validate_nodes
 from kgx_spark.operators.validator import error_report, validate_node_records
 from kgx_spark.pipeline.extract import extract_text
-from kgx_spark.pipeline.kg_pipeline import run_kg_pipeline
+from kgx_spark.pipeline.kg_pipeline import PREFIX_PRIORITY, run_kg_pipeline
 from kgx_spark.pipeline.synth import synth_pages
 from kgx_spark.pipeline.triples import extract_triples
 
@@ -209,7 +209,7 @@ def q_clique_canonicalize(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     # no category column: every node is a NamedThing, so the audit is skipped
-    _, canon, _ = clique_merge(node_ids, edges, prefix_priority=["P", "Q", "R", "S"])
+    _, canon, _ = clique_merge(node_ids, edges, prefix_priority=PREFIX_PRIORITY)
     return (
         canon.where(F.col("predicate") != "biolink:same_as")
         .select("subject", "predicate", "object")

@@ -55,17 +55,12 @@ def remap_node_identifier(
 
     # two joins re-point edge endpoints (reference relabels then rewrites
     # each edge — __init__.py:66-90). The old→new map can span every node of
-    # a category — broadcast only when provably small (round-1 judge
-    # finding #2); mapping is checkpointed so the size probe and both joins
-    # read one materialization.
-    from kgx_spark.utils import conditional_broadcast
-
-    mapping = mapping.localCheckpoint()
-    b = conditional_broadcast(mapping)
+    # a category, so it is not hinted: the planner broadcasts it from its
+    # size statistics (and AQE from runtime ones) only when it is small.
     out_edges = (
-        edges.join(b.withColumnRenamed("_old", "subject").withColumnRenamed("_new", "_new_s"),
+        edges.join(mapping.withColumnRenamed("_old", "subject").withColumnRenamed("_new", "_new_s"),
                    on="subject", how="left")
-        .join(b.withColumnRenamed("_old", "object").withColumnRenamed("_new", "_new_o"),
+        .join(mapping.withColumnRenamed("_old", "object").withColumnRenamed("_new", "_new_o"),
               on="object", how="left")
         .withColumn("subject", F.coalesce(F.col("_new_s"), F.col("subject")))
         .withColumn("object", F.coalesce(F.col("_new_o"), F.col("object")))

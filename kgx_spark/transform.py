@@ -274,6 +274,8 @@ def _op_clique_merge(nodes: DataFrame, edges: DataFrame, **kw) -> Graph:
         nodes, edges,
         prefix_priority=kw.get("prefix_prioritization"),
         leader_annotation=kw.get("leader_annotation"),
+        strict=kw.get("strict", True),
+        prefix_prioritization_map=kw.get("prefix_prioritization_map"),
     )
     return n, e
 

@@ -321,7 +321,7 @@ STAGE_JOBS = {
     "triples": 1,
     "linked": 15,
     "edges_raw": 2,
-    "canonical": 9,
+    "canonical": 7,
     "edges": 2,
     "nodes": 2,
 }

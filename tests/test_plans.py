@@ -57,36 +57,14 @@ def test_entity_link_dictionary_broadcasts(spark):
     assert "BroadcastHashJoin" in plan_of(linked)
 
 
-def test_conditional_broadcast_small_vs_large(spark):
-    """Round-1 judge finding #1-3: forced F.broadcast of node-scale sides is
-    an OOM at target scale. conditional_broadcast must hint small sides and
-    leave large sides unhinted (AQE decides from runtime stats)."""
-    from kgx_spark.utils import conditional_broadcast
-
-    big = spark.range(0, 5000).select(F.concat(F.lit("N:"), "id").alias("id"),
-                                      F.lit("x").alias("v"))
-    small = spark.range(0, 50).select(F.concat(F.lit("N:"), "id").alias("id"),
-                                      F.lit("y").alias("w"))
-    probe = spark.range(0, 100).select(F.concat(F.lit("N:"), "id").alias("id"))
-
-    hinted = probe.join(conditional_broadcast(small, row_limit=1000), "id")
-    assert "BroadcastHashJoin" in plan_of(hinted)
-    assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-
-    unhinted = probe.join(conditional_broadcast(big, row_limit=1000), "id")
-    # no broadcast HINT on the big side (Catalyst/AQE may still pick a
-    # broadcast from its own SIZE statistics — that's fine and size-aware;
-    # the invariant under test is that WE never force it)
-    assert "ResolvedHint" not in unhinted._jdf.queryExecution().analyzed().toString()
-
-
-def test_clique_mapping_not_force_broadcast_when_large(spark):
-    """clique_merge on a pathological same_as universe (every node a member)
-    must not force-broadcast the member→leader map, on the edge side or the
-    node side; one probe of the map decides both, and a small map hints
-    both."""
+def test_clique_and_remap_maps_join_unhinted(spark):
+    """The member→leader map of clique_merge and the old→new map of
+    remap_node_identifier can be node-scale, so no join against them is
+    hinted: the planner chooses from size statistics. A small map plans as
+    a broadcast at the session threshold and as a sort-merge join once the
+    thresholds are below its size."""
     from kgx_spark.operators.clique import clique_merge
-    from kgx_spark import utils as U
+    from kgx_spark.operators.graph_ops import remap_node_identifier
 
     def hinted(df):
         return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
@@ -101,18 +79,28 @@ def test_clique_mapping_not_force_broadcast_when_large(spark):
         F.lit("biolink:same_as").alias("predicate"),
         F.concat(F.lit("N:"), (F.col("id") + 1) % 2000).alias("object"),
     )
-    old = U.BROADCAST_ROW_LIMIT
-    U.BROADCAST_ROW_LIMIT = 100  # force the "large" path at test scale
-    try:
-        n_out, e, _ = clique_merge(nodes, edges, dedupe_edges=False)
-        # no forced broadcast hint anywhere in the re-pointing plan, nor in
-        # the member fold of the canonical nodes
-        assert not hinted(e)
-        assert not hinted(n_out)
-    finally:
-        U.BROADCAST_ROW_LIMIT = old
     n_out, e, _ = clique_merge(nodes, edges, dedupe_edges=False)
-    assert hinted(e) and hinted(n_out)
+    assert not hinted(e) and not hinted(n_out)
+    assert "BroadcastHashJoin" in plan_of(e)
+    _, remapped = remap_node_identifier(
+        nodes.withColumn("alt", F.concat(F.lit("M:"), "id")), edges, "biolink:NamedThing", "alt"
+    )
+    assert not hinted(remapped)
+
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "1k")
+        _, e_low, _ = clique_merge(nodes, edges, dedupe_edges=False)
+        p = plan_of(e_low)
+        assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_meta_kg_catalog_not_broadcast_hinted(spark):

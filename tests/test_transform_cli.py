@@ -53,6 +53,43 @@ def test_transform_with_operations(spark, tsv_dir, tmp_path):
     assert nodes.where(F.col("interacts_with").isNotNull()).count() == 1
 
 
+def test_clique_merge_operation_forwards_reference_args(spark, tmp_path):
+    """The clique_merge operation passes the reference's
+    prefix_prioritization_map and strict arguments through: the category
+    map elects NCBIGene:1 where the alphabetical order would elect CONF:1,
+    and strict=false keeps CONF:1 (Gene + Disease, anchor Gene) in the
+    clique instead of evicting it."""
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "c_nodes.tsv").write_text(
+        "id\tcategory\n"
+        "HGNC:1\tbiolink:Gene\n"
+        "NCBIGene:1\tbiolink:Gene\n"
+        "CONF:1\tbiolink:Gene|biolink:Disease\n"
+        "MONDO:1\tbiolink:Disease\n"
+    )
+    (d / "c_edges.tsv").write_text(
+        "subject\tpredicate\tobject\n"
+        "HGNC:1\tbiolink:same_as\tNCBIGene:1\n"
+        "CONF:1\tbiolink:same_as\tHGNC:1\n"
+        "HGNC:1\tbiolink:related_to\tMONDO:1\n"
+    )
+    nodes, edges = transform(
+        spark,
+        {"filename": str(d), "format": "tsv"},
+        {"filename": str(tmp_path / "o" / "g"), "format": "parquet"},
+        operations=[{"name": "clique_merge", "args": {
+            "prefix_prioritization_map": {"biolink:Gene": ["NCBIGene", "HGNC"]},
+            "strict": False,
+        }}],
+    )
+    rows = {r["id"]: r for r in nodes.collect()}
+    assert set(rows) == {"NCBIGene:1", "MONDO:1"}
+    assert rows["NCBIGene:1"]["election_strategy"] == "PREFIX_PRIORITIZATION"
+    assert set(rows["NCBIGene:1"]["same_as"]) == {"HGNC:1", "CONF:1"}
+    assert [(r["subject"], r["object"]) for r in edges.collect()] == [("NCBIGene:1", "MONDO:1")]
+
+
 def test_merge_two_sources(spark, tsv_dir, tmp_path):
     d2 = tmp_path / "in2"
     d2.mkdir()
