@@ -4,6 +4,7 @@ parquet filter pushdown + column pruning. A regression here silently turns
 a 100 TB job from hours into days, so it's tested like correctness."""
 
 import re
+from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 
@@ -57,19 +58,11 @@ def test_entity_link_dictionary_broadcasts(spark):
     assert "BroadcastHashJoin" in plan_of(linked)
 
 
-def test_clique_and_remap_maps_join_unhinted(spark):
-    """The member→leader map of clique_merge and the old→new map of
-    remap_node_identifier can be node-scale, so no join against them is
-    hinted: the planner chooses from size statistics. A small map plans as
-    a broadcast at the session threshold and as a sort-merge join once the
-    thresholds are below its size."""
-    from kgx_spark.operators.clique import clique_merge
-    from kgx_spark.operators.graph_ops import remap_node_identifier
+def _hinted(df):
+    return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
 
-    def hinted(df):
-        return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
 
-    n = 4000
+def _same_as_chain(spark, n=4000):
     nodes = spark.range(0, n).select(
         F.concat(F.lit("N:"), "id").alias("id"),
         F.array(F.lit("biolink:NamedThing")).alias("category"),
@@ -79,28 +72,57 @@ def test_clique_and_remap_maps_join_unhinted(spark):
         F.lit("biolink:same_as").alias("predicate"),
         F.concat(F.lit("N:"), (F.col("id") + 1) % 2000).alias("object"),
     )
-    n_out, e, _ = clique_merge(nodes, edges, dedupe_edges=False)
-    assert not hinted(e) and not hinted(n_out)
-    assert "BroadcastHashJoin" in plan_of(e)
-    _, remapped = remap_node_identifier(
-        nodes.withColumn("alt", F.concat(F.lit("M:"), "id")), edges, "biolink:NamedThing", "alt"
-    )
-    assert not hinted(remapped)
+    return nodes, edges
 
+
+@contextmanager
+def _broadcast_threshold(spark, value):
     keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
     old = {k: spark.conf.get(k, None) for k in keys}
     try:
         for k in keys:
-            spark.conf.set(k, "1k")
-        _, e_low, _ = clique_merge(nodes, edges, dedupe_edges=False)
-        p = plan_of(e_low)
-        assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p
+            spark.conf.set(k, value)
+        yield
     finally:
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_conditional_broadcast_small_vs_large(spark):
+    """remap_node_identifier joins its old→new map unhinted: the planner
+    broadcasts a small map from size statistics and sort-merge joins it once
+    the thresholds are below its size."""
+    from kgx_spark.operators.graph_ops import remap_node_identifier
+
+    nodes, edges = _same_as_chain(spark)
+    nodes = nodes.withColumn("alt", F.concat(F.lit("M:"), "id"))
+    _, remapped = remap_node_identifier(nodes, edges, "biolink:NamedThing", "alt")
+    assert not _hinted(remapped)
+    assert "BroadcastHashJoin" in plan_of(remapped)
+    with _broadcast_threshold(spark, "1k"):
+        _, remapped_low = remap_node_identifier(nodes, edges, "biolink:NamedThing", "alt")
+        p = plan_of(remapped_low)
+        assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p
+
+
+def test_clique_mapping_not_force_broadcast_when_large(spark):
+    """clique_merge's member→leader map can be node-scale, so neither the
+    edge re-pointing nor the member fold of the canonical nodes hints it: a
+    small map plans as a broadcast at the session threshold and as a
+    sort-merge join once the thresholds are below its size."""
+    from kgx_spark.operators.clique import clique_merge
+
+    nodes, edges = _same_as_chain(spark)
+    n_out, e, _ = clique_merge(nodes, edges, dedupe_edges=False)
+    assert not _hinted(e) and not _hinted(n_out)
+    assert "BroadcastHashJoin" in plan_of(e)
+    with _broadcast_threshold(spark, "1k"):
+        _, e_low, _ = clique_merge(nodes, edges, dedupe_edges=False)
+        p = plan_of(e_low)
+        assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p
 
 
 def test_meta_kg_catalog_not_broadcast_hinted(spark):
