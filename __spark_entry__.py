@@ -133,7 +133,7 @@ def q_spo_category(spark: SparkSession, sf: str) -> DataFrame:
 def q_facet_counts(spark: SparkSession, sf: str) -> DataFrame:
     from kgx_spark.operators.summary import facet_counts
 
-    return facet_counts(FX.edges(spark, sf), "predicate", facet="provided_by")
+    return facet_counts(FX.edges(spark, sf), "predicate")
 
 
 def q_meta_nodes(spark: SparkSession, sf: str) -> DataFrame:

@@ -65,22 +65,18 @@ def infores_curie(
     return F.when(col.startswith("infores:"), col).otherwise(out)
 
 
-def infores_catalog(
-    df: DataFrame,
-    source_col: str = "knowledge_source",
-    rewrite: tuple[str, ...] | list[str] | None = None,
-) -> DataFrame:
-    """Side-output catalog mapping raw source name → infores CURIE.
+def infores_catalog(df: DataFrame) -> DataFrame:
+    """Side-output catalog mapping raw ``knowledge_source`` name → infores
+    CURIE.
 
     Mirrors the reference's write_catalog (kgx/utils/infores.py:109-133) as a
-    distinct projection instead of a driver-side dict. ``rewrite`` is the
-    optional ``(regex, substitution[, prefix])`` tuple — see infores_curie.
+    distinct projection instead of a driver-side dict.
     """
     return (
-        df.select(F.col(source_col).alias("knowledge_source"))
+        df.select("knowledge_source")
         .where(F.col("knowledge_source").isNotNull())
         .distinct()
-        .withColumn("infores", infores_curie(F.col("knowledge_source"), rewrite=rewrite))
+        .withColumn("infores", infores_curie(F.col("knowledge_source")))
     )
 
 

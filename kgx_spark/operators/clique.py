@@ -579,17 +579,15 @@ def clique_merge(
                 )
                 frag_labels, _ = connected_components(pairs_f)
                 fragment_filter = (affected, frag_labels)
-    leader_map = elect_leaders(
+    elected = elect_leaders(
         members, nodes, prefix_priority, leader_annotation, comp_priority
     )
-    mapping = leader_map.select("id", "component", "leader").where(
-        F.col("id") != F.col("leader")
-    )
     if fragment_filter is not None:
+        # in a clique that lost a member only the leader's fragment merges
         affected, frag_labels = fragment_filter
         frag = frag_labels.select("id", F.col("component").alias("_frag"))
-        mapping = (
-            mapping.join(affected.withColumn("_affected", F.lit(True)), "component", "left")
+        elected = (
+            elected.join(affected.withColumn("_affected", F.lit(True)), "component", "left")
             .join(frag, "id", "left")
             .join(
                 frag.select(F.col("id").alias("leader"), F.col("_frag").alias("_leader_frag")),
@@ -597,25 +595,27 @@ def clique_merge(
                 "left",
             )
             .where(
-                F.col("_affected").isNull()
+                (F.col("id") == F.col("leader"))
+                | F.col("_affected").isNull()
                 | (
                     F.col("_frag").isNotNull()
                     & (F.col("_frag") == F.col("_leader_frag"))
                 )
             )
-            .select("id", "leader")
+            .drop("_affected", "_frag", "_leader_frag")
         )
-    else:
-        mapping = mapping.select("id", "leader")
-    mapping = mapping.localCheckpoint()
+    # (id, component, leader, election_strategy) of every merging member and
+    # every leader. It is checkpointed because the edges and the nodes plans
+    # both read it, and the election window behind it should run once.
+    elected = elected.localCheckpoint()
+    followers = elected.where(F.col("id") != F.col("leader"))
+    mapping = followers.select("id", "leader")
 
     # --- re-point edges (two joins against the member→leader map). The map
     # is usually clique-sized (≪ nodes), but a pathological same_as universe
     # makes it node-scale, so no join against it is hinted: the planner
     # broadcasts it from its size statistics (and AQE from runtime ones)
-    # only when it is small. It is checkpointed above because the edges and
-    # the nodes plans both read it, and the election window behind it
-    # should run once.
+    # only when it is small.
     e = (
         edges.join(mapping.withColumnRenamed("id", "subject").withColumnRenamed("leader", "_subj_leader"),
                    on="subject", how="left")
@@ -652,18 +652,10 @@ def clique_merge(
         e = merge_edges([e])
 
     # --- fold members into leaders (clique_merge.py:349-385) ---
-    # derived from the CHECKPOINTED mapping (which is exactly the non-leader
-    # members)
-    leader_props = (
-        leader_map.where(F.col("id") == F.col("leader"))
-        .select(F.col("leader").alias("id"), "election_strategy")
-        .withColumnRenamed("election_strategy", "_strategy")
-    )
-    members_per_leader = (
-        mapping.groupBy("leader")
-        .agg(F.array_sort(F.collect_set("id")).alias("_members"))
-        .withColumnRenamed("leader", "id")
-        .join(leader_props, on="id", how="left")
+    # a clique's members share its election strategy
+    members_per_leader = followers.groupBy(F.col("leader").alias("id")).agg(
+        F.array_sort(F.collect_set("id")).alias("_members"),
+        F.first("election_strategy").alias("_strategy"),
     )
     n = nodes.join(mapping, on="id", how="left_anti")  # drop non-leader members
     n = n.join(members_per_leader, on="id", how="left")
@@ -691,9 +683,9 @@ def clique_merge(
     if update_categories and "category" in nodes.columns:
         # stamp the clique's most-specific category onto the leader
         # (clique_merge.py:388-499 update_node_categories + get_clique_category)
-        cc = clique_category(leader_map, nodes)
+        cc = clique_category(members, nodes)
         leader_cc = (
-            leader_map.where(F.col("id") == F.col("leader"))
+            elected.where(F.col("id") == F.col("leader"))
             .join(cc, on="component")
             .select(F.col("leader").alias("id"), "clique_category")
         )

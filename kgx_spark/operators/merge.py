@@ -166,14 +166,12 @@ def merge_edges(
 
 
 def merge_graphs(
-    graphs: list[tuple[DataFrame, DataFrame]],
-    preserve: bool = True,
-    edge_key_col: str | None = None,
+    graphs: list[tuple[DataFrame, DataFrame]], preserve: bool = True
 ) -> tuple[DataFrame, DataFrame]:
     """merge_graphs (graph_merge.py:60-90) — inputs merged in the given
     order; under preserve=False the later input's non-core values win
     (the reference's incoming-overwrite)."""
     nodes = merge_nodes([g[0] for g in graphs], preserve)
-    edges = merge_edges([g[1] for g in graphs], preserve, key_col=edge_key_col)
+    edges = merge_edges([g[1] for g in graphs], preserve)
     return nodes, edges
 

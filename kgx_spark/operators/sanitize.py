@@ -47,9 +47,9 @@ def clean_array(col: Column) -> Column:
     return F.array_sort(F.array_distinct(scrubbed))
 
 
-def split_list_column(col: Column, delimiter: str = LIST_DELIMITER) -> Column:
+def split_list_column(col: Column) -> Column:
     """'a|b|a' → sorted distinct array (kgx_utils.py:884-899 + 871)."""
-    return clean_array(F.split(col, "\\" + delimiter))
+    return clean_array(F.split(col, "\\" + LIST_DELIMITER))
 
 
 def coerce_boolean(col: Column) -> Column:
@@ -67,7 +67,7 @@ def biolink_multivalued_slots() -> frozenset[str]:
     return frozenset(s for s, (_, mv) in SLOT_TYPES.items() if mv)
 
 
-def sniff_list_columns(df: DataFrame, delimiter: str = LIST_DELIMITER) -> set[str]:
+def sniff_list_columns(df: DataFrame) -> set[str]:
     """Dynamic delimiter sniffing for undeclared long-tail properties
     (kgx/utils/kgx_utils.py:884-899): the reference splits ANY undeclared
     string value containing the list delimiter and wraps values of Biolink
@@ -97,7 +97,7 @@ def sniff_list_columns(df: DataFrame, delimiter: str = LIST_DELIMITER) -> set[st
     probe = [c for c in undeclared if c not in wrapped]
     if probe:
         row = df.agg(
-            *[F.max(_qcol(c).contains(delimiter)).alias(c) for c in probe]
+            *[F.max(_qcol(c).contains(LIST_DELIMITER)).alias(c) for c in probe]
         ).first()
         if row is not None:
             wrapped |= {c for c in probe if row[c]}
@@ -126,12 +126,7 @@ REFERENCE_COLUMN_TYPES = frozenset(
 )
 
 
-def sanitize_import(
-    df: DataFrame,
-    list_columns: set[str] | None = None,
-    sniff: bool = False,
-    wrap_slots: bool = False,
-) -> DataFrame:
+def sanitize_import(df: DataFrame, sniff: bool = False, wrap_slots: bool = False) -> DataFrame:
     """Apply the reference's per-property import coercions to a whole DataFrame.
 
     - declared multivalued columns arriving as strings are split on '|';
@@ -146,14 +141,12 @@ def sanitize_import(
       singular `xref`) WRAP their scalar value into a one-element list
       instead of splitting — a literal '|' inside an RDF literal is data.
     """
-    listcols = MULTIVALUED_PROPERTIES if list_columns is None else list_columns
+    listcols = set(MULTIVALUED_PROPERTIES)
     if sniff:
-        listcols = set(listcols) | sniff_list_columns(df)
+        listcols |= sniff_list_columns(df)
     wrapcols: set[str] = set()
     if wrap_slots:
-        wrapcols = (
-            set(biolink_multivalued_slots()) - REFERENCE_COLUMN_TYPES - set(listcols)
-        )
+        wrapcols = set(biolink_multivalued_slots()) - REFERENCE_COLUMN_TYPES - listcols
     out = []
     for field in df.schema.fields:
         c = _qcol(field.name)
@@ -186,7 +179,7 @@ def _export_scrub(col: Column) -> Column:
     return F.regexp_replace(F.regexp_replace(col, r"[\n\t]", " "), r'\\"', "")
 
 
-def sanitize_export(df: DataFrame, delimiter: str = LIST_DELIMITER) -> DataFrame:
+def sanitize_export(df: DataFrame) -> DataFrame:
     """Inverse: arrays → '|'-joined strings, everything stringified, strings
     scrubbed (kgx_utils.py:912-1005). Used by the TSV sink.
 
@@ -199,7 +192,7 @@ def sanitize_export(df: DataFrame, delimiter: str = LIST_DELIMITER) -> DataFrame
     for field in df.schema.fields:
         c = _qcol(field.name)
         if isinstance(field.dataType, T.ArrayType):
-            expr = F.array_join(F.transform(c, _export_scrub), delimiter)
+            expr = F.array_join(F.transform(c, _export_scrub), LIST_DELIMITER)
         elif isinstance(field.dataType, T.BooleanType):
             expr = F.when(c, "True").when(~c, "False")  # python str(bool)
         elif isinstance(field.dataType, T.StringType):

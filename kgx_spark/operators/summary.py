@@ -75,15 +75,16 @@ def count_by_spo_category(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def facet_counts(df: DataFrame, group_col: str, facet: str = "provided_by") -> DataFrame:
-    """Counts by (group, facet value) — facet properties are multivalued
-    (summarize_graph.py:767-814)."""
-    facet_col = F.explode(facet) if dict(df.dtypes).get(facet, "").startswith("array") else F.col(facet)
+def facet_counts(df: DataFrame, group_col: str) -> DataFrame:
+    """Counts by (group, provided_by value) — the facet property is
+    multivalued (summarize_graph.py:767-814)."""
+    dtypes = dict(df.dtypes)
+    facet_col = F.explode("provided_by") if dtypes.get("provided_by", "").startswith("array") else F.col("provided_by")
     base = df.select(
-        (F.explode(group_col) if dict(df.dtypes).get(group_col, "").startswith("array") else F.col(group_col)).alias(group_col + "_v"),
-        facet_col.alias(facet),
+        (F.explode(group_col) if dtypes.get(group_col, "").startswith("array") else F.col(group_col)).alias(group_col + "_v"),
+        facet_col.alias("provided_by"),
     )
-    return base.groupBy(F.col(group_col + "_v").alias(group_col), facet).agg(F.count("*").alias("count"))
+    return base.groupBy(F.col(group_col + "_v").alias(group_col), "provided_by").agg(F.count("*").alias("count"))
 
 
 def duplicate_nodes(nodes: DataFrame) -> DataFrame:

@@ -17,27 +17,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def get_parents(edges: DataFrame, node_ids: DataFrame, predicate: str | None = "biolink:subclass_of") -> DataFrame:
-    """One hop: objects of out-edges from node_ids(id) (graph_utils.py:16-55)."""
-    e = edges if predicate is None else edges.where(F.col("predicate") == predicate)
+def _subclass_of(edges: DataFrame) -> DataFrame:
+    return edges.where(F.col("predicate") == "biolink:subclass_of")
+
+
+def get_parents(edges: DataFrame, node_ids: DataFrame) -> DataFrame:
+    """One hop: objects of subclass_of out-edges from node_ids(id)
+    (graph_utils.py:16-55)."""
     return (
-        e.join(node_ids.withColumnRenamed("id", "subject"), on="subject")
+        _subclass_of(edges).join(node_ids.withColumnRenamed("id", "subject"), on="subject")
         .select(F.col("object").alias("id"))
         .distinct()
     )
 
 
-def get_ancestors(
-    edges: DataFrame,
-    node_ids: DataFrame,
-    predicate: str | None = "biolink:subclass_of",
-    max_hops: int = 20,
-) -> DataFrame:
+def get_ancestors(edges: DataFrame, node_ids: DataFrame, max_hops: int = 20) -> DataFrame:
     """Transitive closure of get_parents: (id, ancestor, hops)
     (graph_utils.py:57-126). Frontier BFS with localCheckpoint per hop."""
-    e = (edges if predicate is None else edges.where(F.col("predicate") == predicate)).select(
-        "subject", "object"
-    ).localCheckpoint()
+    e = _subclass_of(edges).select("subject", "object").localCheckpoint()
     frontier = node_ids.select(F.col("id").alias("start"), F.col("id").alias("cur"))
     acc: DataFrame | None = None
     for hop in range(1, max_hops + 1):

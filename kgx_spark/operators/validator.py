@@ -246,11 +246,7 @@ def validate_property_types(df: DataFrame, kind: str = "node") -> DataFrame:
     return out
 
 
-def validate_categories(
-    nodes: DataFrame,
-    known_categories: frozenset[str] = KNOWN_CLASSES,
-    known_mixins: frozenset[str] = KNOWN_MIXINS,
-) -> DataFrame:
+def validate_categories(nodes: DataFrame) -> DataFrame:
     """``category`` battery, reference-exact (validator.py:629-684):
 
     - no category → "Node does not have a 'category' property";
@@ -283,9 +279,9 @@ def validate_categories(
             f"Node property 'category' is expected to be of type {list}"))
 
     class_sentence = F.array(*[
-        F.lit(_sentencecase_py(n)) for n in _bare_names(known_categories)])
+        F.lit(_sentencecase_py(n)) for n in _bare_names(KNOWN_CLASSES)])
     mixin_sentence = F.array(*[
-        F.lit(_sentencecase_py(n)) for n in _bare_names(known_mixins)])
+        F.lit(_sentencecase_py(n)) for n in _bare_names(KNOWN_MIXINS)])
 
     cats = nodes.select(ent.alias("_ent"), F.explode("category").alias("cat"))
     bare = _strip_prefix(F.col("cat"))
@@ -316,9 +312,7 @@ def _edge_entity(edges: DataFrame) -> Column:
     return F.concat(side("subject"), F.lit("->"), side("object"))
 
 
-def validate_edge_predicates(
-    edges: DataFrame, known_predicates: frozenset[str] = KNOWN_PREDICATES
-) -> DataFrame:
+def validate_edge_predicates(edges: DataFrame) -> DataFrame:
     """``predicate`` battery, reference-exact (validator.py:686-744): strip
     any CURIE prefix, snake_case-check the bare name
     (``^([a-z_][^A-Z\\s]+_?[a-z_][^A-Z\\s]+)+$``), resolve survivors against
@@ -342,7 +336,7 @@ def validate_edge_predicates(
             "Edge property 'edge_predicate' is expected to be of type 'string'"))
 
     bare = _strip_prefix(F.col("predicate"))
-    known = F.array(*[F.lit(p) for p in _bare_names(known_predicates)])
+    known = F.array(*[F.lit(p) for p in _bare_names(KNOWN_PREDICATES)])
     snake_ok = bare.rlike(_SNAKECASE_PRED_RE)
     present = F.col("predicate").isNotNull()
     out = out.unionByName(_emit(
@@ -355,10 +349,7 @@ def validate_edge_predicates(
 
 
 def validate_node_records(
-    nodes: DataFrame,
-    known_categories: frozenset[str] = KNOWN_CLASSES,
-    check_types: bool = False,
-    check_prefixes: bool = False,
+    nodes: DataFrame, check_types: bool = False, check_prefixes: bool = False
 ) -> DataFrame:
     """→ errors DataFrame; empty when the graph is valid."""
     spark = nodes.sparkSession
@@ -398,17 +389,14 @@ def validate_node_records(
                          F.lit("' with a CURIE prefix '"), prefix,
                          F.lit("' is not represented in Biolink Model JSON-LD context"))))
 
-    out = out.unionByName(validate_categories(nodes, known_categories))
+    out = out.unionByName(validate_categories(nodes))
     if check_types:
         out = out.unionByName(validate_property_types(nodes, "node"))
     return out
 
 
 def validate_edge_records(
-    edges: DataFrame,
-    known_predicates: frozenset[str] = KNOWN_PREDICATES,
-    check_types: bool = False,
-    check_prefixes: bool = False,
+    edges: DataFrame, check_types: bool = False, check_prefixes: bool = False
 ) -> DataFrame:
     spark = edges.sparkSession
     out = spark.createDataFrame([], _ERR_SCHEMA)
@@ -443,7 +431,7 @@ def validate_edge_records(
                          F.lit("' with a CURIE prefix '"), prefix,
                          F.lit("' that is not represented in Biolink Model JSON-LD context"))))
 
-    out = out.unionByName(validate_edge_predicates(edges, known_predicates))
+    out = out.unionByName(validate_edge_predicates(edges))
     if check_types:
         out = out.unionByName(validate_edge_records_types(edges))
     return out

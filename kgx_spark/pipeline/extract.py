@@ -56,6 +56,6 @@ def _extract_udf(html: pd.Series) -> pd.Series:
     return s.str.replace(_WS, " ", regex=True).str.strip()
 
 
-def extract_text(pages: DataFrame, html_col: str = "html", out_col: str = "extracted_text") -> DataFrame:
-    """pages → pages + extracted_text. One narrow stage, no shuffle."""
-    return pages.withColumn(out_col, _extract_udf(F.col(html_col)))
+def extract_text(pages: DataFrame) -> DataFrame:
+    """pages(html) → pages + extracted_text. One narrow stage, no shuffle."""
+    return pages.withColumn("extracted_text", _extract_udf(F.col("html")))

@@ -34,7 +34,7 @@ _BOILER_HEAD = (
 _BOILER_FOOT = '<footer>&copy; 2026 Example Corp</footer></body></html>'
 
 
-def synth_pages(spark: SparkSession, sf_dir: str, docs_per_page: int = 1) -> DataFrame:
+def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the pages table by joining documents with lineitem-derived
     fact sentences. Pure expressions — no RNG, no Python rows."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

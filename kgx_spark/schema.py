@@ -1,4 +1,4 @@
-"""Canonical schemas + column-type conventions of the KGX format.
+"""Column-type conventions of the KGX format.
 
 Reference semantics:
 - node/edge record shapes: /root/reference/docs/kgx_format.md:49-127,
@@ -17,7 +17,6 @@ the accumulate-and-union behavior).
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
 
 LIST_DELIMITER = "|"
 
@@ -70,40 +69,6 @@ SINGLE_VALUED_PROPERTIES = frozenset(
 BOOLEAN_PROPERTIES = frozenset({"negated"})  # kgx/utils/kgx_utils.py:66
 
 DEFAULT_NODE_CATEGORY = "biolink:NamedThing"  # kgx/source/source.py:305-309
-
-_ARR = T.ArrayType(T.StringType())
-
-NODE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("category", _ARR, True),
-        T.StructField("description", T.StringType(), True),
-        T.StructField("provided_by", _ARR, True),
-        T.StructField("xref", _ARR, True),
-        T.StructField("synonym", _ARR, True),
-        T.StructField("same_as", _ARR, True),
-        T.StructField("iri", T.StringType(), True),
-    ]
-)
-
-EDGE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), True),
-        T.StructField("subject", T.StringType(), False),
-        T.StructField("predicate", T.StringType(), False),
-        T.StructField("object", T.StringType(), False),
-        T.StructField("relation", T.StringType(), True),
-        T.StructField("category", _ARR, True),
-        T.StructField("primary_knowledge_source", T.StringType(), True),
-        T.StructField("aggregator_knowledge_source", _ARR, True),
-        T.StructField("provided_by", _ARR, True),
-        T.StructField("publications", _ARR, True),
-        T.StructField("knowledge_level", T.StringType(), True),
-        T.StructField("agent_type", T.StringType(), True),
-        T.StructField("negated", T.BooleanType(), True),
-    ]
-)
 
 # Deterministic output column order for TSV export — the reference's exact
 # OrderedSet contents (kgx/sink/tsv_sink.py:179-182 _order_node_columns,

@@ -38,7 +38,6 @@ def write_jelly(
     edges: DataFrame | None,
     path: str,
     reify_all_edges: bool = False,
-    frame_size: int = 256,
     compression: str | None = None,
 ) -> None:
     """Write `{path}/part-NNNNN.jelly` delimited-frame stream files;
@@ -81,7 +80,7 @@ def write_jelly(
         tmp = os.path.join(path, f".part-{pid:05d}-{ctx.taskAttemptId()}{suffix}.tmp")
         opener = gzip.open if compression == "gz" else open
         with opener(tmp, "wb") as fh:
-            for chunk in encode_delimited(triples, frame_size=frame_size):
+            for chunk in encode_delimited(triples):
                 fh.write(chunk)
         os.replace(tmp, os.path.join(path, f"part-{pid:05d}{suffix}"))
 

@@ -142,15 +142,14 @@ def _node_entry(nodes: DataFrame) -> DataFrame:
     return nodes.select(F.col("id").alias("k"), body.alias("v"))
 
 
-def _sources_json(edges: DataFrame, default_knowledge_source: str | None) -> Column:
-    """TRAPI sources[]: primary (infores:-prefixed; default; 'infores:unknown'
+def _sources_json(edges: DataFrame) -> Column:
+    """TRAPI sources[]: primary (infores:-prefixed; 'infores:unknown'
     fallback) + aggregator entries from provided_by values != primary
     (trapi_sink.py:333-398)."""
     cols = set(edges.columns)
     primary_raw = F.col("primary_knowledge_source") if "primary_knowledge_source" in cols else F.lit(None).cast("string")
-    fallback = default_knowledge_source or "unknown"
     primary_fields = [
-        _infores(F.coalesce(primary_raw, F.lit(fallback))).alias("resource_id"),
+        _infores(F.coalesce(primary_raw, F.lit("unknown"))).alias("resource_id"),
         F.lit("primary_knowledge_source").alias("resource_role"),
     ]
     if "pks_record_urls" in cols:
@@ -210,7 +209,7 @@ def _qualifiers_json(edges: DataFrame) -> Column:
     ).otherwise(F.lit(""))
 
 
-def _edge_entry(edges: DataFrame, default_knowledge_source: str | None = None) -> DataFrame:
+def _edge_entry(edges: DataFrame) -> DataFrame:
     cols = set(edges.columns)
     extra = [
         f.name for f in edges.schema.fields
@@ -225,7 +224,7 @@ def _edge_entry(edges: DataFrame, default_knowledge_source: str | None = None) -
     body = _splice(
         head,
         F.lit(',"attributes":'), attrs,
-        F.lit(',"sources":'), _sources_json(edges, default_knowledge_source),
+        F.lit(',"sources":'), _sources_json(edges),
         _qualifiers_json(edges),
     )
     key = F.coalesce(
@@ -235,12 +234,7 @@ def _edge_entry(edges: DataFrame, default_knowledge_source: str | None = None) -
     return edges.select(key.alias("k"), body.alias("v"))
 
 
-def write_trapi(
-    nodes: DataFrame,
-    edges: DataFrame,
-    path: str,
-    knowledge_source: str | None = None,
-) -> None:
+def write_trapi(nodes: DataFrame, edges: DataFrame, path: str) -> None:
     with open(path, "w") as fh:
         fh.write('{"knowledge_graph": {"nodes": {')
         first = True
@@ -249,7 +243,7 @@ def write_trapi(
             first = False
         fh.write('}, "edges": {')
         first = True
-        for row in _edge_entry(edges, knowledge_source).toLocalIterator():
+        for row in _edge_entry(edges).toLocalIterator():
             fh.write(("" if first else ",") + json.dumps(row["k"]) + ":" + row["v"])
             first = False
         fh.write("}}}")

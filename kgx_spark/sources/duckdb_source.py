@@ -36,8 +36,7 @@ def _where(filters: Mapping[str, Any] | None) -> str:
 
 
 def _read_table(
-    spark: SparkSession, db_path: str, table: str, filters: Mapping[str, Any] | None,
-    batch_rows: int = 100_000,
+    spark: SparkSession, db_path: str, table: str, filters: Mapping[str, Any] | None
 ) -> DataFrame | None:
     import duckdb
 
@@ -48,10 +47,7 @@ def _read_table(
         ).fetchone()[0]
         if not exists:
             return None
-        reader = con.execute(f"SELECT * FROM {table}{_where(filters)}").fetch_record_batch(batch_rows)
-        import pyarrow as pa
-
-        tbl = pa.Table.from_batches(reader, reader.schema)
+        tbl = con.execute(f"SELECT * FROM {table}{_where(filters)}").fetch_arrow_table()
         return spark.createDataFrame(tbl.to_pandas())
     finally:
         con.close()
@@ -62,16 +58,11 @@ def read_duckdb(
     db_path: str,
     node_filters: Mapping[str, Any] | None = None,
     edge_filters: Mapping[str, Any] | None = None,
-    validate: bool = True,
 ) -> tuple[DataFrame | None, DataFrame | None]:
     nodes = _read_table(spark, db_path, "nodes", node_filters)
     edges = _read_table(spark, db_path, "edges", edge_filters)
     if nodes is not None:
-        nodes = sanitize_import(nodes)
-        if validate:
-            nodes, _ = validate_nodes(nodes)
+        nodes, _ = validate_nodes(sanitize_import(nodes))
     if edges is not None:
-        edges = sanitize_import(edges)
-        if validate:
-            edges, _ = validate_edges(edges)
+        edges, _ = validate_edges(sanitize_import(edges))
     return nodes, edges

@@ -24,6 +24,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kgx_spark.sources.rdf_nt import shape_triples
@@ -60,9 +61,7 @@ def _rows_of(content: bytes) -> Iterator[tuple]:
             yield subj, p[1], o[1] if o[0] == "iri" else "_:" + o[1], None
 
 
-def parse_jelly(
-    spark: SparkSession, path: str, include_bnodes: bool = False
-) -> DataFrame:
+def parse_jelly(spark: SparkSession, path: str) -> DataFrame:
     """path (file, directory, or glob) → triples(subject_iri,
     predicate_iri, object_iri, object_literal) — the same frame
     `parse_ntriples` produces, including its default bnode drop."""
@@ -90,22 +89,14 @@ def parse_jelly(
                 if buf:
                     yield pd.DataFrame(buf, columns=cols)
 
-    out = files.mapInPandas(gen, schema=_TRIPLE_SCHEMA)
-    if not include_bnodes:
-        from pyspark.sql import functions as F
-
-        out = out.where(
-            ~F.col("subject_iri").startswith("_:")
-            & (F.col("object_iri").isNull() | ~F.col("object_iri").startswith("_:"))
-        )
-    return out
+    return files.mapInPandas(gen, schema=_TRIPLE_SCHEMA).where(
+        ~F.col("subject_iri").startswith("_:")
+        & (F.col("object_iri").isNull() | ~F.col("object_iri").startswith("_:"))
+    )
 
 
 def read_jelly(
-    spark: SparkSession,
-    path: str,
-    prefix_map: dict[str, str] | None = None,
-    validate: bool = True,
+    spark: SparkSession, path: str, prefix_map: dict[str, str] | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """Jelly stream file(s) → (nodes, edges) through the shared NT shaping."""
-    return shape_triples(parse_jelly(spark, path), prefix_map, validate)
+    return shape_triples(parse_jelly(spark, path), prefix_map)

@@ -5,8 +5,8 @@ Reference: kgx/source/json_source.py:23-100 (ijson streaming over
 
 Spark design: `spark.read.option("multiLine", true).json` + explode. A
 monolithic JSON doc is inherently single-split (same limitation the
-reference's docs call out — docs/kgx_format.md:432); after the explode we
-repartition so downstream stages parallelize.
+reference's docs call out — docs/kgx_format.md:432); JSON Lines is the
+splittable format (sources/jsonl.py).
 """
 
 from __future__ import annotations
@@ -18,23 +18,13 @@ from kgx_spark.operators.sanitize import sanitize_import
 from kgx_spark.operators.validate import validate_edges, validate_nodes
 
 
-def read_kgx_json(
-    spark: SparkSession, path: str, validate: bool = True, repartition: int | None = None
-) -> tuple[DataFrame | None, DataFrame | None]:
+def read_kgx_json(spark: SparkSession, path: str) -> tuple[DataFrame | None, DataFrame | None]:
     doc = spark.read.option("multiLine", "true").json(path)
     nodes = edges = None
     if "nodes" in doc.columns:
         nodes = doc.select(F.explode("nodes").alias("n")).select("n.*")
-        if repartition:
-            nodes = nodes.repartition(repartition)
-        nodes = sanitize_import(nodes)
-        if validate:
-            nodes, _ = validate_nodes(nodes)
+        nodes, _ = validate_nodes(sanitize_import(nodes))
     if "edges" in doc.columns:
         edges = doc.select(F.explode("edges").alias("e")).select("e.*")
-        if repartition:
-            edges = edges.repartition(repartition)
-        edges = sanitize_import(edges)
-        if validate:
-            edges, _ = validate_edges(edges)
+        edges, _ = validate_edges(sanitize_import(edges))
     return nodes, edges

@@ -15,12 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from kgx_spark.operators.sanitize import sanitize_import
 from kgx_spark.operators.validate import validate_edges, validate_nodes
-from kgx_spark.schema import EDGE_SCHEMA, NODE_SCHEMA
 
 
-def read_kgx_jsonl(
-    spark: SparkSession, path: str, validate: bool = True, infer_schema: bool = True
-) -> tuple[DataFrame | None, DataFrame | None]:
+def read_kgx_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame | None, DataFrame | None]:
     candidates = (
         sorted(glob.glob(os.path.join(path, "*.jsonl*")))
         if os.path.isdir(path)
@@ -31,13 +28,7 @@ def read_kgx_jsonl(
 
     nodes = edges = None
     if node_files:
-        r = spark.read if infer_schema else spark.read.schema(NODE_SCHEMA)
-        nodes = sanitize_import(r.json(node_files))
-        if validate:
-            nodes, _ = validate_nodes(nodes)
+        nodes, _ = validate_nodes(sanitize_import(spark.read.json(node_files)))
     if edge_files:
-        r = spark.read if infer_schema else spark.read.schema(EDGE_SCHEMA)
-        edges = sanitize_import(r.json(edge_files))
-        if validate:
-            edges, _ = validate_edges(edges)
+        edges, _ = validate_edges(sanitize_import(spark.read.json(edge_files)))
     return nodes, edges

@@ -90,9 +90,7 @@ def _synonyms_by_scope(syns, scope: str):
     )
 
 
-def read_obograph(
-    spark: SparkSession, path: str, validate: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def read_obograph(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     doc = spark.read.option("multiLine", "true").json(path)
     g = doc.select(F.explode("graphs").alias("g"))
 
@@ -225,9 +223,6 @@ def read_obograph(
         contract(F.col("obj")).alias("object"),
         F.when(is_iri, pred_curie).otherwise(non_iri_relation).alias("relation"),
     )
-    edges = generate_edge_identifiers(edges)
-
-    if validate:
-        nodes, _ = validate_nodes(nodes)
-        edges, _ = validate_edges(edges)
+    nodes, _ = validate_nodes(nodes)
+    edges, _ = validate_edges(generate_edge_identifiers(edges))
     return nodes, edges

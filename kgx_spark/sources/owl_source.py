@@ -8,8 +8,8 @@ owl:equivalentClass edges.
 SURVEY.md §2.1 marks the whole-ontology load out of distributed scope: the
 parse happens ON THE DRIVER (ontologies are metadata-sized, not
 corpus-sized), mirroring the reference's design, and the resulting triples
-feed the DISTRIBUTED N-Triples/OWL pipeline (sources/rdf_nt.py for plain
-RDF, sources/owl_nt.py for restriction unpacking).
+feed the DISTRIBUTED OWL N-Triples pipeline (sources/owl_nt.py, which
+unpacks the restrictions).
 
 The RDF/XML → N-Triples conversion uses rdflib when available, else the
 self-contained stdlib converter in sources/rdf_xml.py (round-2 VERDICT
@@ -45,17 +45,9 @@ def owl_to_nt_path(path: str) -> str:
             return fh.name
 
 
-def read_owl(
-    spark: SparkSession, path: str, validate: bool = True, unpack_restrictions: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def read_owl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """OWL RDF/XML → (nodes, edges): driver-side parse → NT → distributed
-    scan with OWL restriction unpacking (owl_nt.read_owl_nt) or the plain
-    RDF path when ``unpack_restrictions=False``."""
-    nt_path = owl_to_nt_path(path)
-    if unpack_restrictions:
-        from kgx_spark.sources.owl_nt import read_owl_nt
+    scan with OWL restriction unpacking (owl_nt.read_owl_nt)."""
+    from kgx_spark.sources.owl_nt import read_owl_nt
 
-        return read_owl_nt(spark, nt_path)
-    from kgx_spark.sources.rdf_nt import read_ntriples
-
-    return read_ntriples(spark, nt_path, validate=validate)
+    return read_owl_nt(spark, owl_to_nt_path(path))

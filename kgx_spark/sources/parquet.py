@@ -13,15 +13,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kgx_spark.operators.sanitize import sanitize_import
 from kgx_spark.operators.validate import validate_edges, validate_nodes
 
 
-def read_kgx_parquet(
-    spark: SparkSession, path: str, validate: bool = True, sanitize: bool = False
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """Parquet written by our ParquetSink is already sanitized; pass
-    sanitize=True for foreign parquet."""
+def read_kgx_parquet(spark: SparkSession, path: str) -> tuple[DataFrame | None, DataFrame | None]:
+    """Parquet written by our ParquetSink is already sanitized, so it is
+    read as it is and only validated."""
     candidates = (
         sorted(glob.glob(os.path.join(path, "*nodes.parquet")) + glob.glob(os.path.join(path, "*edges.parquet")))
         if os.path.isdir(path)
@@ -31,15 +28,7 @@ def read_kgx_parquet(
     edge_files = [f for f in candidates if "edges.parquet" in os.path.basename(f)]
     nodes = edges = None
     if node_files:
-        nodes = spark.read.parquet(*node_files)
-        if sanitize:
-            nodes = sanitize_import(nodes)
-        if validate:
-            nodes, _ = validate_nodes(nodes)
+        nodes, _ = validate_nodes(spark.read.parquet(*node_files))
     if edge_files:
-        edges = spark.read.parquet(*edge_files)
-        if sanitize:
-            edges = sanitize_import(edges)
-        if validate:
-            edges, _ = validate_edges(edges)
+        edges, _ = validate_edges(spark.read.parquet(*edge_files))
     return nodes, edges

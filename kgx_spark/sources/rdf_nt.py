@@ -147,16 +147,14 @@ def read_ntriples(
     spark: SparkSession,
     path: str,
     prefix_map: dict[str, str] | None = None,
-    validate: bool = True,
     node_property_predicates: set[str] | None = None,
     predicate_mapping: dict[str, str] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     return shape_triples(
         parse_ntriples(spark, path),
         prefix_map,
-        validate,
-        node_property_predicates,
-        predicate_mapping,
+        node_property_predicates=node_property_predicates,
+        predicate_mapping=predicate_mapping,
     )
 
 

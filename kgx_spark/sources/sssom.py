@@ -37,9 +37,7 @@ def read_sssom_metadata(path: str) -> dict:
     return yaml.safe_load("".join(lines)) or {} if lines else {}
 
 
-def read_sssom(
-    spark: SparkSession, path: str, validate: bool = True
-) -> tuple[DataFrame, DataFrame, dict]:
+def read_sssom(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """→ (nodes, edges, set_metadata).
 
     Nodes: subject side ∪ object side (id, name, category).
@@ -104,9 +102,6 @@ def read_sssom(
     for k, v in sorted(meta.items()):
         if isinstance(v, (str, int, float, bool)) and k not in cols:
             edge_sel.append(F.lit(str(v)).alias(k))
-    edges = generate_edge_identifiers(rows.select(*edge_sel))
-
-    if validate:
-        nodes, _ = validate_nodes(nodes)
-        edges, _ = validate_edges(edges)
+    nodes, _ = validate_nodes(nodes)
+    edges, _ = validate_edges(generate_edge_identifiers(rows.select(*edge_sel)))
     return nodes, edges, meta

@@ -41,16 +41,11 @@ def _read_table(spark: SparkSession, path: str, fmt: str = "tsv") -> DataFrame:
     return reader.csv(path)
 
 
-def read_nodes_tsv(
-    spark: SparkSession, path: str, fmt: str = "tsv", validate: bool = True, sniff: bool = True
-) -> DataFrame:
-    # sniff=True mirrors the reference's dynamic delimiter handling for
+def read_nodes_tsv(spark: SparkSession, path: str, fmt: str = "tsv") -> DataFrame:
+    # sniffing mirrors the reference's dynamic delimiter handling for
     # undeclared long-tail columns (kgx_utils.py:884-899) — one extra
-    # column-pruned aggregate pass at ingest; pass sniff=False to skip it
-    # when the file is known-canonical
-    df = sanitize_import(_read_table(spark, path, fmt), sniff=sniff)
-    if validate:
-        df, _ = validate_nodes(df)
+    # column-pruned aggregate pass at ingest
+    df, _ = validate_nodes(sanitize_import(_read_table(spark, path, fmt), sniff=True))
     # raw records, as the reference's TsvSource generator yields them —
     # graph-insertion dedup (534 records → 512 nodes) happens one layer up,
     # in transform.read_source, exactly where the reference's Transformer
@@ -58,15 +53,11 @@ def read_nodes_tsv(
     return df
 
 
-def read_edges_tsv(
-    spark: SparkSession, path: str, fmt: str = "tsv", validate: bool = True, sniff: bool = True
-) -> DataFrame:
-    df = sanitize_import(_read_table(spark, path, fmt), sniff=sniff)
+def read_edges_tsv(spark: SparkSession, path: str, fmt: str = "tsv") -> DataFrame:
+    df = sanitize_import(_read_table(spark, path, fmt), sniff=True)
     # the reference fills a missing edge id with generate_uuid()
     # (tsv_source.py:268-269); we fill deterministically (keys.py rationale)
-    df = generate_edge_identifiers(df)
-    if validate:
-        df, _ = validate_edges(df)
+    df, _ = validate_edges(generate_edge_identifiers(df))
     # raw records (see read_nodes_tsv) — the (s, predicate, o) edge-key
     # dedup happens in transform.read_source
     return df
@@ -81,7 +72,7 @@ def _extract_tar(path: str) -> str:
 
 
 def read_kgx_tsv(
-    spark: SparkSession, path: str, fmt: str = "tsv", validate: bool = True
+    spark: SparkSession, path: str, fmt: str = "tsv"
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """Read a KGX fileset: `{base}_nodes.{fmt}` + `{base}_edges.{fmt}`.
 
@@ -106,6 +97,6 @@ def read_kgx_tsv(
         candidates = expand_one(path)
     node_files = [f for f in candidates if f"nodes.{fmt}" in os.path.basename(f)]
     edge_files = [f for f in candidates if f"edges.{fmt}" in os.path.basename(f)]
-    nodes = read_nodes_tsv(spark, node_files, fmt, validate) if node_files else None
-    edges = read_edges_tsv(spark, edge_files, fmt, validate) if edge_files else None
+    nodes = read_nodes_tsv(spark, node_files, fmt) if node_files else None
+    edges = read_edges_tsv(spark, edge_files, fmt) if edge_files else None
     return nodes, edges

@@ -36,7 +36,7 @@ time); provided_by keeps the FIRST sighting inside a watermark window
 re-converged at the merge stage which unions provenance per (s,p,o)).
 
 The stream query runs on a session of its own (``_stream_session``) with
-two fixed settings; the merge stays on the caller's session, so its
+three fixed settings; the merge stays on the caller's session, so its
 shuffle, AQE and broadcast joins are the caller's:
 
 - ``spark.sql.shuffle.partitions = 1``. Spark reads it only when it
@@ -50,6 +50,13 @@ shuffle, AQE and broadcast joins are the caller's:
   file system forks a ``readlink`` process per rename when its native
   library is missing, and a checkpoint renames every file it writes. Every
   checksum file stays.
+- ``spark.sql.streaming.stateStore.maintenanceInterval = 1s``. A call's
+  query lives about a second, so Spark's default 60 s maintenance never
+  runs: no state ``.snapshot`` is ever written, each drop's state load
+  replays every delta since the stream began, and the previous calls'
+  state providers are never unloaded. Maintenance writes a snapshot once
+  ``minDeltasForSnapshot`` deltas pile up and unloads a provider whose
+  query has stopped.
 
 No-data micro-batches stay on: the one after a drop evicts the dedup state
 its watermark expired. Without it eviction waits until the end of the next
@@ -85,9 +92,11 @@ PAGES_STREAM_SCHEMA = T.StructType(
 )
 
 
-def stream_pages_to_triples(
-    spark: SparkSession, landing_dir: str, watermark: str = "1 hour"
-) -> DataFrame:
+# event-time horizon of the dedup: a key sighted again within it is dropped
+_WATERMARK = "1 hour"
+
+
+def stream_pages_to_triples(spark: SparkSession, landing_dir: str) -> DataFrame:
     """→ streaming DataFrame of validated, watermark-deduped triples.
 
     Columns: subject, predicate, object, provided_by, warc_ts (event time).
@@ -97,7 +106,7 @@ def stream_pages_to_triples(
     text = extract_text(pages).select("url", "warc_ts", "extracted_text")
     triples = extract_triples(text, carry_cols=("warc_ts",))
     valid, _errors = validate_edges(triples)  # error stream: attach via foreachBatch
-    return valid.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
+    return valid.withWatermark("warc_ts", _WATERMARK).dropDuplicatesWithinWatermark(
         ["subject", "predicate", "object"]
     )
 
@@ -137,6 +146,7 @@ _STREAM_CONF = {
     "spark.sql.streaming.checkpointFileManagerClass": (
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
     ),
+    "spark.sql.streaming.stateStore.maintenanceInterval": "1s",
 }
 _stream_sessions: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
@@ -175,7 +185,6 @@ def stream_kg_update(
     landing_dir: str,
     edges_dir: str,
     checkpoint_dir: str,
-    watermark: str = "1 hour",
 ) -> None:
     """Continuous KG maintenance: drain page drops and MERGE their triples
     into the persistent edges snapshot (reference merge semantics per
@@ -192,7 +201,7 @@ def stream_kg_update(
         _swap_snapshot(_merge_into(_read_snapshot(spark, edges_dir, new.schema), new), edges_dir)
 
     q = (
-        stream_pages_to_triples(_stream_session(spark), landing_dir, watermark)
+        stream_pages_to_triples(_stream_session(spark), landing_dir)
         .writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

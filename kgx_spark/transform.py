@@ -447,27 +447,16 @@ def transform_config(
     return results
 
 
-def merge(
-    spark: SparkSession,
-    sources: list[dict[str, Any]],
-    output_args: dict[str, Any],
-    operations: list[dict] | None = None,
-    preserve: bool = True,
-) -> Graph:
-    """kgx merge: N sources → unionByName → groupBy merge → operations → sink
+def merge(spark: SparkSession, sources: list[dict[str, Any]], output_args: dict[str, Any]) -> Graph:
+    """kgx merge: N sources → unionByName → groupBy merge → sink
     (kgx/cli/cli_utils.py:723-901 + graph_merge.py).
 
     The reference CLI calls merge_all_graphs (cli_utils.py:813), which
     reorders inputs largest-edge-count-first before merging; that ordering
     is observable only through scalar-conflict resolution. Here sources
     merge in the configured order — counting edges first would be a full
-    scan per source at scale. Under preserve=False a scalar conflict can
-    therefore resolve differently from the reference; list the sources
-    largest-first to reproduce its result."""
-    graphs = [read_source(spark, s) for s in sources]
-    nodes, edges = merge_graphs(graphs, preserve=preserve)
-    if operations:
-        nodes, edges = apply_graph_operations(nodes, edges, operations)
+    scan per source at scale."""
+    nodes, edges = merge_graphs([read_source(spark, s) for s in sources])
     write_sink(nodes, edges, output_args)
     return nodes, edges
 

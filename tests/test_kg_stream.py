@@ -12,6 +12,7 @@ by a crash."""
 import glob
 import os
 import shutil
+import time
 from datetime import datetime, timedelta
 
 import pyspark.sql.functions as F
@@ -260,6 +261,30 @@ def test_key_past_watermark_still_merges(spark, tmp_path):
     assert _provenance(spark, edges) == {("P:1", "S:1"): ["u:a", "u:c"], ("P:2", "S:2"): ["u:b"]}
 
 
+def test_dedup_state_writes_snapshots(spark, tmp_path):
+    """State-store maintenance runs between drops: once a stream's dedup
+    state holds 10 deltas (``minDeltasForSnapshot``) it gets a
+    ``.snapshot``, so a drop's state load does not replay every delta since
+    the stream began. Spark's default 60 s maintenance never runs inside a
+    call's one-second query. The first stateful query of a process fixes
+    the maintenance interval for all, so this test runs before
+    test_checkpoint_with_callers_state_partitions_resumes, whose query on
+    the caller's session would fix it at 60 s."""
+    tmpdir = str(tmp_path)
+    landing, edges, ckpt = f"{tmpdir}/landing", f"{tmpdir}/edges", f"{tmpdir}/ckpt"
+    os.makedirs(landing)
+    t0 = datetime(2024, 1, 1)
+    for i in range(6):  # a data and a no-data batch each: 12 deltas
+        _land_page(spark, landing, tmpdir, f"u:{i}", t0 + timedelta(minutes=i), f"P:{i} interacts with S:{i}.")
+        stream_kg_update(spark, landing, edges, ckpt)
+    state = f"{ckpt}/state/0/0"
+    assert len(glob.glob(f"{state}/*.delta")) >= 10
+    deadline = time.monotonic() + 5
+    while not glob.glob(f"{state}/*.snapshot") and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert glob.glob(f"{state}/*.snapshot")
+
+
 def _state_partitions(ckpt):
     """Partition directories of the dedup operator's state store."""
     return sorted(d for d in os.listdir(f"{ckpt}/state/0") if d.isdigit())
@@ -315,7 +340,11 @@ def test_stream_settings_stay_on_the_stream(spark, tmp_path):
     """The stream runs on a session of its own: one dedup state partition
     and a checkpoint file manager that renames in place. The caller's
     session keeps its settings, and its stream session is made once."""
-    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.checkpointFileManagerClass")
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "spark.sql.streaming.stateStore.maintenanceInterval",
+    )
     before = {k: spark.conf.get(k, None) for k in keys}
     tmpdir = str(tmp_path)
     landing, a_dir, b_dir, pages = _drops(spark, tmpdir)
@@ -332,3 +361,4 @@ def test_stream_settings_stay_on_the_stream(spark, tmp_path):
     assert _n_files(ckpt) - n_files == WARM_DROP_CHECKPOINT_FILES
     assert kg_stream._stream_session(spark) is kg_stream._stream_session(spark)
     assert _read_spo(spark, edges) == _batch_spo(pages)
+

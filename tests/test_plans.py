@@ -125,6 +125,42 @@ def test_clique_mapping_not_force_broadcast_when_large(spark):
         assert "SortMergeJoin" in p and "BroadcastHashJoin" not in p
 
 
+def _final_plan(df):
+    """The executed adaptive plan of ``df`` (run it first), without the
+    initial plan AQE prints after it."""
+    return plan_of(df).split("+- == Initial Plan ==")[0]
+
+
+def test_remap_scans_its_nodes_once(spark, tmp_path):
+    """remap_node_identifier's two endpoint joins read one broadcast of the
+    old→new map: the executed plan scans the node file once, and the object
+    join reads the subject join's exchange."""
+    from kgx_spark.operators.graph_ops import remap_node_identifier
+
+    nodes, edges = _same_as_chain(spark, 400)
+    path = str(tmp_path / "nodes")
+    nodes.withColumn("alt", F.concat(F.lit("M:"), "id")).write.parquet(path)
+    _, remapped = remap_node_identifier(spark.read.parquet(path), edges, "biolink:NamedThing", "alt")
+    remapped.collect()
+    final = _final_plan(remapped)
+    assert final.count("FileScan parquet") == 1
+    assert "ReusedExchange" in final
+
+
+def test_clique_nodes_read_the_checkpointed_election(spark):
+    """clique_merge elects leaders once: the canonical nodes read the
+    election from the checkpoint the edges read, so their executed plan
+    runs no window; with update_categories the only window left is
+    clique_category's."""
+    from kgx_spark.operators.clique import clique_merge
+
+    nodes, edges = _same_as_chain(spark, 400)
+    for update_categories, windows in ((False, 0), (True, 1)):
+        n_out, _, _ = clique_merge(nodes, edges, dedupe_edges=False, update_categories=update_categories)
+        n_out.collect()
+        assert len(re.findall(r"\bWindow \[", _final_plan(n_out))) == windows
+
+
 def test_meta_kg_catalog_not_broadcast_hinted(spark):
     """meta_edge_stats / count_by_spo_category join a node-scale catalog —
     the static plan must carry NO forced broadcast of it."""

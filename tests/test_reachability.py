@@ -1,5 +1,6 @@
 """Every kgx_spark module, and every top-level definition in it, is reached
-from a user path.
+from a user path, and every option of a top-level function is set by some
+caller.
 
 The user paths are the KGX CLI, the batch crawl build, the streaming
 update, the pipeline script, the ``__spark_entry__`` registry and the
@@ -12,12 +13,18 @@ no module is imported and no Spark session starts.
   a reached definition references are followed, through ``from … import``
   bindings and ``module.attr`` references, transitively. A module's
   top-level statements that define nothing run on import and are roots too.
+- Options (parameters with a default): each must be passed by some call in
+  the package, the roots, the tools, the scripts or the tests; a ``**``
+  splat counts when it is a dict display.
 
 A module or definition nothing reaches is dead code and must be deleted,
-not kept for its tests; a test's reference oracle lives in ``tests/``.
-Dunder names (``__version__``) are Python's module metadata, not code, and
-are not checked. Run this file after deleting or adding any top-level
-definition.
+not kept for its tests; a test's reference oracle lives in ``tests/``. An
+option nothing sets selects branches nothing runs, and goes too, unless
+``UNSET_OPTIONS`` names it with its reason. Dunder names (``__version__``)
+are Python's module metadata, not code, and are not checked.
+
+Run this file after deleting or adding any top-level definition or
+parameter.
 """
 
 import ast
@@ -215,3 +222,95 @@ def test_every_definition_is_reached_from_a_user_path():
     assert not unreached, f"no user path reaches {unreached}"
     # the set names only definitions that exist and no user path reaches
     assert CLI_PARITY <= defined - _reached_definitions(modules), "stale entry in CLI_PARITY"
+
+
+# files whose calls may set an option: the package itself, the user-path
+# roots outside it, the tools and scripts, and the tests
+CALLERS = ("kgx_spark", "__spark_entry__.py", "kgbench/run.py", "scripts", "tools", "tests")
+# defaulted parameters kept although no call passes them, each with its reason
+UNSET_OPTIONS = {
+    # deployment settings of a remote database: collection names and write
+    # batch size, which a deployment, not a test, chooses
+    "kgx_spark.sinks.arango_sink.node_doc(node_collection)": "ArangoDB deployment setting",
+    "kgx_spark.sinks.arango_sink.edge_doc(node_collection)": "ArangoDB deployment setting",
+    "kgx_spark.sinks.arango_sink.write_arango(node_collection)": "ArangoDB deployment setting",
+    "kgx_spark.sinks.arango_sink.write_arango(edge_collection)": "ArangoDB deployment setting",
+    "kgx_spark.sinks.arango_sink.write_arango(batch_size)": "ArangoDB deployment setting",
+    # the same for Neo4j: write batch and read page size
+    "kgx_spark.sinks.neo_sink.write_neo(batch_size)": "Neo4j deployment setting",
+    "kgx_spark.sources.neo_source.read_neo(page_size)": "Neo4j deployment setting",
+    # the reference's Cypher builders take them; the tested twin
+    # build_count_query(is_directed) has the same signature
+    "kgx_spark.sources.neo_source.format_edge_filter(op)": "mirrors the reference's Cypher builder",
+    "kgx_spark.sources.neo_source.build_edges_query(is_directed)": "mirrors the reference's Cypher builder",
+    # the reference's `kgx merge --source/--destination` flags, not wired
+    # into this CLI yet
+    "kgx_spark.transform.merge_config(source)": "reference CLI flag",
+    "kgx_spark.transform.merge_config(destination)": "reference CLI flag",
+    # the RDF prefix map read_ntriples and read_owl_nt also take
+    "kgx_spark.sources.jelly.read_jelly(prefix_map)": "RDF prefix map of every RDF reader",
+}
+
+
+def _defaulted_parameters(modules: dict[str, Path]) -> dict[str, tuple[str, str, list[str]]]:
+    """``module.function(param)`` → (function, param, the function's
+    positional parameters) for every parameter with a default of a
+    top-level function in the package."""
+    out = {}
+    for mod, path in modules.items():
+        for stmt in ast.parse(path.read_text(), str(path)).body:
+            if not isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = stmt.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            defaulted = positional[len(positional) - len(a.defaults):]
+            defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for p in defaulted:
+                out[f"{mod}.{stmt.name}({p})"] = (stmt.name, p, positional)
+    return out
+
+
+def _passed_arguments(signatures: dict[str, list[list[str]]]) -> set[tuple[str, str]]:
+    """(called name, parameter) for every argument a call in ``CALLERS``
+    passes by keyword, by position (``*args`` covers the rest) or in a
+    ``**`` splat of a dict display. Calls match by name only, so any
+    function of that name counts as called."""
+    out = set()
+    paths = [p for c in CALLERS for p in ([ROOT / c] if c.endswith(".py") else (ROOT / c).rglob("*.py"))]
+    for path in paths:
+        for call in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in signatures:
+                continue
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    out.add((name, kw.arg))
+                elif isinstance(kw.value, ast.Dict):
+                    out |= {(name, k.value) for k in kw.value.keys if isinstance(k, ast.Constant)}
+            for positional in signatures[name]:
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        out |= {(name, p) for p in positional[i:]}
+                        break
+                    if i < len(positional):
+                        out.add((name, positional[i]))
+    return out
+
+
+def test_every_option_is_set_by_a_caller():
+    """A defaulted parameter no call passes is an option nothing sets: its
+    other branches are dead code, and it goes, unless ``UNSET_OPTIONS``
+    names it with its reason."""
+    params = _defaulted_parameters(_package_modules())
+    signatures: dict[str, list[list[str]]] = {}
+    for name, _, positional in params.values():
+        if positional not in signatures.setdefault(name, []):
+            signatures[name].append(positional)
+    passed = _passed_arguments(signatures)
+    unset = {key for key, (name, p, _) in params.items() if (name, p) not in passed}
+    assert not unset - UNSET_OPTIONS.keys(), f"no caller sets {sorted(unset - UNSET_OPTIONS.keys())}"
+    # the dict names only options that exist and that no caller sets
+    assert UNSET_OPTIONS.keys() <= unset, f"stale entries in UNSET_OPTIONS: {sorted(UNSET_OPTIONS.keys() - unset)}"
