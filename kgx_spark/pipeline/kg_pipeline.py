@@ -51,10 +51,7 @@ def build_stages(
         # Few-large-files inputs (single-split parquet at test scale)
         # under-parallelize the CPU-bound extract/triples path — re-spread
         # by url over the session's shuffle partitions (AQE may coalesce
-        # them); the extract snapshot then preserves this layout. Each
-        # Python UDF task pays a fixed worker set-up (~0.25 CPU-s measured
-        # on a 4-vCPU host, whatever its rows), so extract wants as few
-        # tasks as keep the cores busy, not a multiple of them.
+        # them); the extract snapshot then preserves this layout.
         pages = pages.repartition("url")
         return extract_text(pages).select("url", "warc_ts", "extracted_text", "lang")
 

@@ -3,9 +3,9 @@
 The north-rule batch pipeline (pages → extract_text → extract_triples →
 validate → merge) re-expressed as Structured Streaming over a landing
 directory of page drops. The transformation functions are the batch
-operators themselves — extract/triples/validate are narrow (pandas UDF +
-regex + filters), so they lift into a stream unchanged; only dedup and
-merge need streaming-specific forms:
+operators themselves — extract/triples/validate are narrow (built-in regex
+expressions + filters, no Python worker), so they lift into a stream
+unchanged; only dedup and merge need streaming-specific forms:
 
 - ``stream_pages_to_triples``: append-mode triple stream with
   ``dropDuplicatesWithinWatermark`` on (subject, predicate, object) so a

@@ -49,13 +49,50 @@ def test_extraction_byte_identical_per_url(spark, pages):
     b = extract_text(pages.repartition(7)).select("url", F.col("extracted_text").alias("t2"))
     joined = a.join(b, "url")
     assert joined.where(F.col("t1") != F.col("t2")).count() == 0
-    # pure-function reference check on a sample
-    sample = pages.select("url", "html").limit(5).collect()
-    got = {r["url"]: t for r, t in zip(sample, [extract_text_bytes(r["html"]) for r in sample])}
-    spark_rows = {r["url"]: r["t1"] for r in a.join(
-        pages.select("url").limit(5), "url", "left_semi").collect()}
-    for url, t in got.items():
-        assert spark_rows[url] == t
+    # pure-function reference check on every page
+    rows = pages.select("url", "html").collect()
+    spark_rows = dict(a.collect())
+    assert len(rows) == len(spark_rows) == 500
+    for r in rows:
+        assert spark_rows[r["url"]] == extract_text_bytes(r["html"]), r["url"]
+
+
+def test_extraction_of_a_5mb_unclosed_script(spark):
+    """An unclosed <script> runs to the end of a 5 MB page: the lazy scan
+    to ``\\z`` must not recurse per character (no StackOverflowError)."""
+    code = "var x = 1; // <p>code</p> &amp; \n"
+    n = 5 * 2**20 // len(code)
+    page = spark.range(1).select(
+        F.concat(F.lit("<p>before</p><script>"), F.repeat(F.lit(code), n)).cast("binary").alias("html")
+    )
+    html = b"<p>before</p><script>" + code.encode() * n
+    assert extract_text(page).first()["extracted_text"] == extract_text_bytes(html) == "before"
+
+
+def test_extraction_case_classes_and_word_class_are_pythons(spark):
+    """The Java forms of Python's ``(?i)`` tag names and ``\\w``, derived
+    from Python's own ``re`` over every code point: each letter of a tag
+    name matches exactly the union of its case classes, the backreference
+    equates exactly the characters of one class, and ``_WORD`` matches
+    exactly what ``\\w`` matches."""
+    import re
+
+    from kgx_spark.pipeline.extract import _CASE_CLASSES, _WORD
+
+    every = "".join(map(chr, [*range(0xD800), *range(0xE000, 0x110000)]))
+    for letter in set("scriptstylenavheaderfooterasidetitle"):
+        classes = _CASE_CLASSES.get(letter, (letter.upper() + letter,))
+        assert sorted(re.findall(f"(?i){letter}", every)) == sorted("".join(classes))
+        for cls in classes:
+            for a in cls:
+                # every b with re.fullmatch(r"(?i)(.)\1", a + b), in one scan
+                pairs = "".join(a + "\0" + b for b in every)
+                closers = {m[2] for m in re.finditer(rf"(?i)({re.escape(a)})\0(\1)", pairs)}
+                assert closers == set(cls), (a, closers)
+    java = spark.range(1).select(
+        F.regexp_replace(F.lit(every), f"(?s)(?!{_WORD}).", "").alias("w")
+    ).first()["w"]
+    assert java == re.sub(r"\W", "", every)
 
 
 def test_extract_triples_matches_embedded_facts(spark, pages):

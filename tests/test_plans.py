@@ -310,3 +310,44 @@ def test_stream_merges_plan_the_callers_shuffle_partitions(spark, tmp_path):
     exchange = r"Exchange hashpartitioning\(subject#\d+, predicate#\d+, object#\d+, (\d+)\)"
     for merged in (first, warm):
         assert re.findall(exchange, plan_of(merged)) == [n_parts]
+
+
+# the physical nodes that hand rows to a Python worker
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def test_no_python_worker_on_the_crawl_build_or_the_stream(spark, tmp_path, monkeypatch):
+    """Extraction is Spark's own expressions: no plan of the seven crawl
+    build stages, nor the stream's micro-batch, runs rows through Python."""
+    from kgx_spark.pipeline.kg_pipeline import build_stages
+    from kgx_spark.pipeline.stages import Stage, run_stages
+    from kgx_spark.pipeline.synth import synth_pages
+    from kgx_spark.streaming import kg_stream
+
+    plans = {}
+
+    def planned(st):
+        def fn(spark_, ctx):
+            df = st.fn(spark_, ctx)
+            plans[st.name] = plan_of(df)
+            return df
+        return Stage(st.name, fn)
+
+    run_stages(spark, str(tmp_path / "w"), [planned(st) for st in build_stages(SF)], force=True)
+    assert len(plans) == 7
+
+    # while a drop merges, its query's last execution is the drop's batch
+    swap = kg_stream._swap_snapshot
+
+    def recorded(df, path):
+        (query,) = kg_stream._stream_session(spark).streams.active
+        plans["stream"] = query._jsq.explainInternal(False)
+        return swap(df, path)
+
+    landing = str(tmp_path / "landing")
+    synth_pages(spark, SF).select("url", "warc_ts", "html").write.parquet(landing)
+    monkeypatch.setattr(kg_stream, "_swap_snapshot", recorded)
+    kg_stream.stream_kg_update(spark, landing, str(tmp_path / "edges"), str(tmp_path / "ckpt"))
+    assert "extracted_text" in plans["stream"]
+    for name, p in plans.items():
+        assert not [n for n in _PYTHON_NODES if n in p], name

@@ -5,7 +5,7 @@ import re
 from collections import Counter
 
 import hypothesis.strategies as st
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 
 from kgx_spark.operators.clique import _driver_union_find
 from kgx_spark.pipeline.link import MAX_NGRAM, detect_mentions
@@ -26,6 +26,69 @@ def test_extraction_pure_and_idempotent_shape(body):
     assert out1 == out2  # pure function of bytes
     assert "\n" not in out1 and "\t" not in out1  # whitespace collapsed
     assert out1 == out1.strip()
+
+
+_NAMES = st.sampled_from(["script", "style", "nav", "head", "header", "title", "aside", "kbd"])
+_WS_CHARS = st.sampled_from([" ", "\t", "\n", "\x1c", "\x1d", "\x1e", "\x1f", "\x85", "\u2028", "\u3000", "\xa0"])
+
+
+def _spelled(name: str):
+    # each letter in any case Python's (?i) lets it match, İ ı ſ K included
+    variants = {"s": "sSſ", "i": "iIİı", "k": "kKK"}
+    return st.tuples(*(st.sampled_from(variants.get(c, c + c.upper())) for c in name)).map("".join)
+
+
+def _open_tag(name: str):
+    after_name = st.sampled_from(["", " a=1", "x", "_", "2", "²", "ſ", "\u0870"])
+    return st.builds("<{}{}>".format, _spelled(name), after_name)
+
+
+def _close_tag(name: str):
+    return st.builds("</{}{}>".format, _spelled(name), st.text(_WS_CHARS, max_size=2))
+
+
+_text = st.one_of(
+    st.sampled_from(["&amp;lt;", "&amp;", "&lt;", "&gt;", "&quot;", "&#39;", "&nbsp;", "&copy;", "&am", "p;", "<", ">"]),
+    _WS_CHARS,
+    st.sampled_from("ſİıK²xé中😀"),
+    st.characters(blacklist_categories=("Cs",)),
+).map(str.encode)
+# bytes no UTF-8 decoder accepts whole: lone continuation and lead bytes,
+# truncated sequences, overlong forms and encoded surrogates
+_malformed = st.sampled_from(
+    [b"\x80", b"\xbf", b"\xc0\xaf", b"\xc3", b"\xe2\x82", b"\xe0\x80\xaf", b"\xed\xa0\x80",
+     b"\xf0\x9f\x98", b"\xf4\x90\x80\x80", b"\xf8\x88\x80\x80\x80", b"\xff"]
+)
+# an element opened and closed under two spellings of one name; alone, a
+# tag is left unclosed, or closes what another name opened
+_element = _NAMES.flatmap(
+    lambda n: st.tuples(_open_tag(n).map(str.encode), st.lists(_text | _malformed, max_size=3).map(b"".join),
+                        _close_tag(n).map(str.encode)).map(b"".join)
+)
+_tag = _NAMES.flatmap(lambda n: _open_tag(n) | _close_tag(n)).map(str.encode)
+_html_pages = st.lists(st.lists(_element | _tag | _text | _malformed, min_size=1, max_size=30).map(b"".join),
+                       min_size=4, max_size=40)
+
+
+@settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_html_pages)
+@example([
+    "<script>a</ſcript>b".encode(), "<ſcript>a</script>b".encode(), "<SCRİPT>a</script>b".encode(),
+    "<scrıpt>a</script>b".encode(), "<ſtyle>a</ſtyle >b".encode(), "<aſide>a</aside>b".encode(),
+    "<tİtle>a</title>b".encode(), "<script\u0870>a</script>b".encode(), "<style>a</style\u3000>b".encode(),
+])
+def test_spark_extraction_equals_the_oracle(spark, htmls):
+    """Spark's extract_text is the Python-re oracle, byte for byte, over
+    the places where Java's regex dialect differs from Python's: case
+    classes in tag names (ſ opens <script> but does not close it, İ does),
+    Unicode whitespace and word characters after a tag name, unclosed and
+    nested script/style, entity order, and malformed UTF-8."""
+    from kgx_spark.pipeline.extract import extract_text
+
+    df = spark.createDataFrame(list(enumerate(htmls)), "i int, html binary")
+    got = dict(extract_text(df).select("i", "extracted_text").collect())
+    for i, html in enumerate(htmls):
+        assert got[i] == extract_text_bytes(html), html
 
 
 @given(st.lists(st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=120))
