@@ -2,7 +2,7 @@
 
     python -m kgx_spark transform --input-format tsv -i graph_dir \
         --output-format jsonl -o out/graph
-    python -m kgx_spark merge --config merge.yaml
+    python -m kgx_spark merge --config merge.yaml   # the reference's merged_graph YAML
     python -m kgx_spark graph-summary --input-format tsv -i graph_dir -o stats.yaml
     python -m kgx_spark validate --input-format jsonl -i graph_dir
 """
@@ -54,7 +54,11 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     m = sub.add_parser("merge", help="kgx merge (kgx/cli/__init__.py:833)")
-    m.add_argument("--config", required=True, help="YAML: {sources: {..}, destination: {..}}")
+    m.add_argument(
+        "--config", required=True,
+        help="the reference's merge YAML (cli_utils.py:723-901): {configuration: "
+             "{..}, merged_graph: {source: {..}, operations: [..], destination: {..}}}",
+    )
 
     g = sub.add_parser("graph-summary", help="kgx graph-summary (cli_utils.py:68-164)")
     _io_args(g)
@@ -212,27 +216,15 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"nodes": nodes.count() if nodes is not None else 0,
                           "edges": edges.count() if edges is not None else 0}))
     elif args.cmd == "merge":
-        import yaml
+        from kgx_spark.transform import merge_config
 
-        from kgx_spark.transform import merge, merge_config
-
-        with open(args.config) as fh:
-            cfg = yaml.safe_load(fh)
-        if "merged_graph" in cfg:
-            # the reference's `kgx merge --merge-config` YAML shape
-            # (cli_utils.py:723-901; tests/resources/test-merge.yaml)
+        try:
             nodes, edges = merge_config(spark, args.config)
-            print(json.dumps({"nodes": nodes.count(), "edges": edges.count()}))
-            return 0
-        sources = [
-            {"filename": s["input"]["filename"], "format": s["input"]["format"]}
-            for s in cfg["configuration"]["sources"].values()
-        ] if "configuration" in cfg else [
-            {"filename": s["input"]["filename"], "format": s["input"]["format"]}
-            for s in cfg["sources"].values()
-        ]
-        dest = list(cfg.get("destination", cfg.get("destinations", {})).values())[0]
-        nodes, edges = merge(spark, sources, {"filename": dest["filename"], "format": dest["format"]})
+        except ValueError as e:
+            # a config error (no merged_graph block, a source without input
+            # filenames, an unknown format or operation): one line, no traceback
+            print(f"kgx merge: {e}", file=sys.stderr)
+            return 2
         print(json.dumps({"nodes": nodes.count(), "edges": edges.count()}))
     elif args.cmd == "graph-summary":
         from kgx_spark.transform import read_source

@@ -29,7 +29,7 @@ _B = "biolink:"
 
 
 def _snake(name: str) -> str:
-    out = [name[0].lower()]
+    out = [name[:1].lower()]
     for ch in name[1:]:
         if ch.isupper():
             out.append("_")
@@ -98,12 +98,16 @@ KNOWN_MIXINS: frozenset[str] = frozenset(_B + m for m in MIXINS)
 KNOWN_PREDICATES: frozenset[str] = frozenset(PREDICATE_ANCESTORS)
 
 
-def specificity_table(spark: SparkSession) -> DataFrame:
-    """(category, depth) — depth = ancestor count (mixins included); higher =
-    more specific. Used for clique category election (clique_merge.py:474-499
-    sorts the category union by ancestor count)."""
-    rows = [(cat, len(ancs)) for cat, ancs in CATEGORY_ANCESTORS.items()]
-    return spark.createDataFrame(rows, "category string, depth int")
+def closure_table(spark: SparkSession) -> DataFrame:
+    """(category, closure, w): self-inclusive ancestor closure (classes +
+    mixins) and its size — the reference's get_biolink_ancestors output
+    (reflexive, mixins included — clique_merge.py:615-618 weights by its
+    length); higher w = more specific. 133 rows; always broadcast."""
+    rows = [
+        (c, [c, *CATEGORY_ANCESTORS[c]], 1 + len(CATEGORY_ANCESTORS[c]))
+        for c in sorted(CATEGORY_ANCESTORS)
+    ]
+    return spark.createDataFrame(rows, "category string, closure array<string>, w int")
 
 
 def context_prefixes() -> frozenset[str]:

@@ -207,16 +207,20 @@ def transformer_infores_catalog(
 
 
 def default_provenance(
-    df: DataFrame, default: str, slot: str = "provided_by", multivalued: bool = True
+    df: DataFrame, default: str | Column, slot: str = "provided_by", multivalued: bool = True
 ) -> DataFrame:
-    """Fill missing provenance with a default (kgx/utils/infores.py:326-459).
+    """Fill missing provenance with a default (kgx/utils/infores.py:326-459),
+    creating the slot when absent; a multivalued slot also fills empty
+    lists.
 
-    The reference derives the default from the input filename
-    (transformer.py:211); callers pass it explicitly here.
+    ``default`` is a string, or a Column of the slot's type: the reference
+    derives the default from the input filename (transformer.py:211), which
+    ``transform.read_source`` passes per row.
     """
+    if isinstance(default, str):
+        default = F.array(F.lit(default)) if multivalued else F.lit(default)
     if slot not in df.columns:
-        df = df.withColumn(slot, F.lit(None).cast("array<string>" if multivalued else "string"))
-    filler = F.array(F.lit(default)) if multivalued else F.lit(default)
+        return df.withColumn(slot, default)
     cur = F.col(slot)
     missing = cur.isNull() | (F.size(cur) == 0) if multivalued else cur.isNull()
-    return df.withColumn(slot, F.when(missing, filler).otherwise(cur))
+    return df.withColumn(slot, F.when(missing, default).otherwise(cur))

@@ -258,20 +258,6 @@ def build_same_as_pairs(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return out.where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
 
 
-def _closure_table(spark) -> DataFrame:
-    """(category, closure, w): self-inclusive ancestor closure (classes +
-    mixins) and its size — the reference's get_biolink_ancestors output
-    (reflexive, mixins included — clique_merge.py:615-618 weights by its
-    length). 133 rows; always broadcast."""
-    from kgx_spark.functions.biolink import CATEGORY_ANCESTORS
-
-    rows = [
-        (c, [c, *CATEGORY_ANCESTORS[c]], 1 + len(CATEGORY_ANCESTORS[c]))
-        for c in sorted(CATEGORY_ANCESTORS)
-    ]
-    return spark.createDataFrame(rows, "category string, closure array<string>, w int")
-
-
 def category_anchors(nodes: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """(id, anchor, invalid_biolink): the per-node category audit of the
     reference's check_all_categories (clique_merge.py:558-598).
@@ -292,7 +278,9 @@ def category_anchors(nodes: DataFrame, pairs: DataFrame | None = None) -> DataFr
     one groupBy(id): the model lookup stays a broadcast hash join, never a
     per-row literal-map evaluation.
     """
-    ct = _closure_table(nodes.sparkSession)
+    from kgx_spark.functions.biolink import closure_table
+
+    ct = closure_table(nodes.sparkSession)
     rows = nodes.select("id", F.posexplode_outer(F.coalesce("category", F.array())))
     j = rows.join(F.broadcast(ct), rows["col"] == ct["category"], "left")
     per_id = (
@@ -426,14 +414,15 @@ def clique_category(members: DataFrame, nodes: DataFrame) -> DataFrame:
     members (clique_merge.py:474-499, 600-620 — reference sorts candidate
     categories by Biolink-ancestor count; here specificity comes from the
     broadcast closure table, never a library call on executors)."""
-    from kgx_spark.functions.biolink import specificity_table
+    from kgx_spark.functions.biolink import closure_table
 
-    spec = specificity_table(members.sparkSession)
+    ct = closure_table(members.sparkSession).select("category", "w")
     cats = (
         members.join(nodes.select("id", "category"), on="id")
         .select("component", F.explode("category").alias("category"))
-        .join(F.broadcast(spec), on="category", how="left")
-        .withColumn("depth", F.coalesce("depth", F.lit(0)))
+        .join(F.broadcast(ct), on="category", how="left")
+        # depth = ancestor count; an unknown category counts as depth 0
+        .withColumn("depth", F.coalesce(F.col("w") - 1, F.lit(0)))
     )
     w = Window.partitionBy("component").orderBy(F.col("depth").desc(), F.col("category").asc())
     return (
@@ -493,7 +482,9 @@ def clique_merge(
         # Per-clique stats over ONE member-restricted scan; eviction can
         # only fire in cliques with >1 distinct anchor or an invalid-biolink
         # member.
-        ct = _closure_table(nodes.sparkSession)
+        from kgx_spark.functions.biolink import closure_table
+
+        ct = closure_table(nodes.sparkSession)
         member_cats = labels.join(
             nodes.select("id", "category"), "id", "left"
         ).localCheckpoint()

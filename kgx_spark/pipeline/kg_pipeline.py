@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kgx_spark.functions.keys import generate_edge_identifiers
 from kgx_spark.operators.clique import clique_merge
 from kgx_spark.operators.merge import merge_edges, merge_nodes
 from kgx_spark.operators.validate import validate_edges, validate_nodes
@@ -99,7 +98,6 @@ def build_stages(
 
     def s_edges(spark: SparkSession, ctx: dict) -> DataFrame:
         merged = merge_edges([ctx["canonical"].drop("_original_subject", "_original_object")])
-        merged = generate_edge_identifiers(merged)
         # NO post-merge re-shuffle: the merge groupBy already leaves the data
         # hash(s,p,o)-partitioned, which spreads a hub SUBJECT across
         # partitions by (predicate, object) variation — strictly more

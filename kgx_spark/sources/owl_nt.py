@@ -14,7 +14,7 @@ distributed line scan (blank nodes included); restriction stanzas are
 reassembled with ONE groupBy over the blank-node subjects and joined back to
 the subClassOf triples — no driver-side ontology object, no rdflib.
 ``owl_source.read_owl`` handles RDF/XML inputs (stdlib converter in
-sources/rdf_xml.py, rdflib when installed) and feeds this module; this is
+sources/rdf_xml.py) and feeds this module; this is
 the scale path for all OWL ingestion.
 """
 

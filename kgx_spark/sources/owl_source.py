@@ -11,10 +11,10 @@ corpus-sized), mirroring the reference's design, and the resulting triples
 feed the DISTRIBUTED OWL N-Triples pipeline (sources/owl_nt.py, which
 unpacks the restrictions).
 
-The RDF/XML → N-Triples conversion uses rdflib when available, else the
-self-contained stdlib converter in sources/rdf_xml.py (round-2 VERDICT
-listed the rdflib gate as an environment-limited gap; the converter removes
-it — same subset of the W3C syntax real ontology dumps use).
+The RDF/XML → N-Triples conversion is the self-contained stdlib converter
+in sources/rdf_xml.py (the same subset of the W3C syntax real ontology
+dumps use). Like the reference's OwlSource, the input is always read as
+RDF/XML, whatever its file extension.
 """
 
 from __future__ import annotations
@@ -25,24 +25,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def owl_to_nt_path(path: str) -> str:
-    """RDF/XML file → temp .nt file path (rdflib if installed, stdlib
-    converter otherwise — both deterministic for a given input)."""
-    try:
-        import rdflib
+    """RDF/XML file → temp .nt file path (deterministic for a given input)."""
+    from kgx_spark.sources.rdf_xml import rdfxml_to_nt
 
-        g = rdflib.Graph()
-        g.parse(path)
-        with tempfile.NamedTemporaryFile(suffix=".nt", delete=False, mode="wb") as fh:
-            g.serialize(destination=fh, format="nt")
-            return fh.name
-    except ImportError:
-        from kgx_spark.sources.rdf_xml import rdfxml_to_nt
-
-        with tempfile.NamedTemporaryFile(
-            suffix=".nt", delete=False, mode="w", encoding="utf-8"
-        ) as fh:
-            fh.write(rdfxml_to_nt(path))
-            return fh.name
+    with tempfile.NamedTemporaryFile(
+        suffix=".nt", delete=False, mode="w", encoding="utf-8"
+    ) as fh:
+        fh.write(rdfxml_to_nt(path))
+        return fh.name
 
 
 def read_owl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:

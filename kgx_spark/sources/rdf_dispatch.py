@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from kgx_spark.functions.biolink import _snake
 from kgx_spark.functions.biolink_model import CLASSES, PREDICATES, SLOT_TYPES
 from kgx_spark.functions.curie import (
     CURIE_REGEX,
@@ -235,15 +236,6 @@ def contract_py(uri: str, pm: dict[str, str]) -> str:
     if m and m.group(1) in OBO_IDSPACES:
         return f"{m.group(1)}:{m.group(2)}"
     return uri
-
-
-def _snake(name: str) -> str:
-    out = [name[0].lower()] if name else []
-    for ch in name[1:]:
-        if ch.isupper():
-            out.append("_")
-        out.append(ch.lower())
-    return "".join(out)
 
 
 def _underscore(word: str) -> str:

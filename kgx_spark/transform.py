@@ -107,7 +107,7 @@ def read_source(spark: SparkSession, input_args: dict[str, Any]) -> Graph:
     # knowledge-source coercion knobs (the reference Transformer's
     # input_args provenance map — kgx/utils/infores.py:326-459): entries
     # named after provenance slots coerce/suppress/rewrite those columns
-    from kgx_spark.functions.infores import PROVENANCE_SLOTS, _spec_mode, apply_provenance_map
+    from kgx_spark.functions.infores import PROVENANCE_SLOTS, _spec_mode, apply_provenance_map, default_provenance
 
     prov_specs = {k: input_args[k] for k in PROVENANCE_SLOTS if k in input_args}
     pb_suppressed = _spec_mode(prov_specs["provided_by"]) == "suppress" if "provided_by" in prov_specs else False
@@ -139,31 +139,16 @@ def read_source(spark: SparkSession, input_args: dict[str, Any]) -> Graph:
         # reference computes once per parse (transformer.py:211)
         first = path[0] if isinstance(path, (list, tuple)) else path
         base = F.lit(os.path.basename(str(first)).split(".")[0])
+    if default:
+        # str or list — a multi-valued provenance stamps EVERY value on
+        # nodes, its first on the scalar edge slot
+        values = [F.lit(v) for v in (default if isinstance(default, (list, tuple)) else [default])]
+    else:
+        values = [base]
     if nodes is not None and not pb_suppressed:
-        if default:
-            # str or list — a multi-valued provenance stamps EVERY value
-            values = default if isinstance(default, (list, tuple)) else [default]
-            filler = F.array(*[F.lit(v) for v in values])
-        else:
-            filler = F.array(base)
-        if "provided_by" not in nodes.columns:
-            nodes = nodes.withColumn("provided_by", filler)
-        else:
-            cur = F.col("provided_by")
-            nodes = nodes.withColumn(
-                "provided_by", F.when(cur.isNull() | (F.size(cur) == 0), filler).otherwise(cur)
-            )
+        nodes = default_provenance(nodes, F.array(*values))
     if edges is not None and not prov_specs:
-        scalar = (
-            F.lit(default if isinstance(default, str) else default[0])
-            if default
-            else base
-        )
-        if "knowledge_source" not in edges.columns:
-            edges = edges.withColumn("knowledge_source", scalar)
-        else:
-            cur = F.col("knowledge_source")
-            edges = edges.withColumn("knowledge_source", F.coalesce(cur, scalar))
+        edges = default_provenance(edges, values[0], slot="knowledge_source", multivalued=False)
 
     # graph-insertion dedup (the reference Transformer keys its graph by
     # node id and by generate_edge_key(s, predicate, o) — ALWAYS (s,p,o),
@@ -327,6 +312,71 @@ def transform(
     return nodes, edges
 
 
+class _ConfigFile:
+    """A `kgx transform` / `kgx merge` YAML config: the steps both verbs
+    take (cli_utils.py:552-901). ``block`` names the verb's top-level block
+    (``transform`` or ``merged_graph``); a config without it is refused
+    before anything is written. Relative input paths resolve against the
+    config file's directory, outputs against ``output_directory`` (itself
+    relative to the config file; default ``output``) — the reference's cwd
+    rules (cli_utils.py:612-640, prepare_output_args)."""
+
+    def __init__(self, path: str, block: str):
+        import yaml
+
+        self.dir = os.path.dirname(os.path.abspath(path))
+        with open(path) as fh:
+            cfg = yaml.safe_load(fh)
+        if not isinstance(cfg, dict) or block not in cfg:
+            raise ValueError(f"{path} has no '{block}' block")
+        self.block = cfg[block]
+        self.conf = cfg.get("configuration") or {}
+        self.output_directory = os.path.normpath(
+            os.path.join(self.dir, self.conf.get("output_directory") or "output")
+        )
+        os.makedirs(self.output_directory, exist_ok=True)
+
+    @staticmethod
+    def keys(blocks: dict, chosen: list[str] | None, flag: str) -> list[str]:
+        """The keys of ``blocks`` to run: all, or those the ``--{flag}``
+        flag names."""
+        keys = list(chosen) if chosen else list(blocks)
+        unknown = [k for k in keys if k not in blocks]
+        if unknown:
+            raise ValueError(f"unknown {flag} keys in --{flag}: {unknown}")
+        return keys
+
+    def input_args(
+        self, key: str, inp: dict, filters: dict, provenance: str | list | None
+    ) -> dict[str, Any]:
+        """read_source arguments for source ``key``'s ``input`` block, with
+        the verb's own filters and provenance default."""
+        filenames = inp.get("filename")
+        if isinstance(filenames, str):
+            filenames = [filenames]
+        if not filenames:
+            raise ValueError(f"source '{key}' has no input filenames")
+        resolved = [os.path.normpath(os.path.join(self.dir, f)) for f in filenames]
+        args: dict[str, Any] = {
+            "filename": resolved if len(resolved) != 1 else resolved[0],
+            "format": inp["format"],
+        }
+        for name in ("node_filters", "edge_filters"):
+            if filters.get(name):
+                args[name] = filters[name]
+        if provenance:
+            args["default_provenance"] = provenance
+        return args
+
+    def output_path(self, out: dict, key: str) -> str:
+        """An output block's filename (its first, when a list; else the
+        key) under ``output_directory``."""
+        ofn = out.get("filename") or key
+        if isinstance(ofn, list):
+            ofn = ofn[0]
+        return os.path.join(self.output_directory, ofn)
+
+
 def transform_config(
     spark: SparkSession,
     config_path: str,
@@ -353,81 +403,42 @@ def transform_config(
               operations: [{name: ..., args: {...}}]          # optional
 
     ``source`` restricts the run to the named keys (the reference's
-    ``--source`` flag). Relative input paths resolve against the config
-    file's directory, outputs against ``output_directory`` — exactly the
-    reference's cwd rules (cli_utils.py:612-640,  prepare_output_args).
+    ``--source`` flag). Paths resolve as ``_ConfigFile`` describes.
     Sources run sequentially — the reference's multiprocessing pool is
     subsumed by partition parallelism within each Spark job (SURVEY.md §3.1);
     a 1000-executor cluster saturates on one source's scan+shuffle, so
     inter-source concurrency adds nothing but contention at scale.
     → dict of source key → (nodes, edges).
     """
-    import os
-
-    import yaml
-
-    cwd = os.path.dirname(os.path.abspath(config_path))
-    with open(config_path) as fh:
-        cfg = yaml.safe_load(fh)
-    conf = cfg.get("configuration") or {}
-    output_directory = conf.get("output_directory") or "output"
-    if not os.path.isabs(output_directory):
-        output_directory = os.path.normpath(os.path.join(cwd, output_directory))
-    os.makedirs(output_directory, exist_ok=True)
-
-    sources_cfg = cfg["transform"]["source"]
-    keys = list(source) if source else list(sources_cfg.keys())
-    unknown = [k for k in keys if k not in sources_cfg]
-    if unknown:
-        raise ValueError(f"unknown source keys in --source: {unknown}")
+    config = _ConfigFile(config_path, "transform")
+    sources_cfg = config.block["source"]
+    # checkpoint writes the SAME frames a second time — without a cache
+    # that second action re-runs the whole read/filter/operations plan,
+    # so force the cache whenever a checkpoint snapshot will follow
+    checkpoint = bool(config.conf.get("checkpoint"))
+    forced_cache = checkpoint and not cache_graph
 
     results: dict[str, Graph] = {}
-    for key in keys:
+    for key in config.keys(sources_cfg, source, "source"):
         sp = sources_cfg[key]
         inp = sp["input"]
-        filenames = inp.get("filename")
-        if isinstance(filenames, str):
-            filenames = [filenames]
-        if not filenames:
-            raise ValueError(f"source '{key}' has no input filenames")
-        resolved = [
-            f if os.path.isabs(f) else os.path.normpath(os.path.join(cwd, f))
-            for f in filenames
-        ]
-        filters = inp.get("filters") or {}
-        input_args: dict[str, Any] = {
-            "filename": resolved if len(resolved) != 1 else resolved[0],
-            "format": inp["format"],
-        }
-        if filters.get("node_filters"):
-            input_args["node_filters"] = filters["node_filters"]
-        if filters.get("edge_filters"):
-            input_args["edge_filters"] = filters["edge_filters"]
         # explicit per-source provenance (the reference's provided_by kwarg —
         # transformer.py set_provenance_map); a LIST passes through whole
         # (every value is stamped), otherwise read_source defaults from the
         # input filename, as the reference does
-        pb = inp.get("provided_by") or inp.get("default_provenance")
-        if pb:
-            input_args["default_provenance"] = pb
-
+        input_args = config.input_args(
+            key, inp, inp.get("filters") or {},
+            inp.get("provided_by") or inp.get("default_provenance"),
+        )
         out = sp["output"]
-        ofn = out.get("filename") or key
-        if isinstance(ofn, list):
-            ofn = ofn[0]
-        if not os.path.isabs(ofn):
-            ofn = os.path.join(output_directory, ofn)
-        output_args: dict[str, Any] = {"filename": ofn, "format": out["format"]}
+        output_args: dict[str, Any] = {
+            "filename": config.output_path(out, key), "format": out["format"],
+        }
         for opt in ("single_file", "compression", "partition_by", "reify_all_edges",
                     "node_properties", "edge_properties", "denormalize"):
             if opt in out:
                 output_args[opt] = out[opt]
 
-        # checkpoint writes the SAME frames a second time — without a cache
-        # that second action re-runs the whole read/filter/operations plan,
-        # so force the cache whenever a checkpoint snapshot will follow
-        checkpoint = bool(conf.get("checkpoint"))
-        forced_cache = checkpoint and not cache_graph
         results[key] = transform(
             spark, input_args, output_args, sp.get("operations"),
             cache_graph=cache_graph or forced_cache,
@@ -436,7 +447,7 @@ def transform_config(
             # per-source TSV snapshot alongside the output
             # (cli_utils.py:953-956: "{output_directory}/{key}" in tsv)
             write_sink(*results[key], {
-                "filename": os.path.join(output_directory, key), "format": "tsv",
+                "filename": os.path.join(config.output_directory, key), "format": "tsv",
             })
         if forced_cache:
             # the caller didn't ask for cached frames — don't pin every
@@ -445,20 +456,6 @@ def transform_config(
                 if frame is not None:
                     frame.unpersist()
     return results
-
-
-def merge(spark: SparkSession, sources: list[dict[str, Any]], output_args: dict[str, Any]) -> Graph:
-    """kgx merge: N sources → unionByName → groupBy merge → sink
-    (kgx/cli/cli_utils.py:723-901 + graph_merge.py).
-
-    The reference CLI calls merge_all_graphs (cli_utils.py:813), which
-    reorders inputs largest-edge-count-first before merging; that ordering
-    is observable only through scalar-conflict resolution. Here sources
-    merge in the configured order — counting edges first would be a full
-    scan per source at scale."""
-    nodes, edges = merge_graphs([read_source(spark, s) for s in sources])
-    write_sink(nodes, edges, output_args)
-    return nodes, edges
 
 
 def merge_config(
@@ -483,60 +480,33 @@ def merge_config(
           destination:
             <key>: {format, compression, filename: [...]}
 
-    Relative input paths resolve against the config directory, outputs and
-    stats files against ``output_directory``; ``checkpoint: true`` snapshots
-    each source as TSV into the output directory under its key
-    (cli_utils.py:953-956). ``source``/``destination`` restrict to the named
-    keys (the reference's CLI flags). The merged graph is cached across the
-    N destination writes so each sink reuses one evaluation.
+    Paths resolve as ``_ConfigFile`` describes, stats files against
+    ``output_directory`` too; ``checkpoint: true`` snapshots each source as
+    TSV into the output directory under its key (cli_utils.py:953-956). A
+    source's provenance default is its input's ``provided_by``, else its
+    ``name``, else its input filename. ``source``/``destination`` restrict to the named keys (the
+    reference's CLI flags). Sources merge in the configured order: the
+    reference's merge_all_graphs puts the largest edge count first, which
+    only scalar-conflict resolution observes, and counting edges would be a
+    full scan per source. The merged graph is cached across the N
+    destination writes so each sink reuses one evaluation.
     """
-    import os
-
     import yaml
 
-    cwd = os.path.dirname(os.path.abspath(config_path))
-    with open(config_path) as fh:
-        cfg = yaml.safe_load(fh)
-    conf = cfg.get("configuration") or {}
-    output_directory = conf.get("output_directory") or "output"
-    if not os.path.isabs(output_directory):
-        output_directory = os.path.normpath(os.path.join(cwd, output_directory))
-    os.makedirs(output_directory, exist_ok=True)
-
-    mg = cfg["merged_graph"]
+    config = _ConfigFile(config_path, "merged_graph")
+    mg = config.block
     sources_cfg = mg["source"]
-    keys = list(source) if source else list(sources_cfg.keys())
-    unknown = [k for k in keys if k not in sources_cfg]
-    if unknown:
-        raise ValueError(f"unknown source keys in --source: {unknown}")
-
-    checkpoint = bool(conf.get("checkpoint"))
+    checkpoint = bool(config.conf.get("checkpoint"))
     graphs: list[Graph] = []
-    for key in keys:
+    for key in config.keys(sources_cfg, source, "source"):
         sp = sources_cfg[key]
         inp = sp["input"]
-        filenames = inp.get("filename")
-        if isinstance(filenames, str):
-            filenames = [filenames]
-        resolved = [
-            f if os.path.isabs(f) else os.path.normpath(os.path.join(cwd, f))
-            for f in filenames
-        ]
-        input_args: dict[str, Any] = {
-            "filename": resolved if len(resolved) != 1 else resolved[0],
-            "format": inp["format"],
-        }
-        filters = sp.get("filters") or inp.get("filters") or {}
-        if filters.get("node_filters"):
-            input_args["node_filters"] = filters["node_filters"]
-        if filters.get("edge_filters"):
-            input_args["edge_filters"] = filters["edge_filters"]
-        pb = inp.get("provided_by") or sp.get("name")
-        if pb:
-            input_args["default_provenance"] = pb
-        g = read_source(spark, input_args)
+        g = read_source(spark, config.input_args(
+            key, inp, sp.get("filters") or inp.get("filters") or {},
+            inp.get("provided_by") or sp.get("name"),
+        ))
         if checkpoint:
-            write_sink(*g, {"filename": os.path.join(output_directory, key), "format": "tsv"})
+            write_sink(*g, {"filename": os.path.join(config.output_directory, key), "format": "tsv"})
         graphs.append(g)
 
     nodes, edges = merge_graphs(graphs, preserve=True)
@@ -556,30 +526,22 @@ def merge_config(
                 node_facet_properties=args.get("node_facet_properties"),
                 edge_facet_properties=args.get("edge_facet_properties"),
             )
-            stats_path = args.get("filename") or "graph_stats.yaml"
-            if not os.path.isabs(stats_path):
-                stats_path = os.path.join(output_directory, stats_path)
+            stats_path = os.path.join(
+                config.output_directory, args.get("filename") or "graph_stats.yaml"
+            )
             with open(stats_path, "w") as fh:
                 yaml.safe_dump(stats, fh)
         else:
             nodes, edges = apply_graph_operations(nodes, edges, [op])
 
     dests = mg.get("destination") or {}
-    dkeys = list(destination) if destination else list(dests.keys())
-    unknown = [k for k in dkeys if k not in dests]
-    if unknown:
-        raise ValueError(f"unknown destination keys in --destination: {unknown}")
+    dkeys = config.keys(dests, destination, "destination")
     if len(dkeys) > 1:
         nodes = nodes.cache() if nodes is not None else None
         edges = edges.cache() if edges is not None else None
     for key in dkeys:
         d = dests[key]
-        ofn = d.get("filename") or key
-        if isinstance(ofn, list):
-            ofn = ofn[0]
-        if not os.path.isabs(ofn):
-            ofn = os.path.join(output_directory, ofn)
-        out_args: dict[str, Any] = {"filename": ofn, "format": d["format"]}
+        out_args: dict[str, Any] = {"filename": config.output_path(d, key), "format": d["format"]}
         comp = d.get("compression")
         if comp and str(comp) != "None":
             out_args["compression"] = comp

@@ -8,7 +8,7 @@ import pytest
 
 from kgx_spark.sinks.trapi import write_kgx_json, write_trapi
 from kgx_spark.sources.trapi import read_trapi
-from kgx_spark.transform import merge, transform
+from kgx_spark.transform import merge_config, transform
 
 NODES_TSV = """id\tname\tcategory
 HGNC:1\tg1\tbiolink:Gene
@@ -91,15 +91,24 @@ def test_clique_merge_operation_forwards_reference_args(spark, tmp_path):
 
 
 def test_merge_two_sources(spark, tsv_dir, tmp_path):
+    import yaml
+
     d2 = tmp_path / "in2"
     d2.mkdir()
     (d2 / "h_nodes.tsv").write_text("id\tname\tcategory\nHGNC:1\tg1x\tbiolink:NamedThing\nHGNC:9\tg9\tbiolink:Gene\n")
     (d2 / "h_edges.tsv").write_text("subject\tpredicate\tobject\nHGNC:1\tbiolink:related_to\tMONDO:1\n")
-    nodes, edges = merge(
-        spark,
-        [{"filename": str(tsv_dir), "format": "tsv"}, {"filename": str(d2), "format": "tsv"}],
-        {"filename": str(tmp_path / "m" / "g"), "format": "jsonl"},
-    )
+    cfg = {
+        "merged_graph": {
+            "source": {
+                "g": {"input": {"format": "tsv", "filename": str(tsv_dir)}},
+                "h": {"input": {"format": "tsv", "filename": str(d2)}},
+            },
+            "destination": {"out": {"format": "jsonl", "filename": str(tmp_path / "m" / "g")}},
+        },
+    }
+    cfg_path = tmp_path / "merge.yaml"
+    cfg_path.write_text(yaml.safe_dump(cfg))
+    nodes, edges = merge_config(spark, str(cfg_path))
     assert nodes.count() == 4  # HGNC:1 merged
     assert edges.count() == 2  # (HGNC:1,related_to,MONDO:1) deduped
     h1 = nodes.where(F.col("id") == "HGNC:1").first()
@@ -109,6 +118,25 @@ def test_merge_two_sources(spark, tsv_dir, tmp_path):
     # the two sources' scalars merge per prepare_data_dict conflict rules
     e = edges.where(F.col("object") == "MONDO:1").first()
     assert sorted(e["knowledge_source"].split("|")) == ["g_edges", "h_edges"]
+
+
+def test_merge_config_source_without_filename(spark, tsv_dir, tmp_path):
+    """A merge source whose input names no file is refused by its key."""
+    import yaml
+
+    cfg = {
+        "merged_graph": {
+            "source": {
+                "a": {"input": {"format": "tsv", "filename": str(tsv_dir)}},
+                "b": {"input": {"format": "tsv"}},
+            },
+            "destination": {"out": {"format": "jsonl", "filename": "g"}},
+        },
+    }
+    cfg_path = tmp_path / "merge.yaml"
+    cfg_path.write_text(yaml.safe_dump(cfg))
+    with pytest.raises(ValueError, match="source 'b' has no input filenames"):
+        merge_config(spark, str(cfg_path))
 
 
 def test_trapi_roundtrip(spark, tmp_path):
@@ -163,14 +191,15 @@ def test_cli_merge_yaml(spark, tsv_dir, tmp_path, capsys):
     d2.mkdir()
     (d2 / "h_nodes.tsv").write_text("id\tname\tcategory\nHGNC:1\tg1b\tbiolink:NamedThing\n")
     (d2 / "h_edges.tsv").write_text("subject\tpredicate\tobject\nMONDO:1\tbiolink:related_to\tHGNC:1\n")
+    # input paths relative to the config file's directory
     cfg = {
-        "configuration": {
-            "sources": {
-                "a": {"input": {"format": "tsv", "filename": str(tsv_dir)}},
-                "b": {"input": {"format": "tsv", "filename": str(d2)}},
-            }
+        "merged_graph": {
+            "source": {
+                "a": {"input": {"format": "tsv", "filename": tsv_dir.name}},
+                "b": {"input": {"format": "tsv", "filename": "b"}},
+            },
+            "destination": {"out": {"format": "jsonl", "filename": "g"}},
         },
-        "destination": {"out": {"format": "jsonl", "filename": str(tmp_path / "m" / "g")}},
     }
     cfg_path = tmp_path / "merge.yaml"
     cfg_path.write_text(yaml.safe_dump(cfg))
@@ -178,6 +207,30 @@ def test_cli_merge_yaml(spark, tsv_dir, tmp_path, capsys):
     assert rc == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out == {"nodes": 3, "edges": 3}
+
+
+def test_cli_merge_yaml_without_merged_graph(spark, tsv_dir, tmp_path, capsys):
+    """`kgx merge --config` takes only the merged_graph YAML: any other
+    shape exits 2 with one line naming that block, and writes nothing."""
+    import yaml
+
+    from kgx_spark.__main__ import main
+
+    cfg = {
+        "configuration": {
+            "sources": {"a": {"input": {"format": "tsv", "filename": str(tsv_dir)}}},
+        },
+        "destination": {"out": {"format": "jsonl", "filename": str(tmp_path / "m" / "g")}},
+    }
+    cfg_path = tmp_path / "merge.yaml"
+    cfg_path.write_text(yaml.safe_dump(cfg))
+    rc = main(["merge", "--config", str(cfg_path)])
+    captured = capsys.readouterr()
+    assert rc == 2
+    assert captured.out == ""
+    lines = captured.err.strip().splitlines()
+    assert len(lines) == 1 and "merged_graph" in lines[0]
+    assert not (tmp_path / "m").exists() and not (tmp_path / "output").exists()
 
 
 def test_cli_transform_and_summary(spark, tsv_dir, tmp_path, capsys):
